@@ -25,7 +25,10 @@ from __future__ import annotations
 
 import gc
 import json
+import os
+import sys
 import time
+import zipimport
 from typing import Any, Dict, Iterator, List, Optional
 
 import pandas as pd
@@ -323,10 +326,42 @@ def _freeze_worker_heap() -> None:
         gc.freeze()
 
 
+# Per-task zip-directory pin. At the start of every task PySpark's
+# worker calls importlib.invalidate_caches() (pyspark/worker_util.py,
+# setup_spark_files). On CPython 3.11/3.12 every zipimporter in
+# sys.path_importer_cache then re-reads its archive's whole central
+# directory: pyspark.zip and one importer per imported subpackage, the
+# py4j zip and the spark-core jar — 16 importers, 150-430 ms of CPU per
+# task on a 4-core x86 host, against 5-20 ms of real work in a small
+# task. Spark's own archives do not change while an application runs,
+# so their importers get a no-op invalidate_caches. Archives under the
+# SparkFiles root (--py-files, addPyFile) keep the re-read. The step
+# runs in every task so importers created by a later import get pinned
+# too; only a worker's first task still pays for the re-read.
+def _keep_zip_directory() -> None:
+    pass
+
+
+def _pin_spark_archives() -> None:
+    from pyspark import SparkFiles
+
+    if not SparkFiles._is_running_on_worker:
+        return  # driver-side calls (tests, in-process checks)
+    root = os.path.join(os.path.realpath(SparkFiles.getRootDirectory()), "")
+    for importer in list(sys.path_importer_cache.values()):
+        if (
+            isinstance(importer, zipimport.zipimporter)
+            and "invalidate_caches" not in vars(importer)
+            and not os.path.realpath(importer.archive).startswith(root)
+        ):
+            importer.invalidate_caches = _keep_zip_directory
+
+
 def make_fused_stage(doc_config: DocumentTypeConfig):
     """html → extraction results in one Arrow-batched pass."""
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _pin_spark_archives()
         for pdf in batches:
             rows = []
             for url, bucket, html in zip(pdf["url"], pdf["bucket"], pdf["html"]):
@@ -359,6 +394,7 @@ def make_fused_stage(doc_config: DocumentTypeConfig):
 
 def make_parse_stage():
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _pin_spark_archives()
         for pdf in batches:
             rows = []
             for url, bucket, html in zip(pdf["url"], pdf["bucket"], pdf["html"]):
@@ -386,6 +422,7 @@ def make_parse_stage():
 
 def make_normalize_stage():
     def normalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _pin_spark_archives()
         for pdf in batches:
             rows = []
             for rec in pdf.to_dict("records"):
@@ -416,6 +453,7 @@ def make_normalize_stage():
 
 def make_extract_stage(doc_config: DocumentTypeConfig):
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _pin_spark_archives()
         for pdf in batches:
             rows = []
             for rec in pdf.to_dict("records"):

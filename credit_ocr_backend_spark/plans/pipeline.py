@@ -172,16 +172,22 @@ def _bulk_waves(parallelism: int) -> int:
     return max(4, min(parallelism // 4, 16))
 
 
-# Each mapInPandas task pays a fixed Python/Arrow handshake (measured
-# ~0.2 s·core on this box: 20k docs, 256 vs 32 tasks = 5.87 vs 4.20 s
-# wall at local[32], BENCH/PLANS.md round 3). Keep at least this many
-# rows per task so the handshake stays <~10% of task compute.
+# Each mapInPandas task pays a fixed start-up cost outside the UDF
+# body. It is not the Python/Arrow handshake: most of it was PySpark's
+# per-task importlib.invalidate_caches() making every zipimporter
+# re-read Spark's archives, which the stages now pin
+# (operators/stages.py, _pin_spark_archives). `BENCH/core_probe.py
+# --tasks` reads ~23 ms per task left at local[4] on a 4-core x86
+# host, against ~360 ms unpinned. Keep at least this many rows per
+# task so the fixed cost stays <~10% of task compute. The value was set
+# before the pin (BENCH/PLANS.md round 3) and has not been re-tuned.
 _MIN_DOCS_PER_TASK = 400
 
 
 def _effective_waves(parallelism: int, est_rows: Optional[int]) -> int:
     """Wave count bounded BOTH by slot count (straggler smoothing) and
-    by per-task work volume (handshake amortization). ``est_rows`` may
+    by per-task work volume (amortizing the fixed per-task start-up
+    cost, see ``_MIN_DOCS_PER_TASK``). ``est_rows`` may
     be an upper-bound estimate; ``None`` keeps the slot-based value."""
     waves = _bulk_waves(parallelism)
     if est_rows is not None:
@@ -562,7 +568,10 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     manifest maps bucket → chunk, and ONLY that chunk=NNNN directory is
     read, with the bucket+url predicates pushed into its parquet scan.
     Returns None when the url is absent (not crawled, or its chunk not
-    yet committed)."""
+    yet committed). A chunk is committed only when its lineage says
+    done: the lineage append is the commit point, so a chunk directory
+    without lineage rows (a crash between the writes and the append)
+    is not read."""
     ckpt = CheckpointManager(spark, out_root)
     manifest = ckpt.read_manifest()
     if manifest is None:
@@ -577,11 +586,23 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
         c for c in range(n_chunks)
         if c * n_buckets // n_chunks <= bucket < (c + 1) * n_buckets // n_chunks
     )
-    # explicit existence pre-check: ONLY the path-absent case means
-    # "not committed yet"; corrupt parquet / permission / transient FS
-    # errors must propagate, not report the document as absent (ADVICE
-    # round 3)
-    if not ckpt.chunk_exists("docs", chunk):
+    # The chunk's lineage rows are read BEFORE its docs: no done row
+    # means "not committed yet". Once the lineage says done, corrupt
+    # parquet / permission / transient FS errors on the docs read must
+    # propagate, not report the document as absent (ADVICE round 3).
+    lineage = ckpt.lineage()
+    if lineage is None:
+        return None
+    lrows = (
+        lineage.where(
+            (F.col("chunk") == chunk)
+            & (F.col("stage") == "extracted")
+            & (F.col("status") == "done")
+        )
+        .select("bucket", "run_id", "finished_at")
+        .collect()
+    )
+    if not lrows:
         return None
     docs = ckpt.read_chunk("docs", chunk)
     row = (
@@ -592,15 +613,9 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     if row is None:
         return None
     out = {"url": url, "bucket": bucket, "chunk": chunk, **row.asDict()}
-    lineage = ckpt.lineage()
-    if lineage is not None:
-        lrow = (
-            lineage.where((F.col("chunk") == chunk) & (F.col("bucket") == bucket))
-            .select("run_id", "finished_at")
-            .first()
-        )
-        if lrow is not None:
-            out.update(lrow.asDict())
+    lrow = next((r for r in lrows if r["bucket"] == bucket), None)
+    if lrow is not None:
+        out.update(run_id=lrow["run_id"], finished_at=lrow["finished_at"])
     return out
 
 
@@ -614,8 +629,8 @@ def doc_status_bulk(
     are grouped by owning chunk via the run manifest, and only those
     chunk directories are read, each with bucket+url predicates pushed
     into its parquet scan.  Urls that were never crawled, or whose
-    chunk is not yet committed, are simply absent from the result
-    (same contract as the point lookup's ``None``).
+    chunk is not yet committed (no done lineage row), are simply absent
+    from the result (same contract as the point lookup's ``None``).
 
     Returns a DataFrame (url, bucket, chunk, status, error, proc_ms).
     """
@@ -647,9 +662,10 @@ def doc_status_bulk(
         "url string, bucket int, chunk int, status string, "
         "error string, proc_ms double"
     )
+    done = ckpt.done_chunks("extracted")
     parts = []
     for chunk in sorted(by_chunk):
-        if not ckpt.chunk_exists("docs", chunk):
+        if chunk not in done:
             continue  # not committed yet — absent, like the point lookup
         docs = ckpt.read_chunk("docs", chunk)
         parts.append(

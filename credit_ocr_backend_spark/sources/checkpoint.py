@@ -298,15 +298,6 @@ class CheckpointManager:
         self._recover_chunk(name, chunk)
         return self.spark.read.parquet(self._chunk_path(name, chunk))
 
-    def chunk_exists(self, name: str, chunk: int) -> bool:
-        """True iff the chunk directory is committed (after repairing
-        any interrupted-swap window).  Callers use this to distinguish
-        'not written yet' from genuine read failures — a bare
-        try/except around :meth:`read_chunk` would conflate corrupt
-        parquet or permission errors with absence (ADVICE round 3)."""
-        self._recover_chunk(name, chunk)
-        return self._fs.exists(self._chunk_path(name, chunk))
-
     def _recover_chunk(self, name: str, chunk: int) -> None:
         """Repair any window an interrupted :meth:`upsert_chunk` swap can
         leave behind (ADVICE round 2: between the two renames the chunk

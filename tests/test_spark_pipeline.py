@@ -281,3 +281,96 @@ def test_more_chunks_than_buckets(spark, pages_path, tmp_path):
         resume=True,
     )
     assert res2.chunks_run == 0 and res2.chunks_skipped == 4
+
+
+def test_lookups_ignore_chunk_without_lineage(spark, tmp_path):
+    """A chunk directory whose lineage fragment is gone (a crash between
+    the writes and the lineage append) is not committed: the point
+    lookup returns None for its urls and the bulk lookup returns none
+    of its rows."""
+    import pyarrow.parquet as pq
+
+    from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
+
+    pages = str(tmp_path / "pages")
+    write_pages(spark, pages, n_docs=40, partitions=4)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages, out, n_chunks=4, parallelism=4)
+
+    urls = [build_page(i)["url"] for i in range(40)]
+    before = {r["url"]: r["chunk"] for r in doc_status_bulk(spark, out, urls).collect()}
+    assert set(before) == set(urls)
+    chunk = before[urls[7]]
+
+    lineage_dir = tmp_path / "out" / "lineage"
+    fragments = [
+        f for f in lineage_dir.glob("*.parquet")
+        if chunk in pq.read_table(f, columns=["chunk"]).column("chunk").to_pylist()
+    ]
+    assert len(fragments) == 1
+    fragments[0].unlink()
+    assert (tmp_path / "out" / "docs" / f"chunk={chunk:04d}").is_dir()
+
+    assert doc_status(spark, out, urls[7]) is None
+    after = {r["url"]: r["chunk"] for r in doc_status_bulk(spark, out, urls).collect()}
+    assert chunk not in set(after.values())
+    assert after == {u: c for u, c in before.items() if c != chunk}
+    other = next(u for u, c in before.items() if c != chunk)
+    assert doc_status(spark, out, other)["status"] == "done"
+
+
+def test_worker_pins_spark_archives_after_engine_stage(spark):
+    """Once a task has run an engine stage, its worker re-reads no zip
+    directory of an archive outside the SparkFiles root: every such
+    zipimporter is pinned, and a task-start invalidate_caches() reads
+    none of them."""
+    from credit_ocr_backend_spark.operators.stages import make_fused_stage
+
+    fused = make_fused_stage(default_config())
+
+    def probe(batches):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        import pandas as pd
+        from pyspark import SparkFiles
+
+        for _ in fused(batches):
+            pass
+        root = os.path.join(os.path.realpath(SparkFiles.getRootDirectory()), "")
+
+        def outside(archive):
+            return not os.path.realpath(archive).startswith(root)
+
+        zips = [
+            imp for imp in list(sys.path_importer_cache.values())
+            if isinstance(imp, zipimport.zipimporter) and outside(imp.archive)
+        ]
+        unpinned = [imp.archive for imp in zips if "invalidate_caches" not in vars(imp)]
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: (reads.append(a), real(a))[1]
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pd.DataFrame({
+            "n_zip": [len(zips)],
+            "unpinned": [unpinned],
+            "reread": [[a for a in reads if outside(a)]],
+        })
+
+    page = build_page(3)
+    df = spark.createDataFrame(
+        [(page["url"], 0, bytearray(page["html"]))],
+        "url string, bucket int, html binary",
+    )
+    rows = df.mapInPandas(
+        probe, "n_zip int, unpinned array<string>, reread array<string>"
+    ).collect()
+    if sum(r["n_zip"] for r in rows) == 0:
+        pytest.skip("Spark's Python workers import from no zip archive here")
+    for r in rows:
+        assert r["unpinned"] == [] and r["reread"] == []
