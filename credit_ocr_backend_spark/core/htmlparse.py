@@ -280,7 +280,7 @@ _CDATA_CLOSE = {
 # Start-tag action cache: raw '<...>' slice (from '<' through the FIRST
 # '>') → (startend: bool, tag, attrs, kind). Crawl corpora repeat a
 # small set of tag spellings millions of times (chrome links, <td>,
-# <p>, ...); replaying the parsed action from a dict lookup skips the
+# <p>, ...); reusing the parsed action from a dict lookup skips the
 # tagname/body/attr regex machinery per occurrence. SOUNDNESS: an entry
 # is stored ONLY when the from-scratch parse consumed exactly the slice
 # (end position == the slice's final '>'), which happens iff the
@@ -302,127 +302,17 @@ _TAG_ACTION_CACHE_MAX = 8192
 _WORD_TOKEN_CACHE: Dict[tuple, tuple] = {}
 _WORD_TOKEN_CACHE_MAX = 65536
 
-# Chrome-fragment effect cache. A top-level chrome subtree (nav /
-# header / footer / aside from chrome_depth 0 back to 0) repeats
-# byte-identically across a site's pages, and its NET effect on the
-# tokenizer state is tiny: some text runs appended to the entry block
-# (header link text), N pristine chrome _Blocks appended (nav/aside
-# list items — their text is dropped by the chrome short-circuit), and
-# an exit `current` that is None, the entry block, or one of the fresh
-# blocks. Recording is diff-based (state snapshot at the opening tag,
-# validated diff at the matching close) and replay applies the
-# aggregate, skipping the per-event scan of the whole subtree.
-#
-# SOUNDNESS. Inside a fragment the event stream is a pure function of
-# the fragment bytes, and every state transition is independent of the
-# surrounding document EXCEPT through: (a) the entry `current` block —
-# text appends read only its is_chrome flag and K_CELL reads its
-# is_row/last-cell state; (b) the entry depths. Therefore a fragment
-# is cached/replayed only when ALL of:
-#   * entry chrome/opaque/link depth == 0 (and hence capture_layout
-#     False), exit link/opaque depth == 0 — checked at record;
-#   * the entry kind matches exactly: None, or (is_chrome, is_row) of
-#     the entry block (text/K_CELL branching depends on nothing else);
-#   * no K_CELL event fired while `current` was the entry block (the
-#     only reader of entry cell state — invalidation hook);
-#   * the layout capture buffer did not grow (no layout-words script);
-#   * every block appended during the fragment is a pristine chrome
-#     block (no text, single empty cell — a <br> inside one would leave
-#     a " " and invalidates);
-#   * the entry block gained no new cells, only tail-cell text appends
-#     (replayed as extend + char-count deltas, byte-identical to the
-#     add_text sequence).
-# A fragment always ends at the FIRST return of chrome_depth to 0, so
-# for a given start position at most one cached fragment can match
-# (balanced prefixes are unique); replay matches it with one C-level
-# startswith. Constructs outside the fast scanner's proven subset abort
-# the whole parse before finalize, so they can never be cached.
-#
-# Buckets are keyed on the first _CHROME_FRAG_KEY_LEN bytes from the
-# opening '<' (not just the opening tag): site-templated chrome differs
-# a few bytes in (e.g. the site name in a header), so a fixed-length
-# prefix key keeps each bucket at ~1 entry where an opener key would
-# pile every variant into one linearly-scanned list. The key is only an
-# index — replay still verifies the FULL fragment bytes with
-# startswith, so fragments shorter than the key (whose bucket then
-# depends on trailing context) are merely re-recorded per context,
-# never misreplayed.
-_CHROME_FRAG_CACHE: Dict[str, list] = {}
-_CHROME_FRAG_KEY_LEN = 96
-_CHROME_FRAG_BUCKET_MAX = 4
-_CHROME_FRAG_CACHE_MAX = 1024
-_CHROME_FRAG_LEN_MAX = 8192
-
-# Row-fragment effect cache — the chrome replay generalized to template
-# TABLE ROWS, the other subtree crawl templates repeat verbatim (the
-# same label/value rows appear across a site's form pages). A `<tr>` at
-# depth 0 is ENTRY-INDEPENDENT: its first event replaces `current`
-# before anything reads it, and until the first `current = None`
-# transition (a block/row end tag — the fragment's end) every event
-# reads only fragment-internal state, so the net effect is exactly
-# "append N blocks with recorded content". Recording is again
-# diff-based: snapshot at the tr, finalize at the first current=None
-# transition, validated by zero net chrome/link/opaque depth and an
-# unchanged layout buffer; replay appends the RECORDED block objects
-# themselves (see _store_row_frag for why they are immutable from
-# finalize on). Only `tr` triggers — block tags like
-# <p>/<div> head corpus-unique prose and would flood the cache with
-# one-off entries. A chrome replay inside a row recording invalidates
-# it (its exit-current shortcut would skip the recording's end hook).
-_ROW_FRAG_CACHE: Dict[str, list] = {}
-_ROW_FRAG_BUCKET_MAX = 4
-_ROW_FRAG_CACHE_MAX = 8192
-_ROW_FRAG_LEN_MAX = 8192
-
-
-def _store_row_frag(
-    s: str,
-    start: int,
-    end_pos: int,
-    key: str,
-    blocks: list,
-    blocks_len: int,
-) -> None:
-    """Record the finished row fragment s[start:end_pos]: its effect is
-    the appended blocks' end state (validation done by the caller).
-
-    The LIVE block objects are stored and later replays append the SAME
-    objects: a block is only ever mutated while it is `current`, the
-    scanner never points `current` at a pre-existing block (only fresh
-    blocks or None), and the finalize event has already reset current —
-    so a recorded block is immutable from here on, in this document and
-    in every replaying one (the same sharing contract as the token
-    caches, with the layout engine as the sole, read-only consumer)."""
-    bucket = _ROW_FRAG_CACHE.get(key)
-    if bucket is None and len(_ROW_FRAG_CACHE) < _ROW_FRAG_CACHE_MAX:
-        bucket = _ROW_FRAG_CACHE[key] = []
-    if bucket is not None and len(bucket) < _ROW_FRAG_BUCKET_MAX:
-        bucket.append((s[start:end_pos], tuple(blocks[blocks_len:])))
-
 # Whole-line token cache for the words-elided fused path:
 # (text, line_idx, page, row, cell) fully determines the emitted line
 # token — y/x0/x1 are affine in (row, cell, len(text)) and the
 # confidence is the rounded mean of the _word_confidence draws, which
 # depend only on (text, line_idx). Tokens are read-only downstream
 # (same sharing contract as _WORD_TOKEN_CACHE / the shared corner
-# dicts), so replaying the dict is byte-identical to rebuilding it.
+# dicts), so reusing the dict is byte-identical to rebuilding it.
 # Only the include_words=False path uses it: with words materialized
 # the per-word x-advance loop has to run anyway.
 _LINE_TOKEN_CACHE: Dict[tuple, Token] = {}
 _LINE_TOKEN_CACHE_MAX = 65536
-
-# Block-level emission memo for the words-elided path: row-fragment
-# replay shares _Block objects across documents, so for a ROW block
-# the entire layout step — link-density/chrome checks, rendered_cells,
-# next_row and the per-cell emits — is a pure function of
-# (block identity, page, row, line_idx) and replays as one tuple
-# extend. Entries pin the block (identity check on hit, so a recycled
-# id can never alias) and store the emitted tokens (shared read-only,
-# the same contract as the line-token cache). The prose branch of a
-# row block (single rendered cell) can span pages and is never
-# recorded — it simply always takes the normal path.
-_ROW_EMIT_CACHE: Dict[tuple, tuple] = {}
-_ROW_EMIT_CACHE_MAX = 65536
 
 
 def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
@@ -436,10 +326,11 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
     in place) while the depth counters / current-block pointer live in
     local variables — per-event method dispatch plus the second
     _TAG_KIND lookup inside the handlers were a measurable slice of
-    per-document parse cost. The equivalence contract is unchanged and
-    enforced by the same tests (fuzz + adversarial cases comparing the
-    end-state blocks against a stdlib-HTMLParser-driven _PageTokenizer,
-    plus the reference goldens): on a True return the handler holds
+    per-document parse cost. Every event of the document is scanned;
+    the only memos are the per-tag action caches. Equivalence is
+    enforced by tests (fuzz + adversarial cases comparing the end-state
+    blocks against a stdlib-HTMLParser-driven _PageTokenizer, plus the
+    reference goldens): on a True return the handler holds
     exactly the block/layout state the method-driven feed produced; on
     False the caller re-parses the WHOLE document on a fresh handler,
     so no local state ever needs writing back."""
@@ -454,20 +345,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
     capture_layout = handler._capture_layout
     current = handler._current
     tag_kind = _TAG_KIND
-    # chrome-fragment recording state (see _CHROME_FRAG_CACHE): active
-    # iff rec_start >= 0; discarded wholesale on fallback/end-of-input
-    rec_start = -1
-    rec_entry = rec_opener = None
-    rec_valid = False
-    rec_blocks_len = rec_layout_len = 0
-    rec_cells_len = rec_last_len = rec_text_chars = rec_link_chars = 0
-    # row-fragment recording state (see _ROW_FRAG_CACHE); independent of
-    # the chrome recorder — a chrome subtree may record inside a row
-    # recording (its effects land in the row's end-state diff)
-    rrec_start = -1
-    rrec_key = None
-    rrec_valid = False
-    rrec_blocks_len = rrec_layout_len = 0
     while i < n:
         j = find("<", i)
         if j < 0:
@@ -545,24 +422,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
                 if kind is not None:
                     if kind == _K_BLOCK or kind == _K_ROW:
                         current = None
-                        if rrec_start >= 0:
-                            # first current=None transition ends the
-                            # row recording (validation list in the
-                            # _ROW_FRAG_CACHE comment)
-                            if (
-                                rrec_valid
-                                and chrome_depth == 0
-                                and link_depth == 0
-                                and opaque_depth == 0
-                                and i - rrec_start <= _ROW_FRAG_LEN_MAX
-                                and len(layout_json) == rrec_layout_len
-                            ):
-                                _store_row_frag(
-                                    s, rrec_start, i, rrec_key,
-                                    blocks, rrec_blocks_len,
-                                )
-                            rrec_start = -1
-                            rrec_key = None
                     elif kind == _K_OPAQUE:
                         opaque_depth = opaque_depth - 1 if opaque_depth > 0 else 0
                         capture_layout = False
@@ -570,91 +429,8 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
                         link_depth = link_depth - 1 if link_depth > 0 else 0
                     elif kind == _K_CHROME:
                         chrome_depth = chrome_depth - 1 if chrome_depth > 0 else 0
-                        if chrome_depth == 0 and rec_start >= 0:
-                            # finalize the chrome-fragment recording
-                            # (validation list in the cache's comment)
-                            ok = (
-                                rec_valid
-                                and link_depth == 0
-                                and opaque_depth == 0
-                                and i - rec_start <= _CHROME_FRAG_LEN_MAX
-                                and len(layout_json) == rec_layout_len
-                            )
-                            if ok:
-                                fresh = blocks[rec_blocks_len:]
-                                ok = all(
-                                    b.is_chrome
-                                    and b.text_chars == 0
-                                    and b.link_chars == 0
-                                    and len(b.cells) == 1
-                                    and not b.cells[0]
-                                    for b in fresh
-                                )
-                            if ok:
-                                entry = rec_entry
-                                if entry is None:
-                                    ekind = None
-                                    texts = ()
-                                    tlen = llen = 0
-                                else:
-                                    ekind = (entry.is_chrome, entry.is_row)
-                                    if len(entry.cells) == rec_cells_len:
-                                        texts = tuple(
-                                            entry.cells[-1][rec_last_len:]
-                                        )
-                                        tlen = entry.text_chars - rec_text_chars
-                                        llen = entry.link_chars - rec_link_chars
-                                        ok = tlen == sum(map(len, texts))
-                                    else:
-                                        ok = False
-                            if ok:
-                                if current is None:
-                                    ec, eidx = 0, -1
-                                elif current is entry:
-                                    ec, eidx = 1, -1
-                                else:
-                                    ec, eidx = 2, -1
-                                    for bi, b in enumerate(fresh):
-                                        if b is current:
-                                            eidx = bi
-                                            break
-                                    ok = eidx >= 0
-                            if ok:
-                                bucket = _CHROME_FRAG_CACHE.get(rec_opener)
-                                if bucket is None and (
-                                    len(_CHROME_FRAG_CACHE)
-                                    < _CHROME_FRAG_CACHE_MAX
-                                ):
-                                    bucket = _CHROME_FRAG_CACHE[rec_opener] = []
-                                if (
-                                    bucket is not None
-                                    and len(bucket) < _CHROME_FRAG_BUCKET_MAX
-                                ):
-                                    bucket.append((
-                                        s[rec_start:i], ekind, texts, tlen,
-                                        llen,
-                                        tuple(b.is_row for b in fresh),
-                                        ec, eidx,
-                                    ))
-                            rec_start = -1
-                            rec_entry = rec_opener = None
                 elif tag_l == "body":
                     current = None
-                    if rrec_start >= 0:
-                        if (
-                            rrec_valid
-                            and chrome_depth == 0
-                            and link_depth == 0
-                            and opaque_depth == 0
-                            and i - rrec_start <= _ROW_FRAG_LEN_MAX
-                            and len(layout_json) == rrec_layout_len
-                        ):
-                            _store_row_frag(
-                                s, rrec_start, i, rrec_key,
-                                blocks, rrec_blocks_len,
-                            )
-                        rrec_start = -1
-                        rrec_key = None
             continue
         if nxt == "!":
             if s.startswith("<!--", i):
@@ -674,12 +450,11 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
                 return False
             i = gt + 1  # handle_pi is a no-op
             continue
-        # Cached replay: the slice from '<' through the first '>' is a
+        # Cached tag action: the slice from '<' through the first '>' is a
         # context-free key for any tag whose parse consumed exactly it
         # (see _TAG_ACTION_CACHE) — one find + one dict get replaces the
         # tagname/body/attr regex machinery for the overwhelmingly
         # common repeated tag spellings.
-        pos0 = i
         gt = find(">", i + 1)
         act = _TAG_ACTION_CACHE.get(s[i : gt + 1]) if gt > 0 else None
         if act is not None:
@@ -741,87 +516,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
             if end == gt and len(_TAG_ACTION_CACHE) < _TAG_ACTION_CACHE_MAX:
                 _TAG_ACTION_CACHE[s[i : end + 1]] = (startend, tag, attrs, kind)
             i = end + 1
-        # Chrome-fragment replay / record (see _CHROME_FRAG_CACHE): only
-        # at a top-level chrome start tag with all depths zero.
-        if (
-            kind == _K_CHROME
-            and not startend
-            and chrome_depth == 0
-            and opaque_depth == 0
-            and link_depth == 0
-        ):
-            opener = s[pos0 : pos0 + _CHROME_FRAG_KEY_LEN]
-            bucket = _CHROME_FRAG_CACHE.get(opener)
-            if bucket is not None:
-                cur = current
-                ck = None if cur is None else (cur.is_chrome, cur.is_row)
-                hit = False
-                for ent in bucket:
-                    frag, ekind, texts, tlen, llen, rows, ec, eidx = ent
-                    if ekind == ck and s.startswith(frag, pos0):
-                        if rrec_start >= 0:
-                            # a chrome replay's exit-current shortcut
-                            # bypasses the row recorder's end hook —
-                            # discard the active row recording
-                            rrec_valid = False
-                        if texts:
-                            cur.cells[-1].extend(texts)
-                            cur.text_chars += tlen
-                            cur.link_chars += llen
-                        base = len(blocks)
-                        for r in rows:
-                            blocks.append(_Block(True, r))
-                        if ec == 0:
-                            current = None
-                        elif ec == 2:
-                            current = blocks[base + eidx]
-                        i = pos0 + len(frag)
-                        hit = True
-                        break
-                if hit:
-                    continue
-            # no cached variant matched — record this fragment
-            rec_start = pos0
-            rec_opener = opener
-            rec_entry = current
-            rec_valid = True
-            rec_blocks_len = len(blocks)
-            rec_layout_len = len(layout_json)
-            if current is not None:
-                rec_cells_len = len(current.cells)
-                rec_last_len = len(current.cells[-1])
-                rec_text_chars = current.text_chars
-                rec_link_chars = current.link_chars
-        # Row-fragment replay / record (see _ROW_FRAG_CACHE): a depth-0
-        # <tr> is entry-independent — replay appends the recorded
-        # blocks; a miss starts a recording that the first
-        # current=None transition finalizes.
-        elif (
-            kind == _K_ROW
-            and not startend
-            and chrome_depth == 0
-            and opaque_depth == 0
-            and link_depth == 0
-            and rrec_start < 0
-        ):
-            rkey = s[pos0 : pos0 + _CHROME_FRAG_KEY_LEN]
-            rbucket = _ROW_FRAG_CACHE.get(rkey)
-            hit = False
-            if rbucket is not None:
-                for frag, shared_blocks in rbucket:
-                    if s.startswith(frag, pos0):
-                        blocks.extend(shared_blocks)
-                        current = None
-                        i = pos0 + len(frag)
-                        hit = True
-                        break
-            if hit:
-                continue
-            rrec_start = pos0
-            rrec_key = rkey
-            rrec_valid = True
-            rrec_blocks_len = len(blocks)
-            rrec_layout_len = len(layout_json)
         # inline handle_starttag (shared by the cached and parsed routes)
         if kind is not None:
             if kind == _K_BLOCK:
@@ -831,10 +525,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
                 current = _Block(chrome_depth > 0, True)
                 blocks.append(current)
             elif kind == _K_CELL:
-                if rec_start >= 0 and current is rec_entry and rec_entry is not None:
-                    # the only event whose behavior reads the entry
-                    # block's cell state — not replayable as a diff
-                    rec_valid = False
                 if current is None or not current.is_row:
                     current = _Block(chrome_depth > 0, True)
                     blocks.append(current)
@@ -857,21 +547,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
             if kind is not None:
                 if kind == _K_BLOCK or kind == _K_ROW:
                     current = None
-                    if rrec_start >= 0:
-                        if (
-                            rrec_valid
-                            and chrome_depth == 0
-                            and link_depth == 0
-                            and opaque_depth == 0
-                            and i - rrec_start <= _ROW_FRAG_LEN_MAX
-                            and len(layout_json) == rrec_layout_len
-                        ):
-                            _store_row_frag(
-                                s, rrec_start, i, rrec_key,
-                                blocks, rrec_blocks_len,
-                            )
-                        rrec_start = -1
-                        rrec_key = None
                 elif kind == _K_OPAQUE:
                     opaque_depth = opaque_depth - 1 if opaque_depth > 0 else 0
                     capture_layout = False
@@ -881,21 +556,6 @@ def _fast_feed(handler: "_PageTokenizer", s: str) -> bool:
                     chrome_depth = chrome_depth - 1 if chrome_depth > 0 else 0
             elif tag == "body":
                 current = None
-                if rrec_start >= 0:
-                    if (
-                        rrec_valid
-                        and chrome_depth == 0
-                        and link_depth == 0
-                        and opaque_depth == 0
-                        and i - rrec_start <= _ROW_FRAG_LEN_MAX
-                        and len(layout_json) == rrec_layout_len
-                    ):
-                        _store_row_frag(
-                            s, rrec_start, i, rrec_key,
-                            blocks, rrec_blocks_len,
-                        )
-                    rrec_start = -1
-                    rrec_key = None
         elif tag in _CDATA_CONTENT:
             m2 = _CDATA_END[tag].search(s, i)
             if not m2:
@@ -1148,53 +808,7 @@ def _layout_html_blocks(
             page += 1
             row = 0
 
-    emit_cache = _ROW_EMIT_CACHE
-    elide = not include_words
     for block in blocks:
-        if elide and block.is_row:
-            # block-level replay (see _ROW_EMIT_CACHE)
-            mkey = (id(block), page, row, line_idx)
-            ent = emit_cache.get(mkey)
-            if ent is not None and ent[0] is block:
-                toks = ent[2]
-                if toks:
-                    pg_emit = ent[1]
-                    plines = lines_by_page.get(pg_emit)
-                    if plines is None:
-                        plines = lines_by_page[pg_emit] = []
-                    plines.extend(toks)
-                page, row, line_idx = ent[3], ent[4], ent[5]
-                continue
-            if block.is_chrome or block.link_density > MAX_LINK_DENSITY:
-                if len(emit_cache) < _ROW_EMIT_CACHE_MAX:
-                    emit_cache[mkey] = (block, 0, (), page, row, line_idx)
-                continue
-            cells = block.rendered_cells()
-            if not cells:
-                if len(emit_cache) < _ROW_EMIT_CACHE_MAX:
-                    emit_cache[mkey] = (block, 0, (), page, row, line_idx)
-                continue
-            if len(cells) >= 2:
-                next_row()  # keep a label/value row on one page
-                pg_emit = page
-                plines0 = lines_by_page.get(pg_emit)
-                n0 = len(plines0) if plines0 is not None else 0
-                for c, cell_text in enumerate(cells):
-                    emit_line(cell_text, c)
-                row += 1
-                if len(emit_cache) < _ROW_EMIT_CACHE_MAX:
-                    emit_cache[mkey] = (
-                        block, pg_emit,
-                        tuple(lines_by_page[pg_emit][n0:]),
-                        page, row, line_idx,
-                    )
-            else:
-                for cell_text in cells:
-                    for wrapped in _wrap(cell_text):
-                        next_row()
-                        emit_line(wrapped, 0)
-                        row += 1
-            continue
         if block.is_chrome or block.link_density > MAX_LINK_DENSITY:
             continue
         cells = block.rendered_cells()

@@ -171,9 +171,11 @@ _NUM_FRAG_CACHE: Dict[tuple, str] = {}
 # and the corpus draws them from a small hot set (fixed field names,
 # mostly-fixed values, ~10 confidence draws, few pages). One dict get
 # replaces two string-fragment gets, two numeric-fragment gets and an
-# 8-part concat. The value CLASSES ride in the key because Python
-# hashes True == 1 == 1.0 together while json renders them differently
-# (same guard as _num_frag's exact-class check).
+# 8-part concat. Python hashes True == 1 == 1.0 together while json
+# renders them differently, so the key must not alias them: the
+# confidence and page CLASSES ride in the key (same guard as
+# _num_frag's exact-class check), and `value` needs none only because
+# _fields_json coerces it to `str | None` before building the key.
 _ROW_PREFIX_CACHE: Dict[tuple, str] = {}
 
 

@@ -274,7 +274,8 @@ def run_pipeline(
     """Run the extraction pipeline, chunk by chunk, committing results +
     lineage per chunk. ``resume=True`` skips chunks whose lineage says
     done and recomputes only the rest; output is unchanged vs a clean
-    run (tested).
+    run (tested). ``resume=False`` first removes the engine-owned state
+    an earlier run left under ``out_root`` (``CheckpointManager.reset``).
 
     ``max_concurrent_chunks > 1`` submits that many chunk jobs from
     concurrent driver threads: each chunk's tail wave and driver-side
@@ -332,6 +333,9 @@ def run_pipeline(
                 ckpt.write_manifest(committed)
         ckpt.check_manifest(manifest)
     else:
+        # A fresh run starts from nothing: an earlier run's lineage
+        # would otherwise mark its chunks done for a later resume.
+        ckpt.reset()
         ckpt.write_manifest(manifest)
 
     # One unfiltered count of the input (parquet footer statistics — no

@@ -129,6 +129,20 @@ class CheckpointManager:
         self.lineage_dir = f"{self.root}/lineage"
         self.manifest_path = f"{self.root}/run_manifest.json"
 
+    def reset(self) -> None:
+        """Remove the engine-owned state under root: the lineage, the
+        run manifest with its swap file, and the stage tables
+        run_pipeline writes. A fresh run calls this before it pins its
+        manifest, so no chunk of an earlier run can count as committed
+        for it. Other files under root are left alone."""
+        for p in (
+            self.lineage_dir,
+            self.manifest_path,
+            self.manifest_path + ".tmp",
+            *(self.path(t) for t in ("docs", "results", "parsed", "normalized")),
+        ):
+            self._fs.delete(p)
+
     # -- run manifest -------------------------------------------------------
 
     def write_manifest(self, params: dict) -> None:

@@ -172,6 +172,97 @@ def _sig(p: H._PageTokenizer):
     )
 
 
+_LAYOUT_PAYLOAD = '[{"t":"A","p":1,"x":0.5,"y":1.0,"w":0.2,"h":0.01,"c":0.97}]'
+_HEADER = "<header><a href='/'>L1</a> <a href='/x'>L2</a></header>"
+_NAV_TD = "<nav>x<td>y</td></nav>"
+_ROW = "<tr><td>Label A</td><td>Value B</td></tr>"
+
+# Chrome subtrees (nav/header/footer/aside) in the contexts whose
+# tokenizer state they read or leave behind. Part of ADVERSARIAL.
+CHROME_CASES = {
+    # the same subtree entered with current = content block, None and
+    # a row block, and twice in one document
+    "entry_kinds": [
+        "<p>pre</p>text " + _HEADER + "tail",
+        _HEADER + "tail",
+        "<table><tr><td>c</td>" + _HEADER + "after",
+        "own text " + _HEADER + _HEADER + "end",
+    ],
+    # chrome closes while an inner block is still open: the following
+    # text lands in that chrome block and is dropped
+    "exit_current": [
+        "<aside><ul><li>a</aside> swallowed text",
+        "<p>x</p><aside><ul><li>a</aside> swallowed again",
+    ],
+    # a <td> inside chrome reads the enclosing row's cell state
+    "td_inside": [
+        "<table><tr><td>a</td>" + _NAV_TD + "z",
+        "<table><tr>" + _NAV_TD + "z",
+        "<p>b" + _NAV_TD + "z",
+        _NAV_TD + "z",
+    ],
+    # <br> inside chrome, and script cdata holding a chrome close tag
+    "br_and_opaque": [
+        "<p>t<nav><br></nav>u",
+        "<p>t<nav><ul><li><br></li></ul></nav>u",
+        "<p>t<footer><script>var x = '</nav>';</script></footer>u",
+    ],
+    "layout_script": [
+        "<body><nav><script type=\"application/x-layout-words\">"
+        + _LAYOUT_PAYLOAD
+        + "</script></nav><p>x</p>",
+    ],
+    # a link opened inside chrome and never closed leaks into the text
+    # after the chrome subtree
+    "unbalanced_link": [
+        "<p>t<nav><a href='/q'>l</nav>leaked link text</a>done",
+        "<p>s<nav><a href='/q'>l</nav>leaked again</a>done",
+    ],
+    "empty_in_contexts": [
+        "<p>a<nav></nav>first tail here with enough bytes",
+        "<p>a<nav></nav>second completely different tail text",
+        "<nav></nav>",
+    ],
+    "nested_and_sibling": [
+        "<p>t<header><nav><ul><li>x</li></ul></nav></header>after",
+        "<p>t<nav>a</nav><aside>b</aside>after",
+        "<p>t<nav><nav>inner</nav>outer</nav>after",
+    ],
+}
+
+# Table rows in the contexts that end, nest in or leak out of them.
+# Part of ADVERSARIAL.
+ROW_CASES = {
+    "basic_and_contexts": [
+        "<table>" + _ROW + _ROW + "</table>tail",
+        "<p>pre</p><table>" + _ROW + "</table>",
+        _ROW,
+        _ROW + "different tail context with plenty of bytes",
+        "<tr/>self closing row",
+    ],
+    # an unclosed <tr> runs into the next row; a block nested in a cell
+    # closes before its row does
+    "implicit_close_and_nested": [
+        "<table><tr><td>a<tr><td>b</tr></table>",
+        "<tr><td><div>x</div>y</td></tr>after",
+        "<tr><td><div>x</div>z</td></tr>after",
+    ],
+    # balanced and unbalanced links, chrome inside a row, a row inside
+    # an open link
+    "link_and_chrome": [
+        "<tr><td><a href='/x'>k</a>v</td></tr>t",
+        "<tr><td><a href='/x'>k</tr>leaked</a>t",
+        "<tr><td><nav><ul><li>c</li></ul></nav>v</td></tr>t",
+        "<a href='/y'><tr><td>k</td><td>v</td></tr></a>t",
+    ],
+    "layout_script": [
+        "<tr><td><script type=\"application/x-layout-words\">"
+        + _LAYOUT_PAYLOAD
+        + "</script></td></tr><p>x</p>",
+    ],
+    "br": ["<tr><td>a<br>b</td></tr>t", "<tr><td>a<br>b</td></tr>u"],
+}
+
 ADVERSARIAL = [
     "<!DOCTYPE html><p>a</p>",
     '<a href="x>y">link</a> tail',
@@ -196,6 +287,8 @@ ADVERSARIAL = [
     "<p>unclosed paragraph",
     "<em>inline</em> <strong>runs</strong>",
     "<div data-x='a\"b'>mixed quotes in value</div>",
+    *(s for docs in CHROME_CASES.values() for s in docs),
+    *(s for docs in ROW_CASES.values() for s in docs),
 ]
 
 FALLBACK_CASES = [
@@ -249,10 +342,8 @@ def test_fast_scan_fuzz_equivalence() -> None:
     @settings(max_examples=300, deadline=None)
     @given(st.lists(frag, max_size=8).map("".join))
     def check(s: str) -> None:
-        # parsed twice on purpose: the second parse REPLAYS any
-        # chrome/row fragments the first parse recorded (the global
-        # fragment caches persist across calls), fuzzing the
-        # record-then-replay path directly
+        # parsed twice on purpose: the second parse takes the tag
+        # action caches the first one filled (they persist across calls)
         for _ in (1, 2):
             ok, fast, std = _both(s)
             if ok:
@@ -274,7 +365,7 @@ def test_fast_scan_fuzz_raw_character_soup() -> None:
     @settings(max_examples=200, deadline=None)
     @given(raw)
     def check(s: str) -> None:
-        # twice: second parse replays recorded fragments (see above)
+        # twice: second parse hits the warm tag caches (see above)
         for _ in (1, 2):
             ok, fast, std = _both(s)
             if ok:
@@ -283,257 +374,90 @@ def test_fast_scan_fuzz_raw_character_soup() -> None:
     check()
 
 
-# ---------------------------------------------------------------------------
-# Chrome-fragment effect cache (_CHROME_FRAG_CACHE): record-then-replay
-# equivalence. Every test parses each document TWICE from a cleared
-# cache — the first parse records the fragment, the second replays it —
-# and asserts byte-level state equality against the stdlib-driven
-# handler on BOTH passes (a replay divergence shows up on pass 2).
-# ---------------------------------------------------------------------------
-
-
-def _frag_check(docs: list[str]) -> None:
-    H._CHROME_FRAG_CACHE.clear()
-    for _pass in (1, 2):
-        for s in docs:
-            ok, fast, std = _both(s)
-            if ok:
-                assert _sig(fast) == _sig(std), (_pass, s)
+def _check_docs(docs: list[str]) -> None:
+    for s in docs:
+        ok, fast, std = _both(s)
+        assert ok, f"fast path unexpectedly refused: {s!r}"
+        assert _sig(fast) == _sig(std), s
 
 
 def test_chrome_frag_replay_across_entry_kinds() -> None:
-    # same fragment bytes hit with entry = content block, None, and a
-    # row block — the cache must key the entry kind, not just the bytes
-    frag = "<header><a href='/'>L1</a> <a href='/x'>L2</a></header>"
-    _frag_check(
-        [
-            "<p>pre</p>text " + frag + "tail",  # entry: content (p closed -> None? text opens anon)
-            frag + "tail",                       # entry: None
-            "<table><tr><td>c</td>" + frag + "after",  # entry: row block
-            "own text " + frag + frag + "end",   # replay twice in one doc
-        ]
-    )
+    _check_docs(CHROME_CASES["entry_kinds"])
 
 
 def test_chrome_frag_exit_current_is_fresh_block() -> None:
-    # chrome closes while an inner block is still open: exit current is
-    # one of the fresh chrome blocks; following text must land in it
-    # (and be dropped) exactly as the stdlib does
-    _frag_check(
-        [
-            "<aside><ul><li>a</aside> swallowed text",
-            "<p>x</p><aside><ul><li>a</aside> swallowed again",
-        ]
-    )
+    _check_docs(CHROME_CASES["exit_current"])
 
 
 def test_chrome_frag_td_inside_chrome_entry_cell_state() -> None:
-    # K_CELL reads the ENTRY block's row/cell state — fragments where a
-    # td fires while current is the entry block must never be replayed
-    # (behavior depends on cell emptiness, which differs between docs)
-    frag = "<nav>x<td>y</td></nav>"
-    _frag_check(
-        [
-            "<table><tr><td>a</td>" + frag + "z",  # entry row, cell nonempty
-            "<table><tr>" + frag + "z",            # entry row, cell empty
-            "<p>b" + frag + "z",                    # entry non-row content
-            frag + "z",                             # entry None
-        ]
-    )
+    _check_docs(CHROME_CASES["td_inside"])
 
 
 def test_chrome_frag_br_and_opaque_not_cached_wrong() -> None:
-    _frag_check(
-        [
-            # br inside chrome: entry gets a " " (diff-replayable) and a
-            # fresh chrome block gets one (invalidates caching)
-            "<p>t<nav><br></nav>u",
-            "<p>t<nav><ul><li><br></li></ul></nav>u",
-            # opaque content inside chrome (script/style cdata)
-            "<p>t<footer><script>var x = '</nav>';</script></footer>u",
-        ]
-    )
+    _check_docs(CHROME_CASES["br_and_opaque"])
 
 
 def test_chrome_frag_layout_script_inside_chrome() -> None:
-    # a layout-words script inside chrome grows the capture buffer —
-    # the fragment must not be cached, and the payload must be captured
-    # on every parse
-    payload = (
-        '[{"t":"A","p":1,"x":0.5,"y":1.0,"w":0.2,"h":0.01,"c":0.97}]'
-    )
-    doc = (
-        "<body><nav><script type=\"application/x-layout-words\">"
-        + payload
-        + "</script></nav><p>x</p>"
-    )
-    H._CHROME_FRAG_CACHE.clear()
-    for _pass in (1, 2):
-        ok, fast, std = _both(doc)
-        assert ok
-        assert _sig(fast) == _sig(std)
-        assert "".join(fast.layout_words_json) == payload
+    # a layout-words script inside chrome is still captured
+    (doc,) = CHROME_CASES["layout_script"]
+    _check_docs([doc])
+    _, fast, _ = _both(doc)
+    assert "".join(fast.layout_words_json) == _LAYOUT_PAYLOAD
 
 
 def test_chrome_frag_unbalanced_link_depth() -> None:
-    # link opened inside chrome and never closed: exit link_depth != 0,
-    # fragment not cacheable; the leaked link state must still apply to
-    # the text after the fragment on every parse
-    _frag_check(
-        [
-            "<p>t<nav><a href='/q'>l</nav>leaked link text</a>done",
-            "<p>s<nav><a href='/q'>l</nav>leaked again</a>done",
-        ]
-    )
+    _check_docs(CHROME_CASES["unbalanced_link"])
 
 
 def test_chrome_frag_short_fragment_in_different_contexts() -> None:
-    # fragment shorter than the prefix key: bucket key includes trailing
-    # context bytes; must re-record per context, never misreplay
-    _frag_check(
-        [
-            "<p>a<nav></nav>first tail here with enough bytes",
-            "<p>a<nav></nav>second completely different tail text",
-            "<nav></nav>",
-        ]
-    )
+    _check_docs(CHROME_CASES["empty_in_contexts"])
 
 
 def test_chrome_frag_nested_and_sibling_chrome() -> None:
-    _frag_check(
-        [
-            "<p>t<header><nav><ul><li>x</li></ul></nav></header>after",
-            "<p>t<nav>a</nav><aside>b</aside>after",
-            "<p>t<nav><nav>inner</nav>outer</nav>after",
-        ]
-    )
-
-
-def test_chrome_frag_cache_fires_on_generated_corpus() -> None:
-    # the production corpus shares nav/aside/footer chrome verbatim —
-    # after one page, later pages replay those fragments; equality with
-    # the stdlib handler must hold throughout
-    H._CHROME_FRAG_CACHE.clear()
-    for k in range(60):
-        html = build_page(k)["html"].decode("utf-8")
-        ok, fast, std = _both(html)
-        assert ok
-        assert _sig(fast) == _sig(std), f"page {k}"
-    assert len(H._CHROME_FRAG_CACHE) > 0  # the cache actually engaged
-
-
-# ---------------------------------------------------------------------------
-# Row-fragment effect cache (_ROW_FRAG_CACHE): same record-then-replay
-# discipline as the chrome tests — each document parsed twice from a
-# cleared cache, stdlib equality asserted on both passes.
-# ---------------------------------------------------------------------------
-
-
-def _row_frag_check(docs: list[str]) -> None:
-    H._ROW_FRAG_CACHE.clear()
-    H._CHROME_FRAG_CACHE.clear()
-    for _pass in (1, 2, 3):
-        for s in docs:
-            ok, fast, std = _both(s)
-            if ok:
-                assert _sig(fast) == _sig(std), (_pass, s)
+    _check_docs(CHROME_CASES["nested_and_sibling"])
 
 
 def test_row_frag_replay_basic_and_contexts() -> None:
-    row = "<tr><td>Label A</td><td>Value B</td></tr>"
-    _row_frag_check(
-        [
-            "<table>" + row + row + "</table>tail",
-            "<p>pre</p><table>" + row + "</table>",
-            row,                       # bare row, fragment to EOF endtag
-            row + "different tail context with plenty of bytes",
-            "<tr/>self closing row",
-        ]
-    )
+    _check_docs(ROW_CASES["basic_and_contexts"])
 
 
 def test_row_frag_implicit_close_and_nested_blocks() -> None:
-    _row_frag_check(
-        [
-            # unclosed tr: next tr does NOT end the fragment (no
-            # current=None transition) — one fragment spans both rows
-            "<table><tr><td>a<tr><td>b</tr></table>",
-            # nested block: fragment ends at the FIRST close (</div>);
-            # the rest of the row parses normally
-            "<tr><td><div>x</div>y</td></tr>after",
-            "<tr><td><div>x</div>z</td></tr>after",
-        ]
-    )
+    _check_docs(ROW_CASES["implicit_close_and_nested"])
 
 
 def test_row_frag_link_and_chrome_inside() -> None:
-    _row_frag_check(
-        [
-            # balanced link inside: cacheable, link accounting recorded
-            "<tr><td><a href='/x'>k</a>v</td></tr>t",
-            # unbalanced link: exit link_depth != 0 -> never cached; the
-            # leaked link state must still affect following text
-            "<tr><td><a href='/x'>k</tr>leaked</a>t",
-            # chrome inside a row: chrome records inside the row
-            # recording; on later passes the chrome REPLAY fires inside
-            # the row recording and invalidates it — equality must hold
-            # on every pass either way
-            "<tr><td><nav><ul><li>c</li></ul></nav>v</td></tr>t",
-            # row inside an open link: no replay/record (link_depth > 0)
-            "<a href='/y'><tr><td>k</td><td>v</td></tr></a>t",
-        ]
-    )
+    _check_docs(ROW_CASES["link_and_chrome"])
 
 
 def test_row_frag_layout_script_and_br() -> None:
-    payload = '[{"t":"A","p":1,"x":0.5,"y":1.0,"w":0.2,"h":0.01,"c":0.97}]'
-    doc = (
-        "<tr><td><script type=\"application/x-layout-words\">"
-        + payload
-        + "</script></td></tr><p>x</p>"
-    )
-    H._ROW_FRAG_CACHE.clear()
-    for _pass in (1, 2):
-        ok, fast, std = _both(doc)
-        assert ok
-        assert _sig(fast) == _sig(std)
-        assert "".join(fast.layout_words_json) == payload
-    # br inside a row: the " " lands in the recorded cell content and
-    # must replay byte-identically
-    _row_frag_check(["<tr><td>a<br>b</td></tr>t", "<tr><td>a<br>b</td></tr>u"])
+    (doc,) = ROW_CASES["layout_script"]
+    _check_docs([doc] + ROW_CASES["br"])
+    _, fast, _ = _both(doc)
+    assert "".join(fast.layout_words_json) == _LAYOUT_PAYLOAD
 
 
-def test_row_frag_generated_corpus_engages() -> None:
-    H._ROW_FRAG_CACHE.clear()
-    H._CHROME_FRAG_CACHE.clear()
-    for k in range(60):
-        html = build_page(k)["html"].decode("utf-8")
-        ok, fast, std = _both(html)
-        assert ok
-        assert _sig(fast) == _sig(std), f"page {k}"
-    assert len(H._ROW_FRAG_CACHE) > 0
-
-
-def test_row_emit_memo_replay_is_byte_identical() -> None:
-    # block-level emission memo (_ROW_EMIT_CACHE): the same document
-    # parsed from cold caches and again with every cache warm must
-    # produce byte-identical token streams and text — including docs
-    # whose form rows sit at shifted (page, row, line_idx) geometry
-    # (different paragraph counts / dropped rows shift everything)
+def test_parse_page_cold_and_warm_caches_byte_identical() -> None:
+    # the tag, word and line memos persist across documents: each page
+    # parsed from cleared caches and again with every other page's
+    # entries warm must give byte-identical token streams and text, in
+    # both include_words modes — including pages whose form rows sit at
+    # shifted (page, row, line_idx) geometry (different paragraph counts)
     from credit_ocr_backend_spark.core.document import dumps_compact
 
-    H._ROW_EMIT_CACHE.clear()
-    H._ROW_FRAG_CACHE.clear()
-    H._CHROME_FRAG_CACHE.clear()
-    H._LINE_TOKEN_CACHE.clear()
+    def cold_parse(html, include_words):
+        for cache in (
+            H._TAG_ACTION_CACHE, H._ENDTAG_CACHE, H._COLLAPSE_CACHE,
+            H._WORD_TOKEN_CACHE, H._LINE_TOKEN_CACHE,
+        ):
+            cache.clear()
+        H._lower_tag.cache_clear()
+        H._word_confidence.cache_clear()
+        return H.parse_page(html, include_words=include_words)
+
     docs = [build_page(k)["html"] for k in (0, 1, 2, 5, 9, 17, 24, 38)]
-    cold = [H.parse_page(h, include_words=False) for h in docs]
-    warm = [H.parse_page(h, include_words=False) for h in docs]
-    for (t1, x1), (t2, x2) in zip(cold, warm):
-        assert dumps_compact(t1) == dumps_compact(t2)
-        assert x1 == x2
-    assert len(H._ROW_EMIT_CACHE) > 0  # the memo actually engaged
-    # words-materialized path is untouched by the memo
-    w1 = H.parse_page(docs[0], include_words=True)
-    w2 = H.parse_page(docs[0], include_words=True)
-    assert dumps_compact(w1[0]) == dumps_compact(w2[0])
+    for include_words in (False, True):
+        cold = [cold_parse(h, include_words) for h in docs]
+        warm = [H.parse_page(h, include_words=include_words) for h in docs]
+        for (t1, x1), (t2, x2) in zip(cold, warm):
+            assert dumps_compact(t1) == dumps_compact(t2)
+            assert x1 == x2

@@ -384,6 +384,12 @@ def test_fields_json_fragment_composer_byte_equal():
     ]
     for p in payloads:
         assert _fields_json(p) == dumps_compact(_field_rows(p))
+    # one field whose value is 1, then True, then 1.0: equal-hashing
+    # values must not share a memoized row prefix
+    for value in (1, True, 1.0):
+        p = {"extracted_fields": {"n": {"value": value, "confidence": 0.9,
+                                        "page": 1, "bounding_box": None}}}
+        assert _fields_json(p) == dumps_compact(_field_rows(p))
     # and across real documents twice (cold + memo-replayed fragments)
     cfg = default_config()
     from credit_ocr_backend_spark.core.document import process_document

@@ -118,6 +118,34 @@ def test_resume_skips_committed_chunks(spark, pages_path, tmp_path):
         assert clean[url]["fields_json"] == resumed[url]["fields_json"]
 
 
+def test_fresh_run_does_not_inherit_earlier_lineage(spark, pages_path, tmp_path):
+    """A fresh run (resume=False) into an out_root that holds a finished
+    run of another corpus must not count that run's chunks as committed:
+    crash it, resume it, and the output equals a clean run of it."""
+    corpus_b = str(tmp_path / "pages_b")
+    write_pages(spark, corpus_b, n_docs=N_DOCS // 2, partitions=4)
+    out = str(tmp_path / "out")
+    keep = tmp_path / "out" / "notes.txt"  # not engine state
+
+    run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)  # corpus A
+    keep.write_text("kept")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(
+            spark, corpus_b, out, n_buckets=8, n_chunks=4, fail_buckets={4},
+        )
+    res = run_pipeline(spark, corpus_b, out, n_buckets=8, n_chunks=4, resume=True)
+    assert (res.chunks_skipped, res.chunks_run) == (2, 2)
+    assert keep.read_text() == "kept"
+
+    clean_out = str(tmp_path / "clean_b")
+    run_pipeline(spark, corpus_b, clean_out, n_buckets=8, n_chunks=4)
+    clean = _docs_map(spark, clean_out)
+    got = _docs_map(spark, out)
+    assert set(got) == set(clean)
+    for url, row in clean.items():
+        assert got[url] == row
+
+
 def test_results_long_format(spark, pages_path, tmp_path):
     out = str(tmp_path / "long")
     run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=1)
