@@ -66,6 +66,7 @@ from credit_ocr_backend_spark.operators.stages import (
 from credit_ocr_backend_spark.sources.checkpoint import (
     CheckpointManager,
     new_run_id,
+    url_bucket,
     with_bucket,
 )
 
@@ -335,7 +336,7 @@ def run_pipeline(
     else:
         # A fresh run starts from nothing: an earlier run's lineage
         # would otherwise mark its chunks done for a later resume.
-        ckpt.reset()
+        ckpt.reset(("docs", "results", "parsed", "normalized"))
         ckpt.write_manifest(manifest)
 
     # One unfiltered count of the input (parquet footer statistics — no
@@ -560,6 +561,27 @@ def run_pipeline(
     return result
 
 
+_BULK_COLUMNS = ["url", "bucket", "chunk", "status", "error", "proc_ms"]
+_BULK_SCHEMA = (
+    "url string, bucket int, chunk int, status string, error string, proc_ms double"
+)
+
+
+def _owning_chunk(bucket: int, n_buckets: int, n_chunks: int) -> int:
+    return next(
+        c for c in range(n_chunks)
+        if c * n_buckets // n_chunks <= bucket < (c + 1) * n_buckets // n_chunks
+    )
+
+
+def _lookup_manager(spark: SparkSession, out_root: str):
+    ckpt = CheckpointManager(spark, out_root)
+    manifest = ckpt.read_manifest()
+    if manifest is None:
+        raise ValueError(f"{out_root} has no run manifest — not a pipeline output")
+    return ckpt, manifest["n_buckets"], manifest["n_chunks"]
+
+
 def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     """Point lookup of one document's extraction status — the
     reference's GET /extraction-status/{id} endpoint
@@ -568,55 +590,37 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     the owning chunk's lineage row.
 
     At 10^12 docs this must NOT scan the corpus: the url's bucket is
-    recomputed (same xxhash64 expression that wrote it), the run
+    recomputed on the driver by ``url_bucket`` (a Python port of the
+    Spark ``xxhash64`` that wrote it, tested equal to Spark), the run
     manifest maps bucket → chunk, and ONLY that chunk=NNNN directory is
-    read, with the bucket+url predicates pushed into its parquet scan.
-    Returns None when the url is absent (not crawled, or its chunk not
-    yet committed). A chunk is committed only when its lineage says
-    done: the lineage append is the commit point, so a chunk directory
-    without lineage rows (a crash between the writes and the append)
-    is not read."""
-    ckpt = CheckpointManager(spark, out_root)
-    manifest = ckpt.read_manifest()
-    if manifest is None:
-        raise ValueError(f"{out_root} has no run manifest — not a pipeline output")
-    n_buckets, n_chunks = manifest["n_buckets"], manifest["n_chunks"]
-    bucket = (
-        spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(url)), F.lit(n_buckets)).cast("int").alias("b"))
-        .first()["b"]
-    )
-    chunk = next(
-        c for c in range(n_chunks)
-        if c * n_buckets // n_chunks <= bucket < (c + 1) * n_buckets // n_chunks
-    )
+    read, with pyarrow and the bucket+url predicates pushed into its
+    parquet scan. The lineage is read with pyarrow too, so a lookup
+    submits no Spark job. Returns None when the url is absent (not
+    crawled, or its chunk not yet committed). A chunk is committed only
+    when its lineage says done: the lineage append is the commit point,
+    so a chunk directory without lineage rows (a crash between the
+    writes and the append) is not read."""
+    import pyarrow.dataset as ds
+
+    ckpt, n_buckets, n_chunks = _lookup_manager(spark, out_root)
+    bucket = url_bucket(url, n_buckets)
+    chunk = _owning_chunk(bucket, n_buckets, n_chunks)
     # The chunk's lineage rows are read BEFORE its docs: no done row
     # means "not committed yet". Once the lineage says done, corrupt
     # parquet / permission / transient FS errors on the docs read must
     # propagate, not report the document as absent (ADVICE round 3).
-    lineage = ckpt.lineage()
-    if lineage is None:
-        return None
-    lrows = (
-        lineage.where(
-            (F.col("chunk") == chunk)
-            & (F.col("stage") == "extracted")
-            & (F.col("status") == "done")
-        )
-        .select("bucket", "run_id", "finished_at")
-        .collect()
-    )
+    lrows = ckpt.read_lineage(
+        "extracted", chunk, columns=["bucket", "run_id", "finished_at"]
+    ).to_pylist()
     if not lrows:
         return None
-    docs = ckpt.read_chunk("docs", chunk)
-    row = (
-        docs.where((F.col("bucket") == bucket) & (F.col("url") == url))
-        .select("status", "error", "proc_ms")
-        .first()
-    )
-    if row is None:
+    rows = ckpt.read_chunk_arrow(
+        "docs", chunk, ["status", "error", "proc_ms"],
+        filter=(ds.field("bucket") == bucket) & (ds.field("url") == url),
+    ).slice(0, 1).to_pylist()
+    if not rows:
         return None
-    out = {"url": url, "bucket": bucket, "chunk": chunk, **row.asDict()}
+    out = {"url": url, "bucket": bucket, "chunk": chunk, **rows[0]}
     lrow = next((r for r in lrows if r["bucket"] == bucket), None)
     if lrow is not None:
         out.update(run_id=lrow["run_id"], finished_at=lrow["finished_at"])
@@ -629,59 +633,49 @@ def doc_status_bulk(
     """Batch companion to :func:`doc_status` — extraction status for a
     LIST of urls (the ops surface for monitoring a crawl batch), with
     cost O(affected chunks), never a corpus scan: buckets are
-    recomputed with the same xxhash64 expression that wrote them, urls
-    are grouped by owning chunk via the run manifest, and only those
-    chunk directories are read, each with bucket+url predicates pushed
-    into its parquet scan.  Urls that were never crawled, or whose
-    chunk is not yet committed (no done lineage row), are simply absent
-    from the result (same contract as the point lookup's ``None``).
+    recomputed on the driver by the same tested ``url_bucket`` port,
+    urls are grouped by owning chunk via the run manifest, and only
+    those chunk directories are read, with pyarrow and the bucket+url
+    predicates pushed into each parquet scan. Urls that were never
+    crawled, or whose chunk is not yet committed (no done lineage row),
+    are simply absent from the result (same contract as the point
+    lookup's ``None``).
 
-    Returns a DataFrame (url, bucket, chunk, status, error, proc_ms).
+    Returns a DataFrame (url, bucket, chunk, status, error, proc_ms),
+    built from one Arrow table: building it and collecting it submit
+    no Spark job.
     """
-    from functools import reduce as _reduce
+    import pyarrow as pa
+    import pyarrow.dataset as ds
 
-    ckpt = CheckpointManager(spark, out_root)
-    manifest = ckpt.read_manifest()
-    if manifest is None:
-        raise ValueError(f"{out_root} has no run manifest — not a pipeline output")
-    n_buckets, n_chunks = manifest["n_buckets"], manifest["n_chunks"]
-
-    url_rows = (
-        spark.createDataFrame([(u,) for u in urls], "url string")
-        .select(
-            "url",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int").alias("b"),
-        )
-        .collect()
-    )
+    ckpt, n_buckets, n_chunks = _lookup_manager(spark, out_root)
     by_chunk: dict = {}
-    for r in url_rows:
-        chunk = next(
-            c for c in range(n_chunks)
-            if c * n_buckets // n_chunks <= r["b"] < (c + 1) * n_buckets // n_chunks
+    for u in urls:
+        b = url_bucket(u, n_buckets)
+        urls_of, buckets_of = by_chunk.setdefault(
+            _owning_chunk(b, n_buckets, n_chunks), (set(), set())
         )
-        by_chunk.setdefault(chunk, []).append(r["url"])
+        urls_of.add(u)
+        buckets_of.add(b)
 
-    empty_schema = (
-        "url string, bucket int, chunk int, status string, "
-        "error string, proc_ms double"
-    )
     done = ckpt.done_chunks("extracted")
     parts = []
     for chunk in sorted(by_chunk):
         if chunk not in done:
             continue  # not committed yet — absent, like the point lookup
-        docs = ckpt.read_chunk("docs", chunk)
-        parts.append(
-            docs.where(F.col("url").isin(by_chunk[chunk])).select(
-                "url",
-                F.col("bucket").cast("int").alias("bucket"),
-                F.lit(chunk).cast("int").alias("chunk"),
-                "status",
-                "error",
-                F.col("proc_ms").cast("double").alias("proc_ms"),
-            )
+        urls_of, buckets_of = by_chunk[chunk]
+        docs = ckpt.read_chunk_arrow(
+            "docs", chunk, ["url", "bucket", "status", "error", "proc_ms"],
+            filter=ds.field("bucket").isin(sorted(buckets_of))
+            & ds.field("url").isin(sorted(urls_of)),
         )
+        parts.append(docs.add_column(
+            2, "chunk", pa.array([chunk] * docs.num_rows, pa.int32())
+        ))
     if not parts:
-        return spark.createDataFrame([], empty_schema)
-    return _reduce(DataFrame.unionByName, parts)
+        parts = [pa.table({c: pa.nulls(0) for c in _BULK_COLUMNS})]
+    # One contiguous table: with several Arrow chunks per column (one
+    # per part file) createDataFrame lost rows in some of the first
+    # calls of a process; after combine_chunks() it has lost none.
+    # From an Arrow table (not a Python list) it runs no Spark job.
+    return spark.createDataFrame(pa.concat_tables(parts).combine_chunks(), _BULK_SCHEMA)

@@ -17,15 +17,24 @@ unit of recovery:
 
 After each chunk commits, one lineage parquet fragment is appended
 (pyarrow, driver-side — one row per bucket; no Spark job for metadata).
-Resume = skip chunks whose lineage rows exist with status done.
+Resume = skip chunks whose lineage rows exist with status done. Resume
+and the status lookups READ the lineage with pyarrow too
+(:meth:`CheckpointManager.read_lineage`), and the lookups read the
+owning chunk's docs files with ``pyarrow.dataset``: no Spark job, and a
+url's bucket comes from :func:`url_bucket`, a Python port of Spark's
+``xxhash64`` tested against Spark.
 
-All metadata I/O (manifest, lineage fragments, chunk swaps) goes
+All metadata writes (manifest, lineage fragments, chunk swaps) go
 through the Hadoop FileSystem API — the same client Spark's own
 writers use — so an ``out_root`` on any Hadoop-supported scheme
 (``file://``, ``hdfs://``, ``s3a://`` with the aws jars, ...) keeps
 resume state on the SAME store as the data. A scheme with no loadable
 FileSystem implementation still fails fast at construction (the
-round-1 silent-divorce bug stays an explicit error).
+round-1 silent-divorce bug stays an explicit error). The pyarrow
+reader opens its filesystem lazily on the first read: a plain path or
+``file:`` URI is local, ``s3a://`` is read as pyarrow's ``s3://``, any
+other scheme goes through ``pyarrow.fs.FileSystem.from_uri``; a root
+pyarrow cannot open raises ``ValueError`` there.
 
 On Iceberg the same layout is ``bucket(url, N)`` hidden partitioning +
 ``overwritePartitions()``; plain parquet directories reproduce the
@@ -35,10 +44,12 @@ mechanics faithfully for this sandbox.
 from __future__ import annotations
 
 import os
+import struct
 import tempfile
 import time
 import uuid
-from typing import List, Optional, Set
+from typing import Iterable, List, Optional, Set
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,9 +61,101 @@ LINEAGE_SCHEMA = (
 )
 
 
+def _lineage_arrow_schema():
+    import pyarrow as pa
+
+    return pa.schema([
+        ("chunk", pa.int32()), ("bucket", pa.int32()), ("stage", pa.string()),
+        ("status", pa.string()), ("n_docs", pa.int64()), ("n_failed", pa.int64()),
+        ("cpu_ms", pa.float64()), ("wall_ms", pa.int64()), ("run_id", pa.string()),
+        ("finished_at", pa.string()),
+    ])
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Stable url-hash bucket — identical across runs, the lineage key."""
     return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _merge(h: int, v: int) -> int:
+    return ((h ^ _round(0, v)) * _P1 + _P4) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64``
+    of a string column is this over its UTF-8 bytes with seed 42."""
+    n, i = len(data), 0
+    if n >= 32:
+        v1, v2 = (seed + _P1 + _P2) & _M64, (seed + _P2) & _M64
+        v3, v4 = seed & _M64, (seed - _P1) & _M64
+        while i + 32 <= n:
+            a, b, c, d = struct.unpack_from("<4Q", data, i)
+            v1, v2, v3, v4 = _round(v1, a), _round(v2, b), _round(v3, c), _round(v4, d)
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = _merge(h, v)
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= byte * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def url_bucket(url: str, n_buckets: int) -> int:
+    """:func:`with_bucket` on the driver, without a Spark job: Spark's
+    ``pmod(xxhash64(url), n_buckets)`` (Python's ``%`` is already
+    non-negative for a positive modulus)."""
+    return xxhash64(url.encode("utf-8")) % n_buckets
+
+
+def _arrow_fs(root: str):
+    """(pyarrow filesystem, path) for ``root``: a plain path or a
+    ``file:`` URI is local; ``s3a://`` is opened as pyarrow's ``s3://``
+    (credentials then come from pyarrow's AWS chain, not the Hadoop
+    conf); any other scheme goes through ``FileSystem.from_uri``."""
+    from pyarrow import fs as pafs
+
+    scheme = urlparse(root).scheme
+    if scheme in ("", "file"):
+        return pafs.LocalFileSystem(), os.path.abspath(urlparse(root).path if scheme else root)
+    uri = "s3" + root[len("s3a"):] if scheme == "s3a" else root
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except Exception as exc:  # unknown scheme, no libhdfs, no S3 support
+        raise ValueError(
+            f"out_root '{root}': pyarrow cannot open the '{scheme}://' scheme "
+            f"({exc}); lineage and status reads need a filesystem pyarrow can open."
+        ) from exc
 
 
 class _Fs:
@@ -120,26 +223,29 @@ class CheckpointManager:
     """Filesystem layout:
     ``{root}/{table}/chunk=NNNN/part-*.parquet`` for stage tables and
     ``{root}/lineage/part-*.parquet`` (append-only fragments). ``root``
-    may carry any scheme the Hadoop classpath supports."""
+    may carry any scheme the Hadoop classpath supports; the pyarrow
+    reads additionally need one pyarrow can open (:func:`_arrow_fs`)."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root.rstrip("/")
         self._fs = _Fs(spark, self.root)
+        self._afs = None  # (pyarrow filesystem, root path), opened on first read
         self.lineage_dir = f"{self.root}/lineage"
         self.manifest_path = f"{self.root}/run_manifest.json"
 
-    def reset(self) -> None:
+    def reset(self, tables: Iterable[str]) -> None:
         """Remove the engine-owned state under root: the lineage, the
-        run manifest with its swap file, and the stage tables
-        run_pipeline writes. A fresh run calls this before it pins its
-        manifest, so no chunk of an earlier run can count as committed
-        for it. Other files under root are left alone."""
+        run manifest with its swap file, and ``tables`` — the stage
+        tables (or other root entries) the caller owns. A fresh run
+        calls this before it pins its manifest, so no chunk of an
+        earlier run can count as committed for it. Other files under
+        root are left alone."""
         for p in (
             self.lineage_dir,
             self.manifest_path,
             self.manifest_path + ".tmp",
-            *(self.path(t) for t in ("docs", "results", "parsed", "normalized")),
+            *(self.path(t) for t in tables),
         ):
             self._fs.delete(p)
 
@@ -186,7 +292,7 @@ class CheckpointManager:
         run (ADVICE round 1: silent chunk-identity drift)."""
         committed = self.read_manifest()
         if committed is None:
-            if self.lineage() is not None:
+            if self.read_lineage(columns=["chunk"]).num_rows:
                 # Committed chunks with no manifest: the chunk-identity
                 # parameters of the committed work are unknowable, so
                 # adopting the CURRENT params would re-enable the silent
@@ -228,29 +334,36 @@ class CheckpointManager:
         except Exception:
             return None
 
+    def read_lineage(
+        self,
+        stage: Optional[str] = None,
+        chunk: Optional[int] = None,
+        columns: Optional[List[str]] = None,
+    ):
+        """The lineage rows with status done (optionally of one stage
+        and one chunk) as a pyarrow Table, read on the driver from the
+        ``*.parquet`` fragments: no Spark job, and a crashed ``.tmp``
+        upload is never listed."""
+        import pyarrow.dataset as ds
+
+        schema = _lineage_arrow_schema()
+        files = self._parquet_files(self.lineage_dir)
+        if not files:
+            table = schema.empty_table()
+            return table.select(columns) if columns is not None else table
+        pred = ds.field("status") == "done"
+        if stage is not None:
+            pred &= ds.field("stage") == stage
+        if chunk is not None:
+            pred &= ds.field("chunk") == chunk
+        dataset = ds.dataset(files, schema=schema, format="parquet", filesystem=self._arrow()[0])
+        return dataset.to_table(columns=columns, filter=pred)
+
     def done_chunks(self, stage: str) -> Set[int]:
-        lineage = self.lineage()
-        if lineage is None:
-            return set()
-        rows = (
-            lineage.where((F.col("stage") == stage) & (F.col("status") == "done"))
-            .select("chunk")
-            .distinct()
-            .collect()
-        )
-        return {r["chunk"] for r in rows}
+        return set(self.read_lineage(stage, columns=["chunk"]).column("chunk").to_pylist())
 
     def done_buckets(self, stage: str) -> Set[int]:
-        lineage = self.lineage()
-        if lineage is None:
-            return set()
-        rows = (
-            lineage.where((F.col("stage") == stage) & (F.col("status") == "done"))
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        return {r["bucket"] for r in rows}
+        return set(self.read_lineage(stage, columns=["bucket"]).column("bucket").to_pylist())
 
     def append_lineage(
         self,
@@ -276,19 +389,21 @@ class CheckpointManager:
             per_bucket = [{"bucket": -1, "n_docs": 0, "n_failed": 0, "cpu_ms": 0.0}]
         self._fs.mkdirs(self.lineage_dir)
         finished_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        n = len(per_bucket)
         table = pa.table(
             {
-                "chunk": pa.array([int(chunk)] * len(per_bucket), pa.int32()),
-                "bucket": pa.array([int(b["bucket"]) for b in per_bucket], pa.int32()),
-                "stage": pa.array([stage] * len(per_bucket)),
-                "status": pa.array(["done"] * len(per_bucket)),
-                "n_docs": pa.array([int(b["n_docs"]) for b in per_bucket], pa.int64()),
-                "n_failed": pa.array([int(b["n_failed"]) for b in per_bucket], pa.int64()),
-                "cpu_ms": pa.array([float(b["cpu_ms"]) for b in per_bucket], pa.float64()),
-                "wall_ms": pa.array([int(wall_ms)] * len(per_bucket), pa.int64()),
-                "run_id": pa.array([run_id] * len(per_bucket)),
-                "finished_at": pa.array([finished_at] * len(per_bucket)),
-            }
+                "chunk": [int(chunk)] * n,
+                "bucket": [int(b["bucket"]) for b in per_bucket],
+                "stage": [stage] * n,
+                "status": ["done"] * n,
+                "n_docs": [int(b["n_docs"]) for b in per_bucket],
+                "n_failed": [int(b["n_failed"]) for b in per_bucket],
+                "cpu_ms": [float(b["cpu_ms"]) for b in per_bucket],
+                "wall_ms": [int(wall_ms)] * n,
+                "run_id": [run_id] * n,
+                "finished_at": [finished_at] * n,
+            },
+            schema=_lineage_arrow_schema(),
         )
         fragment = f"{self.lineage_dir}/part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
         fd, local_tmp = tempfile.mkstemp(suffix=".parquet")
@@ -311,6 +426,41 @@ class CheckpointManager:
     def read_chunk(self, name: str, chunk: int) -> DataFrame:
         self._recover_chunk(name, chunk)
         return self.spark.read.parquet(self._chunk_path(name, chunk))
+
+    def read_chunk_arrow(self, name: str, chunk: int, columns: List[str], filter=None):
+        """:meth:`read_chunk` on the driver with ``pyarrow.dataset``: the
+        chunk's top-level part files only, ``filter`` (a
+        ``pyarrow.dataset`` expression) pushed into the scan. A chunk
+        with no part file raises ``FileNotFoundError``."""
+        import pyarrow.dataset as ds
+
+        self._recover_chunk(name, chunk)
+        path = self._chunk_path(name, chunk)
+        files = self._parquet_files(path)
+        if not files:
+            raise FileNotFoundError(f"{path} holds no parquet part file")
+        dataset = ds.dataset(files, format="parquet", filesystem=self._arrow()[0])
+        return dataset.to_table(columns=columns, filter=filter)
+
+    def _arrow(self):
+        if self._afs is None:
+            self._afs = _arrow_fs(self.root)
+        return self._afs
+
+    def _parquet_files(self, path: str) -> List[str]:
+        """pyarrow paths of the ``*.parquet`` files directly under
+        ``path`` (a ``root``-prefixed path): no ``_SUCCESS``, ``.crc``,
+        ``.tmp``, hidden file or ``_temporary/`` entry."""
+        from pyarrow import fs as pafs
+
+        fs, base = self._arrow()
+        selector = pafs.FileSelector(base + path[len(self.root):], allow_not_found=True)
+        return sorted(
+            info.path for info in fs.get_file_info(selector)
+            if info.type == pafs.FileType.File
+            and info.base_name.endswith(".parquet")
+            and not info.base_name.startswith((".", "_"))
+        )
 
     def _recover_chunk(self, name: str, chunk: int) -> None:
         """Repair any window an interrupted :meth:`upsert_chunk` swap can

@@ -133,6 +133,9 @@ def run_dedup(
             ckpt.write_manifest(committed)
         ckpt.check_manifest(manifest)
     else:
+        # A fresh run starts from nothing: an earlier run's lineage
+        # would otherwise mark its stages done for a later resume.
+        ckpt.reset([*STAGES, "curated_params.json"])
         ckpt.write_manifest(manifest)
     run_id = new_run_id()
     done = ckpt.done_chunks("dedup") if resume else set()

@@ -178,3 +178,35 @@ def test_resume_follows_manifest_not_fresh_default(spark, corpus, tmp_path):
     # an adopted fresh default would have raised a manifest mismatch or
     # rewritten the pin; the committed star choice must survive intact
     assert ckpt.read_manifest()["cc_algorithm"] == "star"
+
+
+def test_fresh_run_does_not_inherit_earlier_lineage(spark, corpus, tmp_path, monkeypatch):
+    """A fresh dedup run into a root that holds a finished run of
+    another corpus must not count that run's stages as committed:
+    crash it before its clusters stage, resume it, and the resume
+    recomputes every stage it did not commit itself."""
+    from credit_ocr_backend_spark.operators import dedup as D
+
+    text = "another corpus with its own clone pair and nothing else in common here"
+    rows = [(10, text), (11, text), (12, "a lone document about tax forms"),
+            (13, "one more lone document on invoices")]
+    corpus_b = str(tmp_path / "docs_b")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(corpus_b)
+    out = str(tmp_path / "shared")
+
+    run_dedup(spark, corpus, out)  # corpus A, every stage committed
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the clusters stage commits")
+
+    monkeypatch.setattr(D, "duplicate_clusters", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_dedup(spark, corpus_b, out)
+    monkeypatch.undo()
+
+    res = run_dedup(spark, corpus_b, out, resume=True)
+    assert res["resumed_stages"] == [0, 1, 2]
+    clean = run_dedup(spark, corpus_b, str(tmp_path / "clean_b"))
+    assert res["stages"] == clean["stages"]
+    kept = {r["doc_id"] for r in spark.read.parquet(f"{out}/keep_list").collect()}
+    assert kept == {10, 12, 13}

@@ -109,6 +109,37 @@ def test_object_store_out_root_fail_fast_without_connector(spark, tmp_path):
         CheckpointManager(spark, "s3://bucket/extract")
 
 
+def test_arrow_reader_opens_local_roots_and_names_unknown_schemes(monkeypatch):
+    """The pyarrow side of the checkpoint reads: plain paths and every
+    file: spelling are local, s3a:// is opened as pyarrow's s3://, and
+    a scheme pyarrow cannot open is a ValueError naming the scheme."""
+    import os
+
+    from pyarrow import fs as pafs
+
+    from credit_ocr_backend_spark.sources.checkpoint import _arrow_fs
+
+    for root in ("/tmp/ckpt", "file:/tmp/ckpt", "file:///tmp/ckpt"):
+        fs, path = _arrow_fs(root)
+        assert isinstance(fs, pafs.LocalFileSystem) and path == "/tmp/ckpt", root
+    assert _arrow_fs("rel/ckpt")[1] == os.path.abspath("rel/ckpt")
+
+    with pytest.raises(ValueError, match="'nosuch://' scheme"):
+        _arrow_fs("nosuch://bucket/extract")
+
+    opened = []
+
+    class Opener:
+        @staticmethod
+        def from_uri(uri):
+            opened.append(uri)
+            return None, ""
+
+    monkeypatch.setattr(pafs, "FileSystem", Opener)  # no store is contacted
+    _arrow_fs("s3a://bucket/extract")
+    assert opened == ["s3://bucket/extract"]
+
+
 def test_checkpoint_file_scheme_roundtrip(spark, tmp_path):
     """The Hadoop-FS code path end-to-end on an explicit file:// scheme
     URI (the scheme-generic route an hdfs:///s3a:// out_root takes):

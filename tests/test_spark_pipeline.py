@@ -402,3 +402,156 @@ def test_worker_pins_spark_archives_after_engine_stage(spark):
         pytest.skip("Spark's Python workers import from no zip archive here")
     for r in rows:
         assert r["unpinned"] == [] and r["reread"] == []
+
+
+def _spark_jobs(spark, fn):
+    """(fn's result, Spark jobs it submitted), counted from the status
+    tracker: jobs of the call's own job group plus ungrouped jobs that
+    are new since the call began."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "lookup-job-count"
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup(group))
+    jobs |= set(tracker.getJobIdsForGroup(None)) - before
+    return result, len(jobs)
+
+
+def test_url_bucket_equals_spark_pmod_xxhash64(spark):
+    """The driver-side bucket is Spark's pmod(xxhash64(url), B) for
+    every B the lookups may meet: corpus urls, the empty string,
+    non-ASCII urls and every XXH64 tail length."""
+    import random
+
+    from credit_ocr_backend_spark.sources.checkpoint import url_bucket
+
+    rng = random.Random(7)
+    alphabet = "az09/:.-_" + "éßø" + "中文字" + "😀🚀"
+    urls = [build_page(k)["url"] for k in range(500)]
+    urls += ["", "https://bücher.example/straße", "https://例子.测试/路径?q=值"]
+    urls += ["x" * n for n in range(41)]  # 0-40 bytes
+    urls += ["é" * n for n in range(21)]  # 0-40 bytes, two per char
+    urls += ["".join(rng.choice(alphabet) for _ in range(rng.randrange(80))) for _ in range(300)]
+    buckets = (1, 4, 16, 64)
+    rows = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select(
+            "url",
+            *[F.pmod(F.xxhash64("url"), F.lit(b)).cast("int").alias(f"b{b}") for b in buckets],
+        )
+        .collect()
+    )
+    assert len(rows) == len(urls)
+    for r in rows:
+        for b in buckets:
+            assert url_bucket(r["url"], b) == r[f"b{b}"], (r["url"], b)
+
+
+def test_lookups_and_resume_bookkeeping_run_no_spark_job(spark, pages_path, tmp_path):
+    from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)
+    urls = [build_page(k)["url"] for k in range(N_DOCS)]
+
+    ans, jobs = _spark_jobs(spark, lambda: doc_status(spark, out, urls[3]))
+    assert ans["status"] == "done" and jobs == 0
+    ans, jobs = _spark_jobs(spark, lambda: doc_status(spark, out, "https://never.crawled/x"))
+    assert ans is None and jobs == 0
+    rows, jobs = _spark_jobs(spark, lambda: doc_status_bulk(spark, out, urls).collect())
+    assert len(rows) == N_DOCS and jobs == 0
+    rows, jobs = _spark_jobs(spark, lambda: doc_status_bulk(spark, out, ["u://none"]).collect())
+    assert rows == [] and jobs == 0
+    done, jobs = _spark_jobs(spark, lambda: CheckpointManager(spark, out).done_chunks("extracted"))
+    assert done == {0, 1, 2, 3} and jobs == 0
+
+
+def test_doc_status_bulk_repeated_calls_lose_no_rows(spark, pages_path, tmp_path):
+    """Every bulk answer over a chunk of several part files equals a
+    Spark read of the docs table, call after call."""
+    import random
+
+    from credit_ocr_backend_spark.plans.pipeline import doc_status_bulk
+
+    out = tmp_path / "out"
+    run_pipeline(spark, pages_path, str(out), n_buckets=8, n_chunks=1, parallelism=8)
+    assert len(list((out / "docs" / "chunk=0000").glob("*.parquet"))) >= 4
+    want = {
+        r["url"]: (r["bucket"], r["chunk"], r["status"], r["error"], r["proc_ms"])
+        for r in spark.read.parquet(str(out / "docs")).collect()
+    }
+    rng = random.Random(11)
+    for i in range(24):
+        asked = rng.sample(sorted(want), rng.randrange(1, N_DOCS + 1)) + [f"u://missing/{i}"]
+        rows = doc_status_bulk(spark, str(out), asked).collect()
+        got = {r["url"]: (r["bucket"], r["chunk"], r["status"], r["error"], r["proc_ms"]) for r in rows}
+        assert len(rows) == len(got)
+        assert got == {u: want[u] for u in asked if u in want}, i
+
+
+CRASH_CHUNK = 3  # the last of 4 chunks over 8 buckets: buckets 6 and 7
+
+
+@pytest.fixture(scope="module")
+def clean_four_chunks(spark, pages_path, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("clean4") / "out")
+    run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)
+    return _docs_map(spark, out)
+
+
+@pytest.mark.parametrize("window", ["after_docs", "after_results", "before_lineage"])
+def test_crash_window_leaves_chunk_uncommitted(
+    spark, pages_path, clean_four_chunks, tmp_path, monkeypatch, window
+):
+    """A crash in run_chunk between the first write and the lineage
+    append commits nothing: resume bookkeeping and both lookups ignore
+    the chunk, and a resume recomputes exactly that chunk."""
+    from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager, url_bucket
+
+    real_write, real_append = CheckpointManager.write_chunk, CheckpointManager.append_lineage
+
+    def write_chunk(self, df, name, chunk):
+        crash = chunk == CRASH_CHUNK and name == "results"
+        if crash and window == "after_docs":
+            raise RuntimeError("crash after the docs write")
+        real_write(self, df, name, chunk)
+        if crash and window == "after_results":
+            raise RuntimeError("crash after the results write")
+
+    def append_lineage(self, stage, chunk, *args):
+        if chunk == CRASH_CHUNK and window == "before_lineage":
+            raise RuntimeError("crash before the lineage append")
+        real_append(self, stage, chunk, *args)
+
+    monkeypatch.setattr(CheckpointManager, "write_chunk", write_chunk)
+    monkeypatch.setattr(CheckpointManager, "append_lineage", append_lineage)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="crash"):
+        run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)
+    monkeypatch.undo()
+
+    name = f"chunk={CRASH_CHUNK:04d}"
+    assert list((tmp_path / "out" / "docs" / name).glob("*.parquet"))
+    assert (tmp_path / "out" / "results" / name).is_dir() == (window != "after_docs")
+    urls = [build_page(k)["url"] for k in range(N_DOCS)]
+    crashed = [u for u in urls if url_bucket(u, 8) >= 6]
+    assert crashed
+
+    assert CheckpointManager(spark, out).done_chunks("extracted") == {0, 1, 2}
+    assert all(doc_status(spark, out, u) is None for u in crashed)
+    got = {r["url"] for r in doc_status_bulk(spark, out, urls).collect()}
+    assert got == set(urls) - set(crashed)
+
+    res = run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4, resume=True)
+    assert (res.chunks_skipped, res.chunks_run) == (3, 1)
+    assert set(res.buckets_done) == {6, 7}
+    assert _docs_map(spark, out) == clean_four_chunks
