@@ -313,25 +313,6 @@ def run_pipeline(
         "mode": mode,
     }
     if resume:
-        # Migration shim: manifests committed before bounds were
-        # canonicalized pinned the RAW spelling ('2025-01-01'); if the
-        # committed value canonicalizes to the same instant as ours,
-        # rewrite it in place instead of refusing an identical window.
-        committed = ckpt.read_manifest()
-        if committed is not None:
-            migrated = False
-            for k in ("ts_min", "ts_max"):
-                v = committed.get(k)
-                if v is not None and v != manifest[k]:
-                    try:
-                        same = _checked_ts(spark, v, k) == manifest[k]
-                    except ValueError:
-                        same = False
-                    if same:
-                        committed[k] = manifest[k]
-                        migrated = True
-            if migrated:
-                ckpt.write_manifest(committed)
         ckpt.check_manifest(manifest)
     else:
         # A fresh run starts from nothing: an earlier run's lineage

@@ -24,17 +24,20 @@ owning chunk's docs files with ``pyarrow.dataset``: no Spark job, and a
 url's bucket comes from :func:`url_bucket`, a Python port of Spark's
 ``xxhash64`` tested against Spark.
 
-All metadata writes (manifest, lineage fragments, chunk swaps) go
-through the Hadoop FileSystem API — the same client Spark's own
-writers use — so an ``out_root`` on any Hadoop-supported scheme
-(``file://``, ``hdfs://``, ``s3a://`` with the aws jars, ...) keeps
-resume state on the SAME store as the data. A scheme with no loadable
-FileSystem implementation still fails fast at construction (the
-round-1 silent-divorce bug stays an explicit error). The pyarrow
-reader opens its filesystem lazily on the first read: a plain path or
-``file:`` URI is local, ``s3a://`` is read as pyarrow's ``s3://``, any
-other scheme goes through ``pyarrow.fs.FileSystem.from_uri``; a root
-pyarrow cannot open raises ``ValueError`` there.
+Two clients touch ``out_root``, each for its own part:
+
+* Spark writes the chunk data through Hadoop's FileSystem, the client
+  its writers use. The manager only checks at construction that the
+  root's scheme has a loadable Hadoop implementation, so a missing
+  connector fails there, not at the first chunk write.
+* Every metadata operation — manifest, lineage fragments, resets, the
+  lineage and lookup reads — goes through one ``pyarrow.fs``
+  filesystem, opened at construction (:func:`_arrow_fs`): a plain path
+  or ``file:`` URI is local, ``s3a://`` is opened as pyarrow's
+  ``s3://``, any other scheme goes through
+  ``pyarrow.fs.FileSystem.from_uri``. A root pyarrow cannot open raises
+  ``ValueError`` there too, so resume state never lands anywhere but on
+  the store that holds the data.
 
 On Iceberg the same layout is ``bucket(url, N)`` hidden partitioning +
 ``overwritePartitions()``; plain parquet directories reproduce the
@@ -43,16 +46,20 @@ mechanics faithfully for this sandbox.
 
 from __future__ import annotations
 
+import json
 import os
 import struct
-import tempfile
 import time
 import uuid
 from typing import Iterable, List, Optional, Set
 from urllib.parse import urlparse
 
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_MANIFEST = "run_manifest.json"
+_MANIFEST_TMP = _MANIFEST + ".tmp"
 
 LINEAGE_SCHEMA = (
     "chunk int, bucket int, stage string, status string, n_docs long, "
@@ -143,8 +150,6 @@ def _arrow_fs(root: str):
     ``file:`` URI is local; ``s3a://`` is opened as pyarrow's ``s3://``
     (credentials then come from pyarrow's AWS chain, not the Hadoop
     conf); any other scheme goes through ``FileSystem.from_uri``."""
-    from pyarrow import fs as pafs
-
     scheme = urlparse(root).scheme
     if scheme in ("", "file"):
         return pafs.LocalFileSystem(), os.path.abspath(urlparse(root).path if scheme else root)
@@ -154,85 +159,37 @@ def _arrow_fs(root: str):
     except Exception as exc:  # unknown scheme, no libhdfs, no S3 support
         raise ValueError(
             f"out_root '{root}': pyarrow cannot open the '{scheme}://' scheme "
-            f"({exc}); lineage and status reads need a filesystem pyarrow can open."
+            f"({exc}); checkpoint metadata needs a filesystem pyarrow can open."
         ) from exc
 
 
-class _Fs:
-    """Scheme-generic filesystem ops via ``org.apache.hadoop.fs`` (the
-    JVM client Spark itself writes through, reached over py4j). Local
-    paths resolve to LocalFileSystem; object stores resolve to whatever
-    implementation the classpath provides. One deliberate non-goal:
-    atomic rename on stores that lack it (S3) — the chunk-swap protocol
-    below recovers from any interrupted window instead of assuming
-    rename atomicity."""
+
+
+class CheckpointManager:
+    """Filesystem layout:
+    ``{root}/{table}/chunk=NNNN/part-*.parquet`` for stage tables,
+    ``{root}/lineage/part-*.parquet`` (append-only fragments) and
+    ``{root}/run_manifest.json``. Spark writes the stage tables through
+    Hadoop; the manager reads and writes everything else through the one
+    pyarrow filesystem of ``root`` (:func:`_arrow_fs`). ``root`` needs a
+    scheme both can open; either missing raises ``ValueError`` here."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
-        self._jvm = spark._jvm
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
-        self._conf = spark._jsc.hadoopConfiguration()
+        self.spark = spark
+        self.root = root.rstrip("/")
         try:
-            self.fs = self._Path(root).getFileSystem(self._conf)
+            spark._jvm.org.apache.hadoop.fs.Path(self.root).getFileSystem(
+                spark._jsc.hadoopConfiguration()
+            )
         except Exception as exc:  # unknown scheme / missing connector jar
             raise ValueError(
                 f"out_root '{root}' has no usable Hadoop FileSystem "
                 f"implementation ({exc}); provide the connector jars, "
                 f"mount the store, or use a file:// / local out_root."
             ) from exc
-
-    def exists(self, p: str) -> bool:
-        return self.fs.exists(self._Path(p))
-
-    def mkdirs(self, p: str) -> None:
-        self.fs.mkdirs(self._Path(p))
-
-    def delete(self, p: str) -> None:
-        self.fs.delete(self._Path(p), True)
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self.fs.rename(self._Path(src), self._Path(dst)):
-            raise IOError(f"rename failed: {src} -> {dst}")
-
-    def list_names(self, p: str) -> List[str]:
-        if not self.exists(p):
-            return []
-        return [st.getPath().getName() for st in self.fs.listStatus(self._Path(p))]
-
-    def write_bytes(self, p: str, data: bytes) -> None:
-        out = self.fs.create(self._Path(p), True)
-        try:
-            out.write(bytearray(data))
-        finally:
-            out.close()
-
-    def read_bytes(self, p: str) -> bytes:
-        stream = self.fs.open(self._Path(p))
-        try:
-            bos = self._jvm.java.io.ByteArrayOutputStream()
-            self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 65536, False)
-            return bytes(bos.toByteArray())
-        finally:
-            stream.close()
-
-    def put_local(self, local_src: str, dst: str) -> None:
-        """Upload a driver-local file (deletes the local source)."""
-        self.fs.copyFromLocalFile(True, True, self._Path(local_src), self._Path(dst))
-
-
-class CheckpointManager:
-    """Filesystem layout:
-    ``{root}/{table}/chunk=NNNN/part-*.parquet`` for stage tables and
-    ``{root}/lineage/part-*.parquet`` (append-only fragments). ``root``
-    may carry any scheme the Hadoop classpath supports; the pyarrow
-    reads additionally need one pyarrow can open (:func:`_arrow_fs`)."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self._fs = _Fs(spark, self.root)
-        self._afs = None  # (pyarrow filesystem, root path), opened on first read
-        self.lineage_dir = f"{self.root}/lineage"
-        self.manifest_path = f"{self.root}/run_manifest.json"
+        self._filesystem, self._base = _arrow_fs(self.root)
+        self.lineage_dir = self.path("lineage")
+        self.manifest_path = self.path(_MANIFEST)
 
     def reset(self, tables: Iterable[str]) -> None:
         """Remove the engine-owned state under root: the lineage, the
@@ -241,13 +198,36 @@ class CheckpointManager:
         calls this before it pins its manifest, so no chunk of an
         earlier run can count as committed for it. Other files under
         root are left alone."""
-        for p in (
-            self.lineage_dir,
-            self.manifest_path,
-            self.manifest_path + ".tmp",
-            *(self.path(t) for t in tables),
-        ):
-            self._fs.delete(p)
+        for name in ("lineage", _MANIFEST, _MANIFEST_TMP, *tables):
+            self._delete(name)
+
+    # -- small files under root ----------------------------------------------
+
+    def read_bytes(self, name: str) -> Optional[bytes]:
+        """The contents of the file ``{root}/{name}``; None if it does
+        not exist."""
+        path = self._apath(name)
+        if self._filesystem.get_file_info(path).type != pafs.FileType.File:
+            return None
+        with self._filesystem.open_input_stream(path) as f:
+            return f.read()
+
+    def write_bytes(self, name: str, data: bytes) -> None:
+        """Create or overwrite the file ``{root}/{name}``."""
+        self._filesystem.create_dir(self._base, recursive=True)
+        with self._filesystem.open_output_stream(self._apath(name)) as f:
+            f.write(data)
+
+    def _apath(self, name: str) -> str:
+        """The pyarrow path of ``{root}/{name}``."""
+        return f"{self._base}/{name}"
+
+    def _delete(self, name: str) -> None:
+        info = self._filesystem.get_file_info(self._apath(name))
+        if info.type == pafs.FileType.Directory:
+            self._filesystem.delete_dir(info.path)
+        elif info.type == pafs.FileType.File:
+            self._filesystem.delete_file(info.path)
 
     # -- run manifest -------------------------------------------------------
 
@@ -256,36 +236,30 @@ class CheckpointManager:
         (n_buckets, n_chunks, ts window, mode). Resuming under different
         parameters would silently skip chunk ids whose bucket ranges or
         input window differ from the committed run."""
-        import json
-
-        self._fs.mkdirs(self.root)
-        tmp = self.manifest_path + ".tmp"
-        self._fs.write_bytes(tmp, json.dumps(params, sort_keys=True, indent=2).encode())
-        if self._fs.exists(self.manifest_path):
-            self._fs.delete(self.manifest_path)
-        self._fs.rename(tmp, self.manifest_path)
+        self.write_bytes(_MANIFEST_TMP, json.dumps(params, sort_keys=True, indent=2).encode())
+        self._delete(_MANIFEST)
+        self._filesystem.move(self._apath(_MANIFEST_TMP), self._apath(_MANIFEST))
 
     def read_manifest(self) -> Optional[dict]:
-        import json
-
-        if not self._fs.exists(self.manifest_path):
-            # A crash between write_manifest's delete and rename leaves
-            # the (fully written) .tmp stranded while the manifest is
-            # gone — finish the swap instead of mistaking a committed
-            # run for a fresh one. A .tmp that doesn't parse is a crash
-            # DURING the tmp write; the real manifest was still present
-            # then, so reaching here means nothing was committed: drop it.
-            tmp = self.manifest_path + ".tmp"
-            if self._fs.exists(tmp):
-                try:
-                    params = json.loads(self._fs.read_bytes(tmp).decode("utf-8"))
-                except ValueError:
-                    self._fs.delete(tmp)
-                    return None
-                self._fs.rename(tmp, self.manifest_path)
-                return params
+        data = self.read_bytes(_MANIFEST)
+        if data is not None:
+            return json.loads(data)
+        # A crash between write_manifest's delete and rename leaves the
+        # (fully written) .tmp stranded while the manifest is gone —
+        # finish the swap instead of mistaking a committed run for a
+        # fresh one. A .tmp that doesn't parse is a crash DURING the tmp
+        # write; the real manifest was still present then, so reaching
+        # here means nothing was committed: drop it.
+        data = self.read_bytes(_MANIFEST_TMP)
+        if data is None:
             return None
-        return json.loads(self._fs.read_bytes(self.manifest_path).decode("utf-8"))
+        try:
+            params = json.loads(data)
+        except ValueError:
+            self._delete(_MANIFEST_TMP)
+            return None
+        self._filesystem.move(self._apath(_MANIFEST_TMP), self._apath(_MANIFEST))
+        return params
 
     def check_manifest(self, params: dict) -> None:
         """Refuse a resume whose parameters differ from the committed
@@ -321,9 +295,7 @@ class CheckpointManager:
     # -- lineage ----------------------------------------------------------
 
     def lineage(self) -> Optional[DataFrame]:
-        if not any(
-            name.endswith(".parquet") for name in self._fs.list_names(self.lineage_dir)
-        ):
+        if not self._parquet_files("lineage"):
             return None
         try:
             return (
@@ -347,7 +319,7 @@ class CheckpointManager:
         import pyarrow.dataset as ds
 
         schema = _lineage_arrow_schema()
-        files = self._parquet_files(self.lineage_dir)
+        files = self._parquet_files("lineage")
         if not files:
             table = schema.empty_table()
             return table.select(columns) if columns is not None else table
@@ -356,7 +328,7 @@ class CheckpointManager:
             pred &= ds.field("stage") == stage
         if chunk is not None:
             pred &= ds.field("chunk") == chunk
-        dataset = ds.dataset(files, schema=schema, format="parquet", filesystem=self._arrow()[0])
+        dataset = ds.dataset(files, schema=schema, format="parquet", filesystem=self._filesystem)
         return dataset.to_table(columns=columns, filter=pred)
 
     def done_chunks(self, stage: str) -> Set[int]:
@@ -373,11 +345,11 @@ class CheckpointManager:
         wall_ms: int,
         run_id: str,
     ) -> None:
-        """One fragment per commit — append-only, crash-safe (staged as
-        a driver-local temp file, then uploaded through the Hadoop
-        FileSystem; readers glob ``*.parquet`` so a crashed upload is
-        invisible). Lineage is driver-side metadata (one row per
-        bucket) — no Spark job per commit.
+        """One fragment per commit — append-only, crash-safe (written
+        under a ``.tmp`` name, then moved into place; readers glob
+        ``*.parquet`` so a crashed write is invisible). Lineage is
+        driver-side metadata (one row per bucket) — no Spark job per
+        commit.
 
         An empty chunk (e.g. everything pruned by the warc_ts filter)
         still records one sentinel row (bucket = -1) so resume can skip
@@ -387,7 +359,6 @@ class CheckpointManager:
 
         if not per_bucket:
             per_bucket = [{"bucket": -1, "n_docs": 0, "n_failed": 0, "cpu_ms": 0.0}]
-        self._fs.mkdirs(self.lineage_dir)
         finished_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         n = len(per_bucket)
         table = pa.table(
@@ -405,15 +376,13 @@ class CheckpointManager:
             },
             schema=_lineage_arrow_schema(),
         )
-        fragment = f"{self.lineage_dir}/part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-        fd, local_tmp = tempfile.mkstemp(suffix=".parquet")
-        os.close(fd)
-        pq.write_table(table, local_tmp)
-        # Upload under a non-.parquet name, then rename into place: a
-        # crash mid-upload must not leave a truncated *.parquet that the
-        # lineage glob would pick up and choke on at every later resume.
-        self._fs.put_local(local_tmp, fragment + ".tmp")
-        self._fs.rename(fragment + ".tmp", fragment)
+        self._filesystem.create_dir(self._apath("lineage"), recursive=True)
+        fragment = self._apath(f"lineage/part-{run_id}-{uuid.uuid4().hex[:8]}.parquet")
+        # Write under a non-.parquet name, then move into place: a crash
+        # mid-write must not leave a truncated *.parquet that the lineage
+        # glob would pick up and choke on at every later resume.
+        pq.write_table(table, fragment + ".tmp", filesystem=self._filesystem)
+        self._filesystem.move(fragment + ".tmp", fragment)
 
     # -- stage tables -------------------------------------------------------
 
@@ -421,11 +390,10 @@ class CheckpointManager:
         """Atomic idempotent chunk commit: plain overwrite of the
         chunk's own partition directory (one file per task, no extra
         shuffle, no per-bucket sliver files)."""
-        df.write.mode("overwrite").parquet(self._chunk_path(name, chunk))
+        df.write.mode("overwrite").parquet(self.path(_chunk(name, chunk)))
 
     def read_chunk(self, name: str, chunk: int) -> DataFrame:
-        self._recover_chunk(name, chunk)
-        return self.spark.read.parquet(self._chunk_path(name, chunk))
+        return self.spark.read.parquet(self.path(_chunk(name, chunk)))
 
     def read_chunk_arrow(self, name: str, chunk: int, columns: List[str], filter=None):
         """:meth:`read_chunk` on the driver with ``pyarrow.dataset``: the
@@ -434,127 +402,58 @@ class CheckpointManager:
         with no part file raises ``FileNotFoundError``."""
         import pyarrow.dataset as ds
 
-        self._recover_chunk(name, chunk)
-        path = self._chunk_path(name, chunk)
-        files = self._parquet_files(path)
+        files = self._parquet_files(_chunk(name, chunk))
         if not files:
-            raise FileNotFoundError(f"{path} holds no parquet part file")
-        dataset = ds.dataset(files, format="parquet", filesystem=self._arrow()[0])
+            raise FileNotFoundError(
+                f"{self.path(_chunk(name, chunk))} holds no parquet part file"
+            )
+        dataset = ds.dataset(files, format="parquet", filesystem=self._filesystem)
         return dataset.to_table(columns=columns, filter=filter)
 
-    def _arrow(self):
-        if self._afs is None:
-            self._afs = _arrow_fs(self.root)
-        return self._afs
-
-    def _parquet_files(self, path: str) -> List[str]:
+    def _parquet_files(self, name: str) -> List[str]:
         """pyarrow paths of the ``*.parquet`` files directly under
-        ``path`` (a ``root``-prefixed path): no ``_SUCCESS``, ``.crc``,
-        ``.tmp``, hidden file or ``_temporary/`` entry."""
-        from pyarrow import fs as pafs
-
-        fs, base = self._arrow()
-        selector = pafs.FileSelector(base + path[len(self.root):], allow_not_found=True)
+        ``{root}/{name}``: no ``_SUCCESS``, ``.crc``, ``.tmp``, hidden
+        file or ``_temporary/`` entry."""
+        selector = pafs.FileSelector(self._apath(name), allow_not_found=True)
         return sorted(
-            info.path for info in fs.get_file_info(selector)
+            info.path for info in self._filesystem.get_file_info(selector)
             if info.type == pafs.FileType.File
             and info.base_name.endswith(".parquet")
             and not info.base_name.startswith((".", "_"))
         )
 
-    def _recover_chunk(self, name: str, chunk: int) -> None:
-        """Repair any window an interrupted :meth:`upsert_chunk` swap can
-        leave behind (ADVICE round 2: between the two renames the chunk
-        directory does not exist). The swap protocol is
-        merged→staging, live→retired, staging→live, drop retired;
-        every crash point is distinguishable from the three markers:
-
-        * live exists  → any leftover staging is a pre-swap attempt
-          (discard; the upsert was never acknowledged) and any leftover
-          retired is post-swap debris (discard);
-        * live missing + staging complete (``_SUCCESS``) → crash between
-          the renames: finish the swap;
-        * live missing + staging incomplete → crash mid-write after the
-          retire (shouldn't occur under the current ordering, kept as a
-          catch-all): restore the retired original.
-        """
-        path = self._chunk_path(name, chunk)
-        staging, retired = path + ".staging", path + ".old"
-        if self._fs.exists(path):
-            if self._fs.exists(staging):
-                self._fs.delete(staging)
-            if self._fs.exists(retired):
-                self._fs.delete(retired)
-            return
-        if self._fs.exists(staging) and self._fs.exists(f"{staging}/_SUCCESS"):
-            self._fs.rename(staging, path)
-            if self._fs.exists(retired):
-                self._fs.delete(retired)
-        elif self._fs.exists(retired):
-            if self._fs.exists(staging):
-                self._fs.delete(staging)
-            self._fs.rename(retired, path)
-
-    def upsert_chunk(
-        self, df: DataFrame, name: str, chunk: int, keys: List[str]
-    ) -> None:
-        """MERGE-INTO-shaped upsert into one chunk directory (S10, the
-        reference's ON CONFLICT DO UPDATE,
-        /root/reference/src/ocr/extraction.py:524-548): matched keys are
-        replaced by the update rows, unmatched existing rows survive,
-        new keys insert. On Iceberg this is exactly
-
-            MERGE INTO t USING u ON <keys>
-            WHEN MATCHED THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *
-
-        ; on plain parquet the merged relation is recomputed and swapped
-        in via staging + two renames. The window between the renames is
-        NOT atomic — a crash there leaves the chunk directory absent —
-        but every window is repaired by :meth:`_recover_chunk`, which
-        runs before each read and each upsert, so no committed data is
-        ever stranded."""
-        self._recover_chunk(name, chunk)
-        path = self._chunk_path(name, chunk)
-        if not self._fs.exists(path):
-            df.write.mode("overwrite").parquet(path)
-            return
-        merged = merge_upsert(self.spark.read.parquet(path), df, keys)
-        staging = path + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        retired = path + ".old"
-        self._fs.rename(path, retired)
-        self._fs.rename(staging, path)
-        self._fs.delete(retired)
-
     def read(self, name: str) -> DataFrame:
-        """Whole stage table across chunks; ``chunk`` becomes a
-        discovered partition column usable for pruning. Any
-        ``chunk=NNNN.old`` / ``.staging`` debris from an interrupted
-        upsert swap is repaired first — partition discovery would
-        otherwise list the debris as its own partition value and
-        double-count the chunk."""
-        for entry in self._fs.list_names(f"{self.root}/{name}"):
-            base, dot, suffix = entry.rpartition(".")
-            if dot and suffix in ("old", "staging") and base.startswith("chunk="):
-                self._recover_chunk(name, int(base.split("=", 1)[1]))
-        return self.spark.read.option("basePath", f"{self.root}/{name}").parquet(
-            f"{self.root}/{name}"
+        """The committed part of a whole stage table: the ``chunk=NNNN``
+        directories of the chunks the lineage says done, with ``chunk``
+        kept as a partition column usable for pruning. A chunk directory
+        without a done lineage row (a crashed chunk's partial write) is
+        never read. No committed chunk raises ``FileNotFoundError``."""
+        chunks = sorted(set(self.read_lineage(columns=["chunk"]).column("chunk").to_pylist()))
+        if not chunks:
+            raise FileNotFoundError(f"{self.path(name)} has no committed chunk")
+        return self.spark.read.option("basePath", self.path(name)).parquet(
+            *(self.path(_chunk(name, c)) for c in chunks)
         )
 
     def path(self, name: str) -> str:
         return f"{self.root}/{name}"
 
-    def _chunk_path(self, name: str, chunk: int) -> str:
-        return f"{self.root}/{name}/chunk={chunk:04d}"
+
+def _chunk(name: str, chunk: int) -> str:
+    return f"{name}/chunk={chunk:04d}"
 
 
 def merge_upsert(existing: DataFrame, updates: DataFrame, keys: List[str]) -> DataFrame:
-    """The MERGE relation: updates win on key match, unmatched existing
-    rows survive, new keys insert. One anti-join (shuffle on the key) +
-    a union — at scale the anti-join's update side is usually tiny and
-    broadcasts; never a full rewrite of unmatched data beyond the
-    touched partitions when paired with partition-scoped upsert_chunk."""
+    """The MERGE relation (S10, the reference's ``ON CONFLICT DO
+    UPDATE``): updates win on key match, unmatched existing rows
+    survive, new keys insert. On Iceberg this is exactly
+
+        MERGE INTO t USING u ON <keys>
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+
+    One anti-join (shuffle on the key) + a union — at scale the
+    anti-join's update side is usually tiny and broadcasts."""
     survivors = existing.join(updates.select(*keys).distinct(), keys, "left_anti")
     return updates.unionByName(survivors)
 

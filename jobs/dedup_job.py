@@ -123,10 +123,8 @@ def run_dedup(
         # Migration shim (ADVICE round 4): manifests committed before
         # cc_algorithm became stage identity lack the key; treat the
         # absence as the then-only algorithm ('label') and rewrite the
-        # manifest in place — same pattern as run_pipeline's ts
-        # canonicalization shim — so in-flight dedup runs stay
-        # resumable instead of failing the comparison with
-        # (None, 'label').
+        # manifest in place, so in-flight dedup runs stay resumable
+        # instead of failing the comparison with (None, 'label').
         committed = ckpt.read_manifest()
         if committed is not None and "cc_algorithm" not in committed:
             committed["cc_algorithm"] = "label"
@@ -205,14 +203,8 @@ def run_dedup(
     if quality_min is not None or sample_rate is not None:
         cur_params = json.dumps(
             {"quality_min": quality_min, "sample_rate": sample_rate}, sort_keys=True
-        )
-        marker = f"{ckpt.root}/curated_params.json"
-        prev = (
-            ckpt._fs.read_bytes(marker).decode("utf-8")
-            if ckpt._fs.exists(marker)
-            else None
-        )
-        if prev != cur_params or not have("curated"):
+        ).encode("utf-8")
+        if ckpt.read_bytes("curated_params.json") != cur_params or not have("curated"):
             from credit_ocr_backend_spark.operators import sampling as SP
             from credit_ocr_backend_spark.operators import textstats as T
 
@@ -224,7 +216,7 @@ def run_dedup(
             if sample_rate is not None:
                 out_df = SP.deterministic_sample(out_df, sample_rate, id_col, seed="cur")
             commit("curated", out_df)
-            ckpt._fs.write_bytes(marker, cur_params.encode("utf-8"))
+            ckpt.write_bytes("curated_params.json", cur_params)
 
     n_docs = docs.count()
     return {

@@ -9,14 +9,15 @@ Cluster usage (north rule packaging):
         --ts-min 2025-01-01 --ts-max 2025-02-01 \
         --buckets 4096 --chunks 64 [--resume]
 
-Both --pages and --out accept any URI whose scheme has a Hadoop
-FileSystem implementation on the classpath (file://, hdfs://, s3a://
-with the aws connector jars, ...): chunk data is written by Spark and
-lineage/manifest go through the same Hadoop FileSystem client, so
-resume state always lands on the same store as the data.
-CheckpointManager still fails fast at startup for a scheme with no
-loadable FileSystem (e.g. s3:// without jars) rather than silently
-divorcing resume state from data.
+--pages accepts any URI whose scheme has a Hadoop FileSystem
+implementation on the classpath (file://, hdfs://, s3a:// with the aws
+connector jars, ...). --out needs that too, since Spark writes the chunk
+data through Hadoop, and also a scheme pyarrow can open (local,
+file://, s3a:// as pyarrow's s3://, hdfs:// with libhdfs): the manifest
+and lineage go through pyarrow.fs onto the same store as the data.
+CheckpointManager fails fast at startup when either is missing (e.g.
+s3:// without the jars) rather than silently divorcing resume state
+from data.
 
 Local smoke:
 

@@ -141,10 +141,11 @@ def test_arrow_reader_opens_local_roots_and_names_unknown_schemes(monkeypatch):
 
 
 def test_checkpoint_file_scheme_roundtrip(spark, tmp_path):
-    """The Hadoop-FS code path end-to-end on an explicit file:// scheme
-    URI (the scheme-generic route an hdfs:///s3a:// out_root takes):
-    manifest write/read/check, lineage append + done_chunks, chunk
-    write/read and MERGE upsert all through one CheckpointManager."""
+    """One CheckpointManager on an explicit file:// scheme URI (the
+    route an hdfs:// or s3a:// out_root takes): manifest
+    write/read/check, lineage append + done_chunks, Spark's and
+    pyarrow's lineage readers agreeing on the fragments pyarrow wrote,
+    and a chunk write/read round trip."""
     from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
 
     mgr = CheckpointManager(spark, f"file://{tmp_path}/ckpt")
@@ -162,50 +163,33 @@ def test_checkpoint_file_scheme_roundtrip(spark, tmp_path):
     assert mgr.done_chunks("extracted") == {0, 1}
     assert -1 in mgr.done_buckets("extracted")
 
+    def key(row):
+        return (row["chunk"], row["bucket"], row["n_docs"], row["run_id"])
+
+    via_spark = sorted(key(r.asDict()) for r in mgr.lineage().collect())
+    via_arrow = sorted(key(r) for r in mgr.read_lineage().to_pylist())
+    assert via_spark == via_arrow == [(0, 0, 3, "runA"), (1, -1, 0, "runA")]
+
     base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     mgr.write_chunk(base, "docs", 0)
-    upd = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    mgr.upsert_chunk(upd, "docs", 0, ["k"])
     got = {r["k"]: r["v"] for r in mgr.read_chunk("docs", 0).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
+    assert got == {1: "a", 2: "b"}
 
 
-def test_upsert_crash_window_recovery(spark, tmp_path):
-    """ADVICE round 2: a crash between the two swap renames leaves the
-    chunk directory absent while lineage says done. _recover_chunk must
-    repair every window before the next read/upsert."""
-    import os
-    import shutil
+def test_unopenable_arrow_root_fails_at_construction(spark, tmp_path, monkeypatch):
+    """A root Hadoop opens but pyarrow cannot (e.g. hdfs:// without
+    libhdfs) is refused when the manager is built, before anything is
+    written — not at the first resume or lookup."""
+    from credit_ocr_backend_spark.sources import checkpoint
 
-    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+    def no_arrow_fs(root):
+        raise ValueError(f"out_root '{root}': pyarrow cannot open it")
 
-    mgr = CheckpointManager(spark, str(tmp_path / "rec"))
-    base = spark.createDataFrame([(1, "a")], "k long, v string")
-    mgr.write_chunk(base, "docs", 0)
-    path = mgr._chunk_path("docs", 0)
-
-    # window 1: staging complete, live retired, swap not finished
-    upd = spark.createDataFrame([(1, "A"), (2, "b")], "k long, v string")
-    from credit_ocr_backend_spark.sources.checkpoint import merge_upsert
-
-    merge_upsert(spark.read.parquet(path), upd, ["k"]).write.mode("overwrite").parquet(path + ".staging")
-    os.rename(path, path + ".old")  # simulate crash right here
-    got = {r["k"]: r["v"] for r in mgr.read_chunk("docs", 0).collect()}
-    assert got == {1: "A", 2: "b"}
-    assert not os.path.exists(path + ".staging") and not os.path.exists(path + ".old")
-
-    # window 2: crash after swap, retired not yet dropped
-    shutil.copytree(path, path + ".old")
-    got = {r["k"]: r["v"] for r in mgr.read_chunk("docs", 0).collect()}
-    assert got == {1: "A", 2: "b"}
-    assert not os.path.exists(path + ".old")
-
-    # window 3: incomplete staging (no _SUCCESS), live retired → restore original
-    os.makedirs(path + ".staging")
-    open(path + ".staging/part-broken.parquet", "w").close()
-    os.rename(path, path + ".old")
-    got = {r["k"]: r["v"] for r in mgr.read_chunk("docs", 0).collect()}
-    assert got == {1: "A", 2: "b"}
+    monkeypatch.setattr(checkpoint, "_arrow_fs", no_arrow_fs)  # no store is contacted
+    root = tmp_path / "unopenable"
+    with pytest.raises(ValueError, match="pyarrow cannot open"):
+        checkpoint.CheckpointManager(spark, str(root))
+    assert not root.exists()
 
 
 def test_null_html_recorded_as_failed(spark, tmp_path):
@@ -352,48 +336,17 @@ def test_lineage_fragment_upload_is_atomic(spark, tmp_path):
     assert mgr.done_chunks("extracted") == {0}
 
 
-def test_whole_table_read_sweeps_upsert_debris(spark, tmp_path):
-    """read() must repair chunk=NNNN.old/.staging debris before
-    partition discovery: a leftover .old directory would otherwise be
-    listed as its own partition value and double-count the chunk."""
-    import os
-    import shutil
-
+def test_resume_refuses_raw_ts_spelling_in_manifest(spark, tmp_path):
+    """The manifest pins the canonical ts bound; a manifest holding a
+    raw spelling of the same instant is a parameter mismatch, not
+    rewritten in place."""
     from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
-
-    mgr = CheckpointManager(spark, str(tmp_path / "sweep"))
-    mgr.write_chunk(spark.createDataFrame([(1, "a")], "k long, v string"), "docs", 0)
-    mgr.write_chunk(spark.createDataFrame([(2, "b")], "k long, v string"), "docs", 1)
-
-    # crash window: swap finished but retired copy not yet dropped
-    path1 = mgr._chunk_path("docs", 1)
-    local1 = path1.replace("file://", "")
-    shutil.copytree(local1, local1 + ".old")
-
-    got = mgr.read("docs")
-    assert got.count() == 2  # not 3: the .old copy must not double-count
-    assert {r["k"] for r in got.collect()} == {1, 2}
-    assert not os.path.exists(local1 + ".old")
-
-
-def test_resume_accepts_legacy_raw_ts_spelling(spark, tmp_path):
-    """Manifests written before ts canonicalization pinned the raw
-    bound spelling; resuming with an equal-instant spelling must
-    migrate the manifest instead of refusing."""
-    import json
-    import os
-
     from credit_ocr_backend_spark.sources.pages import write_pages
 
     pages = str(tmp_path / "pages")
     write_pages(spark, pages, n_docs=20, partitions=2)
-    out = str(tmp_path / "legacy")
+    out = str(tmp_path / "raw")
     run_pipeline(spark, pages, out, n_chunks=1, parallelism=2, ts_min="2024-01-01")
-
-    # simulate a legacy manifest: rewrite the pinned bound to raw form
-    # (through the same Hadoop FS the manager uses - a direct local
-    # write would orphan the .crc checksum sidecar)
-    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
 
     mgr = CheckpointManager(spark, out)
     m = mgr.read_manifest()
@@ -401,8 +354,9 @@ def test_resume_accepts_legacy_raw_ts_spelling(spark, tmp_path):
     m["ts_min"] = "2024-01-01"
     mgr.write_manifest(m)
 
-    res = run_pipeline(
-        spark, pages, out, n_chunks=1, parallelism=2,
-        ts_min="2024-01-01", resume=True,
-    )
-    assert res.chunks_skipped == 1 and res.chunks_run == 0
+    with pytest.raises(ValueError, match="parameter mismatch"):
+        run_pipeline(
+            spark, pages, out, n_chunks=1, parallelism=2,
+            ts_min="2024-01-01", resume=True,
+        )
+    assert mgr.read_manifest()["ts_min"] == "2024-01-01"

@@ -1,5 +1,5 @@
 """S11 side outputs (xlsx/PNG, import-gated encoders) and the S10
-MERGE-shaped upsert."""
+MERGE relation."""
 
 from __future__ import annotations
 
@@ -16,10 +16,7 @@ from credit_ocr_backend_spark.sinks import (  # noqa: E402
     export_results_xlsx,
     render_annotated_png,
 )
-from credit_ocr_backend_spark.sources.checkpoint import (  # noqa: E402
-    CheckpointManager,
-    merge_upsert,
-)
+from credit_ocr_backend_spark.sources.checkpoint import merge_upsert  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -77,17 +74,3 @@ def test_merge_upsert_semantics(spark):
     )
     merged = {r["k"]: r["v"] for r in merge_upsert(existing, updates, ["k"]).collect()}
     assert merged == {1: "a", 2: "B", 3: "c", 4: "D"}
-
-
-def test_upsert_chunk_atomic_swap(spark, tmp_path):
-    ckpt = CheckpointManager(spark, str(tmp_path / "out"))
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    ckpt.upsert_chunk(base, "docs", 0, ["k"])
-    upd = spark.createDataFrame([(2, "B"), (3, "C")], "k long, v string")
-    ckpt.upsert_chunk(upd, "docs", 0, ["k"])
-    rows = {r["k"]: r["v"] for r in ckpt.read_chunk("docs", 0).collect()}
-    assert rows == {1: "a", 2: "B", 3: "C"}
-    # idempotent: same upsert again changes nothing
-    ckpt.upsert_chunk(upd, "docs", 0, ["k"])
-    rows2 = {r["k"]: r["v"] for r in ckpt.read_chunk("docs", 0).collect()}
-    assert rows2 == rows

@@ -546,7 +546,9 @@ def test_crash_window_leaves_chunk_uncommitted(
     crashed = [u for u in urls if url_bucket(u, 8) >= 6]
     assert crashed
 
-    assert CheckpointManager(spark, out).done_chunks("extracted") == {0, 1, 2}
+    ckpt = CheckpointManager(spark, out)
+    assert ckpt.done_chunks("extracted") == {0, 1, 2}
+    assert {r["url"] for r in ckpt.read("docs").select("url").collect()} == set(urls) - set(crashed)
     assert all(doc_status(spark, out, u) is None for u in crashed)
     got = {r["url"] for r in doc_status_bulk(spark, out, urls).collect()}
     assert got == set(urls) - set(crashed)
