@@ -17,8 +17,7 @@ Two strictly separated layers:
   per-document semantics. This is what the pytest parity suite runs.
 * the Spark packages (``operators``, ``sources``, ``functions``,
   ``plans``) — the distribution shell: Arrow-batched UDF stages,
-  partitioning/salting, checkpoint + lineage + resume, and the
-  driver-contract queries.
+  partitioning/salting, checkpoint + lineage + resume.
 """
 
 __version__ = "0.1.0"

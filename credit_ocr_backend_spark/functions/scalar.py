@@ -43,7 +43,7 @@ def clean_currency(col: Column | str) -> Column:
         F.translate(c, "€ ", ""), ",", "."
     )
     digits = F.regexp_replace(cleaned, r"[^0-9.]", "")
-    return digits.cast("double")
+    return digits.try_cast("double")
 
 
 def clean_area(col: Column | str) -> Column:

@@ -7,9 +7,10 @@ right split is: compute the DRAW PLAN — field mapping, colors, scaled
 pixel coordinates, label text — distributed and JVM-side (everything
 below is built-in when/transform chains, whole-stage codegen), and
 leave only the final rasterization to a PIL-gated renderer
-(sinks.export). The draw plan is a plain DataFrame: testable,
-oracle-checkable, and the only thing a 10^12-row job would ever
-materialize (you rasterize the handful of pages a human looks at).
+(sinks.export). The draw plan is a plain DataFrame: testable against
+the reference-generated golden, and the only thing a 10^12-row job
+would ever materialize (you rasterize the handful of pages a human
+looks at).
 
 Reference parity, cited per function:
 * confidence_color      — pdf_visualizer.py:20-28 (hex palette)
@@ -72,11 +73,10 @@ def hex_to_rgb(hex_col: Column | str) -> Column:
 
 
 def rgb_csv(arr: Column | str) -> Column:
-    """Scalar 'r,g,b' rendering of an RGB triple.  The external
-    correctness harness canonicalizes result frames with pandas, which
-    cannot sort/hash list cells — contract queries therefore emit this
-    string form while the library API keeps the true array (the
-    renderer in sinks.export consumes arrays)."""
+    """Scalar 'r,g,b' rendering of an RGB triple — the form the
+    draw-plan golden (tests/goldens/expected_draw_plan.parquet) stores,
+    while the library API keeps the true array (the renderer in
+    sinks.export consumes arrays)."""
     a = F.col(arr) if isinstance(arr, str) else arr
     return F.array_join(F.transform(a, lambda x: x.cast("string")), ",")
 

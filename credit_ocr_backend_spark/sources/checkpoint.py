@@ -443,20 +443,5 @@ def _chunk(name: str, chunk: int) -> str:
     return f"{name}/chunk={chunk:04d}"
 
 
-def merge_upsert(existing: DataFrame, updates: DataFrame, keys: List[str]) -> DataFrame:
-    """The MERGE relation (S10, the reference's ``ON CONFLICT DO
-    UPDATE``): updates win on key match, unmatched existing rows
-    survive, new keys insert. On Iceberg this is exactly
-
-        MERGE INTO t USING u ON <keys>
-        WHEN MATCHED THEN UPDATE SET *
-        WHEN NOT MATCHED THEN INSERT *
-
-    One anti-join (shuffle on the key) + a union — at scale the
-    anti-join's update side is usually tiny and broadcasts."""
-    survivors = existing.join(updates.select(*keys).distinct(), keys, "left_anti")
-    return updates.unionByName(survivors)
-
-
 def new_run_id() -> str:
     return uuid.uuid4().hex[:12]

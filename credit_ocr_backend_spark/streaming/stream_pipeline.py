@@ -12,10 +12,10 @@ Two entry points:
   dropped) — the canonical stateful-streaming operator the engine
   exposes for monitoring extraction throughput/quality over event time.
 * ``sessionize_stream`` — CUSTOM stateful operator via
-  ``applyInPandasWithState``: per-user gap sessionization with exactly
-  the batch ``sessionize`` contract-query semantics (gap > 30 min ⇒ new
-  session), Arrow-batched, state = one open session per key, event-time
-  timeout closes idle sessions when the watermark passes last_ts + gap.
+  ``applyInPandasWithState``: per-user gap sessionization (gap > 30
+  min ⇒ new session), Arrow-batched, state = one open session per
+  key, event-time timeout closes idle sessions when the watermark
+  passes last_ts + gap.
 
 Run with ``trigger(availableNow=True)`` for catch-up batch semantics or
 a processing-time trigger for continuous ingest.
@@ -77,7 +77,7 @@ SESSION_OUT_SCHEMA = (
 )
 SESSION_STATE_SCHEMA = "start_ms long, last_ms long, n_events long"
 
-SESSION_GAP_S = 1800  # 30 min — same contract as the batch `sessionize`
+SESSION_GAP_S = 1800  # 30 min
 
 
 def _sessionize_fn(key, pdf_iter, state):

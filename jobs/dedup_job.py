@@ -192,10 +192,10 @@ def run_dedup(
         keep = D.canonical_keep_list(docs.select(id_col), clusters, id_col)
         commit("keep_list", keep)
 
-    # Optional curation tail (the corpus_curation contract query, as a
-    # committed stage): quality floor + deterministic content-keyed
-    # sample over the keep-list survivors. Both are scan predicates /
-    # a semi-join against the keep-list — no extra corpus shuffle.
+    # Optional curation tail (a committed stage): quality floor +
+    # deterministic content-keyed sample over the keep-list survivors.
+    # Both are scan predicates / a semi-join against the keep-list — no
+    # extra corpus shuffle.
     # Identity = a sidecar marker, not the run manifest: resuming with
     # DIFFERENT curation params recomputes only this cheap stage (never
     # the upstream global joins), while a stale curated table can never

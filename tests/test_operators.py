@@ -1,6 +1,6 @@
 """Unit tests for the corpus-level operators (dedup / similarity /
-textstats) on tiny known inputs — value-level assertions independent of
-the DuckDB oracle harness."""
+textstats / sampling) and the scalar and visualization functions on
+tiny known inputs — value-level assertions."""
 
 from __future__ import annotations
 
@@ -202,6 +202,49 @@ def test_textstats_values(spark):
     assert stats[1]["fp"] == hashlib.md5(
         b"der hund und die katze und das haus").hexdigest()
     assert 0.0 <= stats[0]["quality"] <= 1.0
+
+
+def test_quality_score_values(spark):
+    """quality_score against an independent Python mirror of its
+    formula, plus hand-derived values: the length term saturates at 100
+    tokens, the stopword term at a 0.2 ratio, and a punctuation ratio
+    above 0.2 halves the score."""
+    import re
+
+    def ref(text):
+        n_tokens = len(re.split(r"\s+", text.strip(" ")))
+        n_punct = len(re.findall(r"[.,;:!?]", text))
+        low = text.lower()
+        n_stop = len(re.findall(r"\b(the|and|is|of|to|in|that)\b", low)) + len(
+            re.findall(r"\b(der|die|das|und|ist|nicht|mit)\b", low)
+        )
+        stop = min(round(n_stop / max(n_tokens, 1), 6) * 5, 1.0)
+        pen = 0.5 if round(n_punct / max(len(text), 1), 6) > 0.2 else 1.0
+        return round((0.6 * min(n_tokens / 100.0, 1.0) + 0.4 * stop) * pen, 6)
+
+    texts = {
+        0: "der hund und die katze und das haus",
+        1: " ".join(["the"] * 150),
+        2: "ok?! no... way!!",
+        3: "plain words without any marker here at all",
+        4: "The cat and the dog, in a house.",
+        5: "",
+        6: None,
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["q"]
+        for r in df.select("doc_id", T.quality_score("text").alias("q")).collect()
+    }
+    # least() skips NULLs, so a NULL text scores 1.0
+    assert got == {k: (1.0 if t is None else ref(t)) for k, t in texts.items()}
+    # 8 tokens, 5 stopwords: 0.6 * 0.08 + 0.4 * 1
+    assert got[0] == 0.448
+    assert got[1] == 1.0
+    # 3 tokens, no stopword, 7 punctuation marks in 16 chars: halved
+    assert got[2] == 0.009
+    # an empty text is one empty token
+    assert got[5] == 0.006
 
 
 # ---------------------------------------------------------------------------
@@ -432,27 +475,39 @@ def test_ivf_assign_covers_corpus_once(spark):
     assert own == cent_ids
 
 
-def test_simhash_near_dupes_matches_brute_force(spark):
-    """Banded pair search must find EXACTLY the Hamming<=3 pairs a
-    brute-force all-pairs comparison finds (pigeonhole losslessness at
-    4 bands), with the same hamming values."""
+def _assert_near_dupes_match_brute_force(spark, bits):
     from itertools import combinations
 
     docs = spark.createDataFrame(
         [(i, f"shared tokens alpha beta gamma delta doc{i % 4}") for i in range(24)],
         "doc_id long, text string",
     )
-    fp = {r["doc"]: r["simhash"] for r in D.simhash(docs, "doc_id", "text").collect()}
+    fp = {r["doc"]: r["simhash"] for r in D.simhash(docs, "doc_id", "text", bits=bits).collect()}
+
+    def hamming(a, b):
+        return bin((fp[a] ^ fp[b]) & ((1 << bits) - 1)).count("1")
+
     expected = {
-        (a, b, bin(fp[a] ^ fp[b]).count("1"))
-        for a, b in combinations(sorted(fp), 2)
-        if bin(fp[a] ^ fp[b]).count("1") <= 3
+        (a, b, hamming(a, b)) for a, b in combinations(sorted(fp), 2) if hamming(a, b) <= 3
     }
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in D.simhash_near_dupes(docs, "doc_id", "text").collect()
+        for r in D.simhash_near_dupes(docs, "doc_id", "text", bits=bits, bands=4).collect()
     }
     assert got == expected and expected  # non-empty by construction
+
+
+def test_simhash_near_dupes_matches_brute_force(spark):
+    """Banded pair search must find EXACTLY the Hamming<=3 pairs a
+    brute-force all-pairs comparison finds (pigeonhole losslessness at
+    4 bands), with the same hamming values."""
+    _assert_near_dupes_match_brute_force(spark, 16)
+
+
+def test_simhash_near_dupes64_matches_brute_force(spark):
+    """The same at the corpus-scale configuration: 64-bit fingerprints
+    in four 16-bit bands."""
+    _assert_near_dupes_match_brute_force(spark, 64)
 
 
 def test_simhash_near_dupes_star_guard_keeps_identical_docs_connected(spark):
@@ -818,6 +873,64 @@ def test_value_grouped_guard_adds_no_exchange(spark):
     keys2 = exchange_keys(plan2)
     assert any(k.startswith("band_id") for k in keys2), keys2
     assert not any("simhash#" in k for k in keys2), keys2
+
+
+def test_scalar_cleaning_functions(spark):
+    """The JVM-side cleaning functions: currency, digits-only number,
+    checkbox boolean and the n-stripping label normalizer, which must
+    agree with the core's Python normalize_label."""
+    from credit_ocr_backend_spark.core.fields import normalize_label
+    from credit_ocr_backend_spark.functions import scalar as S
+
+    rows = [
+        ("1234,56€", "3-MEDIUM", "[x] ja [ ] nein", "Gewünschte Finanzierungssumme?"),
+        ("4.200 €", "1.995", "[ ] ja [X] nein", "  Kaufpreis / Baukosten "),
+        ("3.500.000€", "no digits", "[ ] ja [ ] nein", "NAME?"),
+        (None, None, None, "Laufzeit"),
+    ]
+    df = spark.createDataFrame(rows, "cur string, num string, box string, label string")
+    got = [
+        tuple(r)
+        for r in df.select(
+            S.clean_currency("cur"),
+            S.clean_number("num"),
+            S.clean_boolean("box"),
+            S.normalize_label_col("label"),
+        ).collect()
+    ]
+    assert got == [
+        (1234.56, 3, True, "gewüschte fiazierugssumme"),
+        # every '[x]' counts, whatever box it ticks
+        (4.2, 1995, True, "kaufpreis / baukoste"),
+        # several dots yield NULL where the reference's float() raises
+        (None, None, False, "ame"),
+        (None, None, None, "laufzeit"),
+    ]
+    assert [g[3] for g in got] == [normalize_label(r[3]) for r in rows]
+
+
+def test_viz_confidence_colors(spark):
+    """The visualizer's two palettes: hex (gray for a missing
+    confidence, yellow mid tier) and the PNG path's RGB (a missing
+    confidence counts as 0.5, orange mid tier), with the hex → rgb →
+    'r,g,b' conversions."""
+    from credit_ocr_backend_spark.functions import viz
+
+    confs = [None, 0.0, 0.59, 0.6, 0.79, 0.8, 1.0]
+    df = spark.createDataFrame([(c,) for c in confs], "c double")
+    got = [
+        tuple(r)
+        for r in df.select(
+            viz.confidence_color("c"),
+            viz.rgb_csv(viz.hex_to_rgb(viz.confidence_color("c"))),
+            viz.confidence_color_rgb("c"),
+        ).collect()
+    ]
+    gray = ("#808080", "128,128,128")
+    red, yellow, green = ("#FF0000", "255,0,0"), ("#FFFF00", "255,255,0"), ("#00FF00", "0,255,0")
+    hexes = [gray, red, red, yellow, yellow, green, green]
+    rgbs = [[255, 0, 0]] * 3 + [[255, 165, 0]] * 2 + [[0, 255, 0]] * 2
+    assert got == [h + (rgb,) for h, rgb in zip(hexes, rgbs)]
 
 
 def test_canonical_url_differential(spark):

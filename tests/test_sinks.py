@@ -1,5 +1,4 @@
-"""S11 side outputs (xlsx/PNG, import-gated encoders) and the S10
-MERGE relation."""
+"""S11 side outputs (xlsx/PNG, import-gated encoders)."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from credit_ocr_backend_spark.sinks import (  # noqa: E402
     export_results_xlsx,
     render_annotated_png,
 )
-from credit_ocr_backend_spark.sources.checkpoint import merge_upsert  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -64,13 +62,3 @@ def test_render_annotated_png_or_drawplan_fallback(spark, tmp_path):
         ]
         assert payload["items"][0]["color_rgb"] == [0, 255, 0]
 
-
-def test_merge_upsert_semantics(spark):
-    existing = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    updates = spark.createDataFrame(
-        [(2, "B"), (4, "D")], "k long, v string"
-    )
-    merged = {r["k"]: r["v"] for r in merge_upsert(existing, updates, ["k"]).collect()}
-    assert merged == {1: "a", 2: "B", 3: "c", 4: "D"}

@@ -1,6 +1,9 @@
 """Spark-shell tests: distribution must not change a single byte.
 
 * Spark fused output ≡ pure-core output per url (SURVEY.md §5.2.3)
+* the committed docs, results and the staged run's draw plan for the
+  64 golden pages equal the reference-generated goldens
+  (tools/gen_expected_extraction.py)
 * staged mode (per-stage checkpoints) ≡ fused mode
 * resume: a failed chunk re-runs without recomputing committed
   buckets, and the final output equals a clean run (north rule)
@@ -9,6 +12,10 @@
 
 from __future__ import annotations
 
+from collections import Counter
+from pathlib import Path
+
+import pyarrow.parquet as pq
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -17,12 +24,15 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from credit_ocr_backend_spark.core import default_config, process_document  # noqa: E402
 from credit_ocr_backend_spark.core.document import dumps_compact  # noqa: E402
-from credit_ocr_backend_spark.operators.stages import _field_rows  # noqa: E402
+from credit_ocr_backend_spark.functions.viz import draw_plan, rgb_csv  # noqa: E402
+from credit_ocr_backend_spark.operators.stages import ITEMS_T, _field_rows  # noqa: E402
 from credit_ocr_backend_spark.plans.pipeline import run_pipeline  # noqa: E402
 from credit_ocr_backend_spark.plans.session import get_spark  # noqa: E402
-from credit_ocr_backend_spark.sources.pages import build_page, write_pages  # noqa: E402
+from credit_ocr_backend_spark.sources.pages import build_page, page_url, write_pages  # noqa: E402
 
 N_DOCS = 120
+N_GOLDEN = 64  # pages 0..63 are the pages of tests/goldens/expected_*.parquet
+GOLDENS = Path(__file__).resolve().parent / "goldens"
 
 
 @pytest.fixture(scope="module")
@@ -47,13 +57,30 @@ def _docs_map(spark, out_root):
     return {r["url"]: r for r in rows}
 
 
-def test_fused_matches_pure_core_bytes(spark, pages_path, tmp_path):
-    out = str(tmp_path / "out")
+def _assert_matches_golden(df, name):
+    """The golden pages' rows of ``df`` equal the golden table's rows as
+    a multiset; a mismatch lists the differing rows, url first."""
+    want = pq.read_table(GOLDENS / f"{name}.parquet")
+    golden_urls = [page_url(k) for k in range(N_GOLDEN)]
+    got = df.where(F.col("url").isin(golden_urls)).select(*want.column_names).collect()
+    assert Counter(tuple(r) for r in got) == Counter(
+        tuple(r.values()) for r in want.to_pylist()
+    )
+
+
+@pytest.fixture(scope="module")
+def fused_out(spark, pages_path, tmp_path_factory):
+    """One fused two-chunk run over the 120-page fixture, shared by the
+    pure-core and the reference-golden comparisons."""
+    out = str(tmp_path_factory.mktemp("fused") / "out")
     res = run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2)
     assert res.n_docs == N_DOCS
     assert res.n_failed == 0
+    return out
 
-    got = _docs_map(spark, out)
+
+def test_fused_matches_pure_core_bytes(spark, fused_out):
+    got = _docs_map(spark, fused_out)
     assert len(got) == N_DOCS
 
     cfg = default_config()
@@ -65,6 +92,18 @@ def test_fused_matches_pure_core_bytes(spark, pages_path, tmp_path):
         assert row["status"] == local["status"]
         assert row["extracted_text"] == local["extracted_text"]  # byte-identical
         assert row["fields_json"] == expected_json  # byte-identical
+
+
+def test_fused_matches_reference_goldens(spark, fused_out):
+    docs = spark.read.parquet(f"{fused_out}/docs").select(
+        "url",
+        "status",
+        F.size("missing_fields").alias("n_missing"),
+        F.length("extracted_text").alias("text_len"),
+    )
+    _assert_matches_golden(docs, "expected_extraction_docs")
+    results = spark.read.parquet(f"{fused_out}/results")
+    _assert_matches_golden(results, "expected_extraction_results")
 
 
 def test_staged_equals_fused(spark, pages_path, tmp_path):
@@ -86,6 +125,15 @@ def test_staged_equals_fused(spark, pages_path, tmp_path):
     normalized = spark.read.parquet(f"{staged_out}/normalized")
     assert parsed.count() == N_DOCS
     assert normalized.count() == N_DOCS
+
+    # the annotation draw plan over the staged items
+    items = normalized.select(
+        "url", F.explode(F.from_json("items_json", ITEMS_T)).alias("it")
+    ).select("url", "it.*")
+    plan = draw_plan(items, list(default_config().field_mappings.items()))
+    _assert_matches_golden(
+        plan.withColumn("color_rgb", rgb_csv("color_rgb")), "expected_draw_plan"
+    )
 
 
 def test_resume_skips_committed_chunks(spark, pages_path, tmp_path):
