@@ -79,10 +79,9 @@ def process_document(
         "extraction": None,
     }
     try:
-        # include_words=False: the fused pipeline's consumers only read
-        # line tokens (see parse_page's soundness note); the staged
-        # pipeline — whose tokens_json serializes the full OCR-shaped
-        # stream — parses via make_parse_stage with the default.
+        # include_words=False: every consumer below only reads line
+        # tokens (see parse_page's soundness note); callers that want
+        # the full OCR-shaped stream call parse_page with the default.
         tokens, extracted_text = parse_page(html, include_words=False)
         result["tokens"] = tokens
         result["extracted_text"] = extracted_text

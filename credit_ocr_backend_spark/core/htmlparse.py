@@ -973,8 +973,7 @@ def parse_page(
     can never fire, and every other consumer (pair_lines, extract's
     line_scan, extracted_text) filters to type == "line". The
     layout-words/PDF path ignores the flag — its payloads may carry
-    None confidences, so its word tokens stay load-bearing. The staged
-    pipeline always uses the default (tokens_json serializes words)."""
+    None confidences, so its word tokens stay load-bearing."""
     if isinstance(html, bytes):
         html = html.decode("utf-8", errors="replace")
 

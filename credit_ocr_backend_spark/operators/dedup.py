@@ -682,78 +682,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
     return voted.select("doc", fingerprint.alias("simhash"))
 
 
-def simhash_token_votes(text: Column | str, word: int) -> Column:
-    """Per-ROW SimHash vote vector for md5 word ``word``: an array of
-    16 ints where element ``i`` is Σ_tokens (±1 by bit ``i`` of the
-    token's 16-bit md5 word). One ``aggregate`` pass over the token
-    array — the md5 is evaluated once per token, and all 16 bit votes
-    accumulate in a single array fold, so no explode/groupBy shuffle
-    is needed. This is the shuffle-free building block the STREAMING
-    near-dup guard requires (a stateless per-row fingerprint before
-    the stateful band join); batch corpora should keep using
-    :func:`simhash` (explode + partial aggs — the row-wise
-    higher-order-function shape measured slower at corpus scale for
-    MinHash, BENCH/PLANS.md round 4).
-
-    Materialize the result in its OWN select before consuming it with
-    :func:`simhash_from_votes` — Catalyst inlines expressions into
-    repeated references (same caveat as :func:`shingles_from_tokens`).
-
-    Vote arithmetic is integer and order-independent, so the votes —
-    and therefore the assembled fingerprint — are byte-identical to
-    :func:`simhash`'s for every non-NULL text (NULL text yields NULL
-    votes; ``simhash`` drops such docs entirely because exploding a
-    NULL token array emits no rows — filter NULLs out upstream for
-    strict parity)."""
-    toks = words_col(text)
-    hs = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1 + 4 * word, 4), 16, 10).cast(
-            "long"
-        ),
-    )
-
-    def contrib(h):
-        # ±1 per bit of this token's hash word (shift amounts are
-        # Python ints — the shiftright wrapper rejects Column shifts)
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for b in range(16)
-            ]
-        )
-
-    return F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), 16),
-        lambda acc, h: F.zip_with(acc, contrib(h), lambda a, c: a + c),
-    )
-
-
-def simhash_from_votes(vote_cols, bits: int = SIMHASH_BITS) -> Column:
-    """Assemble the per-row fingerprint from materialized vote arrays
-    (one per md5 word, from :func:`simhash_token_votes`): bit ``b`` is
-    set iff ``votes[b // 16][b % 16] >= 0`` — the same ≥ 0 rule and
-    the same signed bit-63 additive term as :func:`simhash`, so the
-    values agree exactly."""
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    cols = [F.col(c) if isinstance(c, str) else c for c in vote_cols]
-    if len(cols) != (bits + 15) // 16:
-        raise ValueError(
-            f"need {(bits + 15) // 16} vote arrays for bits={bits}, got {len(cols)}"
-        )
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        fp = fp + F.when(
-            F.element_at(cols[b // 16], b % 16 + 1) >= 0,
-            F.lit(simhash_bit_term(b)),
-        ).otherwise(F.lit(0))
-    return fp
-
-
 def simhash_near_dupes(
     df: DataFrame,
     id_col: str,

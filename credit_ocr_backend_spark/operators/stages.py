@@ -1,19 +1,16 @@
-"""The four Arrow-batched pipeline stages (zero per-row Python on the
-hot path — every stage is ``mapInPandas`` over Arrow record batches).
+"""The Arrow-batched pipeline stage (zero per-row Python on the hot
+path — the stage is ``mapInPandas`` over Arrow record batches).
 
 Stage semantics are the pure core's (credit_ocr_backend_spark.core);
-these wrappers only do batching, schema projection, per-document
-failure isolation and wall-clock metering. Mapping to the reference:
-
-* parse     ≙ perform_ocr        (/root/reference/src/ocr/extraction.py:99-154)
-* normalize ≙ postprocess_ocr    (:157-209)
-* extract   ≙ run_llm_extraction (:212-305, LLM replaced by the
-  deterministic alias mapper)
-* fused     ≙ the direct library pipeline
-  (/root/reference/tests/test_extraction.py:513-575) in one pass —
-  the scale-preferred mode: it never materializes the ~10× token
-  amplification between stages; resumability is kept at bucket
-  granularity instead of stage granularity.
+this wrapper only does batching, schema projection, per-document
+failure isolation and wall-clock metering. The fused stage runs the
+reference's perform_ocr → postprocess_ocr → run_llm_extraction
+(src/ocr/extraction.py:99-305 of the reference, LLM replaced by the
+deterministic alias mapper) as its direct library pipeline
+(tests/test_extraction.py:513-575 there) in one pass: it
+never materializes the ~10× token amplification between the steps,
+and every extra UDF pass would pay its fixed invocation cost again.
+Resumability is kept at chunk granularity instead of per step.
 
 Config distribution: ``DocumentTypeConfig`` is a small plain dataclass
 captured in the UDF closure — Spark ships it once per task via the
@@ -24,7 +21,6 @@ an explicit ``sc.broadcast`` adds nothing for a <50 KB object).
 from __future__ import annotations
 
 import gc
-import json
 import os
 import sys
 import time
@@ -39,19 +35,12 @@ from credit_ocr_backend_spark.core.document import (
     dumps_compact,
     process_document,
 )
-from credit_ocr_backend_spark.core.fields import extract_fields
-from credit_ocr_backend_spark.core.htmlparse import parse_page
-from credit_ocr_backend_spark.core.postprocess import normalize_items
 
 # ---------------------------------------------------------------------------
 # Schemas (DDL strings keep them greppable and driver-independent)
 # ---------------------------------------------------------------------------
 
 BBOX_T = "array<struct<x:double,y:double>>"
-TOKENS_T = (
-    f"array<struct<type:string,text:string,page:int,"
-    f"bounding_box:{BBOX_T},confidence:double>>"
-)
 ITEMS_T = (
     f"array<struct<type:string,label:string,value:string,text:string,"
     f"page:int,confidence:double,bounding_box:{BBOX_T}>>"
@@ -61,25 +50,15 @@ FIELDS_T = (
     f"page:int,bounding_box:{BBOX_T},is_valid:boolean,errors:array<string>>>"
 )
 
-# Nested payloads (tokens / items / fields) travel as compact-JSON
-# STRING columns between stages, not as list<struct>:
+# The nested field payload travels as a compact-JSON STRING column, not
+# as list<struct>:
 #  * transferring nested list<struct> through a pandas UDF costs ~5 ms/doc
 #    in per-element Python conversion (measured — as much as the whole
 #    extraction core); a string column is a straight Arrow buffer;
 #  * json round-trips the core's plain dicts EXACTLY (missing keys stay
-#    missing, None stays None — no NaN/numpy-scalar sanitization layer),
-#    which is what makes staged mode byte-identical to fused by
-#    construction;
+#    missing, None stays None — no NaN/numpy-scalar sanitization layer);
 #  * a relational view is recovered JVM-side at codegen speed with
-#    from_json(TOKENS_T / ITEMS_T / FIELDS_T) when a query needs it.
-PARSED_SCHEMA = (
-    f"url string, bucket int, status string, error string, "
-    f"extracted_text string, tokens_json string, proc_ms double"
-)
-NORMALIZED_SCHEMA = (
-    f"url string, bucket int, status string, error string, "
-    f"extracted_text string, tokens_json string, items_json string, proc_ms double"
-)
+#    from_json(FIELDS_T) (or ITEMS_T for a normalized-items payload).
 EXTRACTED_SCHEMA = (
     f"url string, bucket int, status string, error string, "
     f"extracted_text string, missing_fields array<string>, "
@@ -88,7 +67,7 @@ EXTRACTED_SCHEMA = (
 
 
 # ---------------------------------------------------------------------------
-# Per-document assembly helpers (shared by fused and staged paths)
+# Per-document assembly helpers
 # ---------------------------------------------------------------------------
 
 
@@ -301,7 +280,7 @@ def _extracted_row(
 
 
 # ---------------------------------------------------------------------------
-# Stage factories — each returns a mapInPandas-compatible generator fn
+# Stage factory — returns a mapInPandas-compatible generator fn
 # ---------------------------------------------------------------------------
 
 # One-shot per-worker heap freeze. After the first Arrow batch the
@@ -393,93 +372,3 @@ def make_fused_stage(doc_config: DocumentTypeConfig):
 
     return fused
 
-
-def make_parse_stage():
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _pin_spark_archives()
-        for pdf in batches:
-            rows = []
-            for url, bucket, html in zip(pdf["url"], pdf["bucket"], pdf["html"]):
-                t0 = time.perf_counter()
-                status, error, tokens, text = "parsed", None, [], ""
-                try:
-                    if html is None:
-                        raise ValueError("null html payload")
-                    tokens, text = parse_page(bytes(html))
-                except Exception as exc:
-                    status, error = STATUS_FAILED, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    {
-                        "url": url, "bucket": int(bucket), "status": status,
-                        "error": error, "extracted_text": text,
-                        "tokens_json": dumps_compact(tokens),
-                        "proc_ms": (time.perf_counter() - t0) * 1000.0,
-                    }
-                )
-            _freeze_worker_heap()
-            yield pd.DataFrame(rows)
-
-    return parse
-
-
-def make_normalize_stage():
-    def normalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _pin_spark_archives()
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                t0 = time.perf_counter()
-                status, error, items = "normalized", rec["error"], []
-                if rec["status"] == STATUS_FAILED:
-                    status = STATUS_FAILED
-                else:
-                    try:
-                        items = normalize_items(json.loads(rec["tokens_json"]))
-                    except Exception as exc:
-                        status, error = STATUS_FAILED, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    {
-                        "url": rec["url"], "bucket": int(rec["bucket"]),
-                        "status": status, "error": error,
-                        "extracted_text": rec["extracted_text"],
-                        "tokens_json": rec["tokens_json"],
-                        "items_json": dumps_compact(items),
-                        "proc_ms": (time.perf_counter() - t0) * 1000.0,
-                    }
-                )
-            _freeze_worker_heap()
-            yield pd.DataFrame(rows)
-
-    return normalize
-
-
-def make_extract_stage(doc_config: DocumentTypeConfig):
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _pin_spark_archives()
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                t0 = time.perf_counter()
-                status, error, extraction = "done", rec["error"], None
-                if rec["status"] == STATUS_FAILED:
-                    status = STATUS_FAILED
-                else:
-                    try:
-                        extraction = extract_fields(
-                            json.loads(rec["items_json"]),
-                            doc_config,
-                            original_ocr_lines=json.loads(rec["tokens_json"]),
-                        )
-                    except Exception as exc:
-                        status, error = STATUS_FAILED, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    _extracted_row(
-                        rec["url"], int(rec["bucket"]), status, error,
-                        rec["extracted_text"], extraction,
-                        (time.perf_counter() - t0) * 1000.0,
-                    )
-                )
-            _freeze_worker_heap()
-            yield pd.DataFrame(rows)
-
-    return extract

@@ -8,7 +8,7 @@ Logical plan, all declarative until the Arrow-batched stages:
       → keep buckets of this chunk (resume skips committed chunks)
       → giant/normal split on length(html)        # size-skew defuse
       → repartition(row-level url-hash)           # uniform task balance
-      → fused|staged Arrow UDF stages             # core semantics
+      → fused Arrow UDF stage                     # core semantics
       → docs + exploded field rows → chunk=NNNN directory, atomic
         overwrite per chunk                        # idempotent commit
       → lineage append per chunk (per-bucket doc/failure/cpu metrics)
@@ -33,9 +33,9 @@ Two partitioning decisions worth reading twice (measured, not guessed):
   and per-chunk atomic overwrite.
 
 Scale notes (100 TB / 10^12 rows):
-* the html column is only read by the parse stage; every downstream
-  projection drops it immediately (column pruning keeps the heavy
-  bytes out of later scans);
+* the html column is only read by the fused stage, whose output
+  carries no html (column pruning keeps the heavy bytes out of later
+  scans);
 * a failed chunk re-runs alone; on Iceberg the pages table would be
   bucket(url, B)-partitioned so each chunk's input scan prunes at the
   file level instead of re-filtering the full table;
@@ -56,12 +56,7 @@ from credit_ocr_backend_spark.core.config import DocumentTypeConfig, default_con
 from credit_ocr_backend_spark.operators.stages import (
     EXTRACTED_SCHEMA,
     FIELDS_T,
-    NORMALIZED_SCHEMA,
-    PARSED_SCHEMA,
-    make_extract_stage,
     make_fused_stage,
-    make_normalize_stage,
-    make_parse_stage,
 )
 from credit_ocr_backend_spark.sources.checkpoint import (
     CheckpointManager,
@@ -262,7 +257,6 @@ def run_pipeline(
     out_root: str,
     *,
     doc_config: Optional[DocumentTypeConfig] = None,
-    mode: str = "fused",  # "fused" (scale mode) | "staged" (stage checkpoints)
     n_buckets: int = 64,
     n_chunks: int = 4,
     parallelism: Optional[int] = None,
@@ -270,21 +264,15 @@ def run_pipeline(
     ts_min: Optional[str] = None,
     ts_max: Optional[str] = None,
     fail_buckets: Optional[set] = None,  # test hook: inject a chunk failure
-    max_concurrent_chunks: int = 1,
 ) -> PipelineResult:
-    """Run the extraction pipeline, chunk by chunk, committing results +
-    lineage per chunk. ``resume=True`` skips chunks whose lineage says
-    done and recomputes only the rest; output is unchanged vs a clean
-    run (tested). ``resume=False`` first removes the engine-owned state
-    an earlier run left under ``out_root`` (``CheckpointManager.reset``).
-
-    ``max_concurrent_chunks > 1`` submits that many chunk jobs from
-    concurrent driver threads: each chunk's tail wave and driver-side
-    commit gaps overlap with the next chunk's compute instead of leaving
-    executors idle. Chunk commits stay independent (each writes its own
-    chunk=NNNN dir and lineage fragment, both uuid-named), so failure
-    isolation and resume semantics are identical to the serial path —
-    the first failing chunk raises after in-flight chunks drain."""
+    """Run the extraction pipeline, one chunk after the other, each
+    through the fused stage, committing results + lineage per chunk.
+    ``resume=True`` skips chunks whose lineage says done and recomputes
+    only the rest; output is unchanged vs a clean run (tested).
+    ``resume=False`` first removes the engine-owned state an earlier
+    run left under ``out_root`` (``CheckpointManager.reset``). The first
+    failing chunk raises; the chunks committed before it stay committed
+    for a later resume."""
     cfg = doc_config or default_config()
     par = parallelism or spark.sparkContext.defaultParallelism
     ckpt = CheckpointManager(spark, out_root)
@@ -293,10 +281,10 @@ def run_pipeline(
 
     # Validate/normalize the time bounds ONCE at submit time — before
     # the manifest is pinned and before any chunk is scheduled — so a
-    # malformed bound is one immediate error, not N identical failures
-    # out of concurrent chunk threads (and the manifest pins the
-    # normalized form, so '2025-01' and '2025-01-01 00:00:00' resume
-    # as the same committed window).
+    # malformed bound is one immediate error, not a failure inside the
+    # first chunk (and the manifest pins the normalized form, so
+    # '2025-01' and '2025-01-01 00:00:00' resume as the same committed
+    # window).
     if ts_min is not None:
         ts_min = _checked_ts(spark, ts_min, "ts_min")
     if ts_max is not None:
@@ -310,14 +298,13 @@ def run_pipeline(
         "n_chunks": n_chunks,
         "ts_min": ts_min,
         "ts_max": ts_max,
-        "mode": mode,
     }
     if resume:
         ckpt.check_manifest(manifest)
     else:
         # A fresh run starts from nothing: an earlier run's lineage
         # would otherwise mark its chunks done for a later resume.
-        ckpt.reset(("docs", "results", "parsed", "normalized"))
+        ckpt.reset(("docs", "results"))
         ckpt.write_manifest(manifest)
 
     # One unfiltered count of the input (parquet footer statistics — no
@@ -337,9 +324,9 @@ def run_pipeline(
 
     def run_chunk(chunk_id: int, lo: int, hi: int) -> List[dict]:
         """Process + commit one chunk; returns its per-bucket lineage
-        rows. Self-contained so chunks can run from concurrent driver
-        threads (every write is chunk-private, lineage fragments are
-        uuid-named)."""
+        rows. Every write is chunk-private and the lineage fragment is
+        uuid-named, so a re-run of the chunk overwrites only its own
+        output."""
         chunk_df = _defuse_skew(
             _input_slice(pages, n_buckets, lo, hi, ts_min, ts_max),
             par,
@@ -352,22 +339,9 @@ def run_pipeline(
             )
 
         t0 = time.perf_counter()
-        if mode == "fused":
-            extracted = chunk_df.mapInPandas(
-                make_fused_stage(cfg), schema=EXTRACTED_SCHEMA
-            )
-        elif mode == "staged":
-            parsed = chunk_df.mapInPandas(make_parse_stage(), schema=PARSED_SCHEMA)
-            ckpt.write_chunk(parsed, "parsed", chunk_id)
-            normalized = ckpt.read_chunk("parsed", chunk_id).mapInPandas(
-                make_normalize_stage(), schema=NORMALIZED_SCHEMA
-            )
-            ckpt.write_chunk(normalized, "normalized", chunk_id)
-            extracted = ckpt.read_chunk("normalized", chunk_id).mapInPandas(
-                make_extract_stage(cfg), schema=EXTRACTED_SCHEMA
-            )
-        else:
-            raise ValueError(f"unknown mode: {mode}")
+        extracted = chunk_df.mapInPandas(
+            make_fused_stage(cfg), schema=EXTRACTED_SCHEMA
+        )
 
         # Round-5 tail fix (north-rule scaling lever): the results rows
         # derive from the SAME in-memory frame the docs commit wrote,
@@ -383,7 +357,7 @@ def run_pipeline(
         # the stages are deterministic and the cached rows ARE the
         # bytes the docs commit wrote, so results ≡
         # explode(from_json(committed docs)) — asserted by
-        # tests/test_spark_pipeline.py's fused-vs-staged and resume
+        # tests/test_spark_pipeline.py's fused-vs-core and resume
         # row-level comparisons. Crash windows are also unchanged: the
         # chunk's commit point stays the lineage append AFTER both
         # writes, so a crash between them re-runs the whole chunk on
@@ -505,38 +479,12 @@ def run_pipeline(
 
     todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
     result.chunks_skipped = len(bounds) - len(todo)
-
-    def record(per_bucket: List[dict]) -> None:
+    for chunk_id, lo, hi in todo:
+        per_bucket = run_chunk(chunk_id, lo, hi)
         result.chunks_run += 1
         result.n_docs += sum(b["n_docs"] for b in per_bucket)
         result.n_failed += sum(b["n_failed"] for b in per_bucket)
         result.buckets_done.extend(b["bucket"] for b in per_bucket)
-
-    if max_concurrent_chunks <= 1 or len(todo) <= 1:
-        for chunk_id, lo, hi in todo:
-            record(run_chunk(chunk_id, lo, hi))
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_concurrent_chunks) as pool:
-            futures = {
-                pool.submit(run_chunk, c, lo, hi): c for c, lo, hi in todo
-            }
-            errors: List[tuple] = []
-            for fut, chunk_id in futures.items():
-                try:
-                    record(fut.result())
-                except Exception as exc:  # drain all, then raise together
-                    errors.append((chunk_id, exc))
-            if errors:
-                # Surface EVERY failed chunk, not just the first (ADVICE
-                # round 2: suppressed tracebacks). ExceptionGroup keeps
-                # all tracebacks; the message lists the failed chunks.
-                raise ExceptionGroup(
-                    f"{len(errors)} chunk(s) failed: "
-                    f"{sorted(c for c, _ in errors)}",
-                    [e for _, e in errors],
-                )
 
     result.wall_sec = time.perf_counter() - t_start
     return result

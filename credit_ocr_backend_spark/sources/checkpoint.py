@@ -233,7 +233,7 @@ class CheckpointManager:
 
     def write_manifest(self, params: dict) -> None:
         """Persist the run parameters that define chunk identity
-        (n_buckets, n_chunks, ts window, mode). Resuming under different
+        (n_buckets, n_chunks, ts window). Resuming under different
         parameters would silently skip chunk ids whose bucket ranges or
         input window differ from the committed run."""
         self.write_bytes(_MANIFEST_TMP, json.dumps(params, sort_keys=True, indent=2).encode())

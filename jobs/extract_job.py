@@ -43,17 +43,11 @@ def main() -> int:
     parser.add_argument("--out", required=True, help="output root")
     parser.add_argument("--generate", type=int, default=0,
                         help="generate a synthetic corpus of N docs instead of --pages")
-    parser.add_argument("--mode", choices=["fused", "staged"], default="fused")
     parser.add_argument("--buckets", type=int, default=64)
     parser.add_argument("--chunks", type=int, default=4)
     parser.add_argument("--resume", action="store_true")
     parser.add_argument("--ts-min", dest="ts_min")
     parser.add_argument("--ts-max", dest="ts_max")
-    parser.add_argument("--concurrent-chunks", dest="concurrent_chunks",
-                        type=int, default=1,
-                        help="chunk jobs in flight at once (overlaps each "
-                             "chunk's tail wave and commit gaps; commits "
-                             "stay chunk-independent)")
     args = parser.parse_args()
 
     from pyspark.sql import SparkSession
@@ -83,13 +77,11 @@ def main() -> int:
         spark,
         pages_path,
         args.out,
-        mode=args.mode,
         n_buckets=args.buckets,
         n_chunks=args.chunks,
         resume=args.resume,
         ts_min=args.ts_min,
         ts_max=args.ts_max,
-        max_concurrent_chunks=args.concurrent_chunks,
     )
     print(
         json.dumps(

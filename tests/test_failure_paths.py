@@ -83,9 +83,13 @@ def test_empty_chunk_is_resumable(spark, tmp_path):
 
 
 def test_resume_refuses_mismatched_parameters(spark, tmp_path):
-    """Chunk identity = (n_buckets, n_chunks, ts window, mode); resuming
-    under different values must fail fast, not silently skip chunk ids
-    whose bucket ranges changed (ADVICE round 1)."""
+    """Chunk identity = (n_buckets, n_chunks, ts window); resuming under
+    different values must fail fast, not silently skip chunk ids whose
+    bucket ranges changed (ADVICE round 1). A manifest that still holds
+    the ``mode`` key, as versions with a staged mode wrote it, is a
+    mismatch too: there is no migration."""
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
     pages = str(tmp_path / "pages3")
     _write_mixed_corpus(spark, pages)
     out = str(tmp_path / "out3")
@@ -95,6 +99,14 @@ def test_resume_refuses_mismatched_parameters(spark, tmp_path):
     # matching parameters resume fine
     res = run_pipeline(spark, pages, out, n_buckets=4, n_chunks=2, resume=True)
     assert res.chunks_skipped == 2 and res.chunks_run == 0
+
+    mgr = CheckpointManager(spark, out)
+    manifest = mgr.read_manifest()
+    assert "mode" not in manifest
+    mgr.write_manifest({**manifest, "mode": "fused"})
+    with pytest.raises(ValueError, match="resume parameter mismatch") as ei:
+        run_pipeline(spark, pages, out, n_buckets=4, n_chunks=2, resume=True)
+    assert "'mode'" in str(ei.value)
 
 
 def test_object_store_out_root_fail_fast_without_connector(spark, tmp_path):

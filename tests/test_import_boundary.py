@@ -1,6 +1,6 @@
 """The extraction path stands alone: importing the pipeline and what
 jobs/extract_job.py imports loads no module of the packages outside it
-(functions, sinks, streaming, the corpus-level operator families)."""
+(functions, sinks, the corpus-level operator families)."""
 
 from __future__ import annotations
 
@@ -18,7 +18,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUTSIDE = (
     "functions",
     "sinks",
-    "streaming",
     "operators.dedup",
     "operators.similarity",
     "operators.multimodal",

@@ -1,10 +1,9 @@
 """Spark-shell tests: distribution must not change a single byte.
 
 * Spark fused output ≡ pure-core output per url (SURVEY.md §5.2.3)
-* the committed docs, results and the staged run's draw plan for the
-  64 golden pages equal the reference-generated goldens
-  (tools/gen_expected_extraction.py)
-* staged mode (per-stage checkpoints) ≡ fused mode
+* the committed docs and results for the 64 golden pages, and the draw
+  plan over their normalized items, equal the reference-generated
+  goldens (tools/gen_expected_extraction.py)
 * resume: a failed chunk re-runs without recomputing committed
   buckets, and the final output equals a clean run (north rule)
 * giant-document skew routing leaves results identical
@@ -24,6 +23,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from credit_ocr_backend_spark.core import default_config, process_document  # noqa: E402
 from credit_ocr_backend_spark.core.document import dumps_compact  # noqa: E402
+from credit_ocr_backend_spark.core.htmlparse import parse_page  # noqa: E402
+from credit_ocr_backend_spark.core.postprocess import normalize_items  # noqa: E402
 from credit_ocr_backend_spark.functions.viz import draw_plan, rgb_csv  # noqa: E402
 from credit_ocr_backend_spark.operators.stages import ITEMS_T, _field_rows  # noqa: E402
 from credit_ocr_backend_spark.plans.pipeline import run_pipeline  # noqa: E402
@@ -106,30 +107,21 @@ def test_fused_matches_reference_goldens(spark, fused_out):
     _assert_matches_golden(results, "expected_extraction_results")
 
 
-def test_staged_equals_fused(spark, pages_path, tmp_path):
-    fused_out = str(tmp_path / "fused")
-    staged_out = str(tmp_path / "staged")
-    run_pipeline(spark, pages_path, fused_out, n_buckets=8, n_chunks=1)
-    run_pipeline(spark, pages_path, staged_out, n_buckets=8, n_chunks=1, mode="staged")
-
-    fused = _docs_map(spark, fused_out)
-    staged = _docs_map(spark, staged_out)
-    assert set(fused) == set(staged)
-    for url, frow in fused.items():
-        srow = staged[url]
-        assert frow["extracted_text"] == srow["extracted_text"]
-        assert frow["fields_json"] == srow["fields_json"], url
-
-    # stage checkpoint tables exist and carry every url
-    parsed = spark.read.parquet(f"{staged_out}/parsed")
-    normalized = spark.read.parquet(f"{staged_out}/normalized")
-    assert parsed.count() == N_DOCS
-    assert normalized.count() == N_DOCS
-
-    # the annotation draw plan over the staged items
-    items = normalized.select(
-        "url", F.explode(F.from_json("items_json", ITEMS_T)).alias("it")
-    ).select("url", "it.*")
+def test_draw_plan_matches_reference_golden(spark):
+    """The annotation draw plan over the normalized items of the golden
+    pages. The items are built in-process with the full token stream
+    (``parse_page``'s default, word tokens included), carried as
+    compact JSON and read back with ``from_json(ITEMS_T)``."""
+    rows = []
+    for k in range(N_GOLDEN):
+        page = build_page(k)
+        tokens, _ = parse_page(page["html"])
+        rows.append((page["url"], dumps_compact(normalize_items(tokens))))
+    items = (
+        spark.createDataFrame(rows, "url string, items_json string")
+        .select("url", F.explode(F.from_json("items_json", ITEMS_T)).alias("it"))
+        .select("url", "it.*")
+    )
     plan = draw_plan(items, list(default_config().field_mappings.items()))
     _assert_matches_golden(
         plan.withColumn("color_rgb", rgb_csv("color_rgb")), "expected_draw_plan"
@@ -224,48 +216,6 @@ def test_warc_ts_pruning(spark, pages_path, tmp_path):
     pages = spark.read.parquet(pages_path)
     expected = pages.where(F.col("warc_date") < "2025-01-03").count()
     assert n == expected
-
-
-def test_concurrent_chunks_equal_serial(spark, pages_path, tmp_path):
-    """max_concurrent_chunks overlaps chunk jobs from driver threads;
-    the committed output must be row-identical to the serial path and
-    lineage must cover every chunk."""
-    o1, o2 = str(tmp_path / "serial"), str(tmp_path / "conc")
-    r1 = run_pipeline(spark, pages_path, o1, n_buckets=8, n_chunks=4)
-    r2 = run_pipeline(
-        spark, pages_path, o2, n_buckets=8, n_chunks=4, max_concurrent_chunks=3
-    )
-    assert r1.n_docs == r2.n_docs and r2.chunks_run == 4
-    d1 = spark.read.parquet(f"{o1}/docs").select(
-        "url", "status", "extracted_text", "fields_json"
-    )
-    d2 = spark.read.parquet(f"{o2}/docs").select(
-        "url", "status", "extracted_text", "fields_json"
-    )
-    assert d1.exceptAll(d2).count() == 0 and d2.exceptAll(d1).count() == 0
-    lineage = spark.read.parquet(f"{o2}/lineage")
-    assert lineage.select("chunk").distinct().count() == 4
-    # a concurrent run is resumable exactly like a serial one
-    r3 = run_pipeline(
-        spark, pages_path, o2, n_buckets=8, n_chunks=4, resume=True,
-        max_concurrent_chunks=3,
-    )
-    assert r3.chunks_skipped == 4 and r3.chunks_run == 0
-
-
-def test_concurrent_chunk_failure_drains_and_raises(spark, pages_path, tmp_path):
-    out = str(tmp_path / "conc_fail")
-    # All chunk failures surface together (ExceptionGroup), none swallowed
-    with pytest.raises(ExceptionGroup, match="chunk") as ei:
-        run_pipeline(
-            spark, pages_path, out, n_buckets=8, n_chunks=4,
-            max_concurrent_chunks=2, fail_buckets={3},
-        )
-    assert all(isinstance(e, RuntimeError) for e in ei.value.exceptions)
-    assert any("injected failure" in str(e) for e in ei.value.exceptions)
-    # chunks that completed before the failure are committed + resumable
-    done = spark.read.parquet(f"{out}/lineage").select("chunk").distinct().count()
-    assert done >= 1
 
 
 def test_input_slice_prunes_partitions_and_columns(spark, tmp_path):

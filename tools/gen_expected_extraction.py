@@ -3,8 +3,11 @@ engine's output is checked against.
 
 tests/test_spark_pipeline.py runs `run_pipeline` over a generated
 corpus whose pages 0..63 are the 64 pages below, and asserts that the
-committed docs and results of those pages, and the draw plan of the
-staged run's `normalized` table, equal these tables row for row.
+committed docs and results of those pages equal these tables row for
+row. It also builds the normalized items of the same pages in-process
+(`parse_page` with word tokens, then `normalize_items`) and asserts
+that `functions/viz.py::draw_plan` over them equals the draw-plan
+table.
 They are produced by the REFERENCE implementation's own pure functions
 (via the same import-shim harness as tools/gen_reference_goldens.py),
 so a match is reference parity, not self-agreement:
