@@ -15,9 +15,14 @@ Two strictly separated layers:
 * ``credit_ocr_backend_spark.core`` — pure Python, zero Spark imports.
   Byte-exact reimplementation of the reference's deterministic
   per-document semantics. This is what the pytest parity suite runs.
-* the Spark packages (``operators``, ``sources``, ``functions``,
-  ``plans``) — the distribution shell: Arrow-batched UDF stages,
-  partitioning/salting, checkpoint + lineage + resume.
+* the Spark packages — the distribution shell. The extraction path is
+  ``operators.stages`` (the fused Arrow-batched stage), ``plans``
+  (session and the chunked, resumable pipeline) and ``sources`` (the
+  page corpus, checkpoint + lineage + resume). Outside it sit the
+  corpus-level operator families (``operators.dedup``, ``similarity``,
+  ``sampling``, ``spread``), ``functions`` (JVM-side scalar and
+  visualization analogues of the reference) and ``sinks`` (xlsx sheet,
+  annotated PNG).
 """
 
 __version__ = "0.1.0"

@@ -16,8 +16,7 @@ never O(corpus). Rasterization requires PIL and xlsx requires openpyxl,
 neither of which exists in this container, so both are gated behind
 import-try: the deterministic fallback (csv / draw-plan JSON) keeps the
 byte-checkable artifact testable, and the real encoders activate when
-the libraries are installed — the documented escape hatch, same pattern
-as operators.multimodal.decode_stub."""
+the libraries are installed — the documented escape hatch."""
 
 from __future__ import annotations
 

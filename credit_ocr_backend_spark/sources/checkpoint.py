@@ -392,14 +392,11 @@ class CheckpointManager:
         shuffle, no per-bucket sliver files)."""
         df.write.mode("overwrite").parquet(self.path(_chunk(name, chunk)))
 
-    def read_chunk(self, name: str, chunk: int) -> DataFrame:
-        return self.spark.read.parquet(self.path(_chunk(name, chunk)))
-
     def read_chunk_arrow(self, name: str, chunk: int, columns: List[str], filter=None):
-        """:meth:`read_chunk` on the driver with ``pyarrow.dataset``: the
-        chunk's top-level part files only, ``filter`` (a
-        ``pyarrow.dataset`` expression) pushed into the scan. A chunk
-        with no part file raises ``FileNotFoundError``."""
+        """One chunk of a stage table, read on the driver with
+        ``pyarrow.dataset``: the chunk's top-level part files only,
+        ``filter`` (a ``pyarrow.dataset`` expression) pushed into the
+        scan. A chunk with no part file raises ``FileNotFoundError``."""
         import pyarrow.dataset as ds
 
         files = self._parquet_files(_chunk(name, chunk))

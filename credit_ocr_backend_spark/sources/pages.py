@@ -219,11 +219,6 @@ def build_page(
     }
 
 
-def iter_pages(n: int, start: int = 0) -> Iterator[Dict[str, Any]]:
-    for k in range(start, start + n):
-        yield build_page(k)
-
-
 # ---------------------------------------------------------------------------
 # Spark-side distributed generation (import-guarded so the pure core
 # stays Spark-free).
@@ -282,7 +277,3 @@ def write_pages(
     generate_pages_df(
         spark, n_docs, partitions, giant_mod, giant_repeat
     ).write.mode("overwrite").partitionBy("warc_date").parquet(path)
-
-
-def read_pages(spark, path: str):
-    return spark.read.parquet(path)

@@ -184,7 +184,7 @@ def test_checkpoint_file_scheme_roundtrip(spark, tmp_path):
 
     base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     mgr.write_chunk(base, "docs", 0)
-    got = {r["k"]: r["v"] for r in mgr.read_chunk("docs", 0).collect()}
+    got = {r["k"]: r["v"] for r in mgr.read_chunk_arrow("docs", 0, ["k", "v"]).to_pylist()}
     assert got == {1: "a", 2: "b"}
 
 

@@ -20,8 +20,6 @@ OUTSIDE = (
     "sinks",
     "operators.dedup",
     "operators.similarity",
-    "operators.multimodal",
-    "operators.textstats",
     "operators.sampling",
     "operators.spread",
 )

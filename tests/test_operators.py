@@ -1,5 +1,5 @@
 """Unit tests for the corpus-level operators (dedup / similarity /
-textstats / sampling) and the scalar and visualization functions on
+sampling) and the scalar and visualization functions on
 tiny known inputs — value-level assertions."""
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from credit_ocr_backend_spark.operators import dedup as D  # noqa: E402
 from credit_ocr_backend_spark.operators import similarity as SIM  # noqa: E402
-from credit_ocr_backend_spark.operators import textstats as T  # noqa: E402
 from credit_ocr_backend_spark.plans.session import get_spark  # noqa: E402
 
 
@@ -185,66 +184,6 @@ def test_lsh_bucket_deterministic(spark):
     assert buckets[0] == buckets[1]          # identical vectors, same bucket
     assert 0 <= buckets[0] < 16
     assert buckets[2] == buckets[0] ^ 0b1111  # negated vector flips every plane
-
-
-def test_textstats_values(spark):
-    df = spark.createDataFrame(
-        [(0, "The cat and the dog, in a house."),
-         (1, "der hund und die katze und das haus")],
-        "doc_id long, text string",
-    )
-    stats = {r["doc_id"]: r for r in T.document_stats(df, "doc_id", "text").collect()}
-    assert stats[0]["pred_lang"] == "en"
-    assert stats[1]["pred_lang"] == "de"
-    assert stats[0]["n_tokens"] == 8
-    # BPE-ish: 8 words + comma + period = 10
-    assert stats[0]["n_bpe_tokens"] == 10
-    assert stats[1]["fp"] == hashlib.md5(
-        b"der hund und die katze und das haus").hexdigest()
-    assert 0.0 <= stats[0]["quality"] <= 1.0
-
-
-def test_quality_score_values(spark):
-    """quality_score against an independent Python mirror of its
-    formula, plus hand-derived values: the length term saturates at 100
-    tokens, the stopword term at a 0.2 ratio, and a punctuation ratio
-    above 0.2 halves the score."""
-    import re
-
-    def ref(text):
-        n_tokens = len(re.split(r"\s+", text.strip(" ")))
-        n_punct = len(re.findall(r"[.,;:!?]", text))
-        low = text.lower()
-        n_stop = len(re.findall(r"\b(the|and|is|of|to|in|that)\b", low)) + len(
-            re.findall(r"\b(der|die|das|und|ist|nicht|mit)\b", low)
-        )
-        stop = min(round(n_stop / max(n_tokens, 1), 6) * 5, 1.0)
-        pen = 0.5 if round(n_punct / max(len(text), 1), 6) > 0.2 else 1.0
-        return round((0.6 * min(n_tokens / 100.0, 1.0) + 0.4 * stop) * pen, 6)
-
-    texts = {
-        0: "der hund und die katze und das haus",
-        1: " ".join(["the"] * 150),
-        2: "ok?! no... way!!",
-        3: "plain words without any marker here at all",
-        4: "The cat and the dog, in a house.",
-        5: "",
-        6: None,
-    }
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["q"]
-        for r in df.select("doc_id", T.quality_score("text").alias("q")).collect()
-    }
-    # least() skips NULLs, so a NULL text scores 1.0
-    assert got == {k: (1.0 if t is None else ref(t)) for k, t in texts.items()}
-    # 8 tokens, 5 stopwords: 0.6 * 0.08 + 0.4 * 1
-    assert got[0] == 0.448
-    assert got[1] == 1.0
-    # 3 tokens, no stopword, 7 punctuation marks in 16 chars: halved
-    assert got[2] == 0.009
-    # an empty text is one empty token
-    assert got[5] == 0.006
 
 
 # ---------------------------------------------------------------------------
@@ -1011,106 +950,3 @@ def test_canonical_url_differential(spark):
     vdf = spark.createDataFrame([(v,) for v in variants], "url string")
     canon = {r["c"] for r in vdf.select(canonical_url("url").alias("c")).collect()}
     assert canon == {"http://example.com/news?id=7"}
-
-
-def test_boilerplate_line_removal_vs_duckdb(spark):
-    """frequent_lines / remove_boilerplate_lines vs an independent
-    DuckDB mirror of the same rules (normalize → md5 → distinct-doc
-    count ≥ k → ordered reassembly), plus the semantic checks: chrome
-    lines vanish, unique content survives in order, a fully-chrome doc
-    stays as an empty row."""
-    import duckdb
-
-    from credit_ocr_backend_spark.operators.textstats import (
-        frequent_lines,
-        remove_boilerplate_lines,
-    )
-
-    chrome = "Home | About | Contact"
-    cookie = "  we use   COOKIES  "  # normalizes equal across docs
-    rows = [
-        (0, f"{chrome}\nunique zero body\n{cookie}\nmore zero"),
-        (1, f"{chrome}\nWe use cookies\nunique one body"),
-        (2, f"{chrome}\nunique two body\nWE USE COOKIES"),
-        (3, f"{chrome}\nWe use cookies"),          # fully chrome
-        (4, "standalone document\nwith its own lines"),
-        (5, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    freq = {
-        r["lhash"]: r["n_docs"]
-        for r in frequent_lines(docs, min_docs=3).collect()
-    }
-    out = {
-        r["doc_id"]: r
-        for r in remove_boilerplate_lines(docs, min_docs=3).collect()
-    }
-
-    con = duckdb.connect()
-    con.register("docs", docs.toPandas())
-    dfreq = {
-        h: n
-        for h, n in con.execute("""
-            SELECT md5(regexp_replace(trim(lower(line)), '\\s+', ' ', 'g')) AS lhash,
-                   count(DISTINCT doc_id) AS n
-            FROM (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-                  FROM docs WHERE text IS NOT NULL)
-            WHERE trim(line) != ''
-            GROUP BY 1 HAVING count(DISTINCT doc_id) >= 3
-        """).fetchall()
-    }
-    assert freq == dfreq and len(freq) == 2  # chrome + cookie lines
-
-    dclean = {
-        d: t
-        for d, t in con.execute("""
-            WITH lines AS (
-              SELECT doc_id, line,
-                     row_number() OVER (PARTITION BY doc_id) - 1 AS pos,
-                     md5(regexp_replace(trim(lower(line)), '\\s+', ' ', 'g')) AS lhash
-              FROM (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-                    FROM docs WHERE text IS NOT NULL)
-            ), freq AS (
-              SELECT lhash FROM lines WHERE trim(line) != ''
-              GROUP BY 1 HAVING count(DISTINCT doc_id) >= 3
-            )
-            SELECT doc_id,
-                   coalesce(string_agg(CASE WHEN lhash NOT IN (SELECT lhash FROM freq)
-                                            THEN line END, chr(10) ORDER BY pos), '')
-            FROM lines GROUP BY doc_id
-        """).fetchall()
-    }
-    for doc_id, expect in dclean.items():
-        assert out[doc_id]["cleaned_text"] == expect, doc_id
-
-    assert out[0]["cleaned_text"] == "unique zero body\nmore zero"
-    assert out[0]["n_lines_dropped"] == 2
-    assert out[3]["cleaned_text"] == "" and out[3]["n_lines_kept"] == 0
-    assert out[4]["cleaned_text"] == "standalone document\nwith its own lines"
-    assert 5 not in out  # NULL text explodes to nothing — absent like batch simhash
-
-
-def test_boilerplate_scoped_by_host(spark):
-    """scope_col: a line frequent on host A but rare globally is
-    stripped ONLY from host A's documents."""
-    from credit_ocr_backend_spark.operators.textstats import (
-        remove_boilerplate_lines,
-    )
-
-    banner = "A-site navigation banner"
-    rows = [
-        (0, "a.com", f"{banner}\nalpha"),
-        (1, "a.com", f"{banner}\nbeta"),
-        (2, "a.com", f"{banner}\ngamma"),
-        (3, "b.com", f"{banner}\ndelta"),  # same line, different host
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, host string, text string")
-    out = {
-        r["doc_id"]: r["cleaned_text"]
-        for r in remove_boilerplate_lines(
-            docs, min_docs=3, scope_col="host"
-        ).collect()
-    }
-    assert out[0] == "alpha" and out[1] == "beta" and out[2] == "gamma"
-    assert out[3] == f"{banner}\ndelta"  # b.com never crossed the floor
