@@ -12,7 +12,7 @@ uses at its byte-compared boundaries
 from __future__ import annotations
 
 import json
-from typing import Any, Dict, Optional
+from typing import Any, Dict
 
 from credit_ocr_backend_spark.core.config import DocumentTypeConfig
 from credit_ocr_backend_spark.core.fields import extract_fields
@@ -99,15 +99,3 @@ def process_document(
         result["error"] = f"{type(exc).__name__}: {exc}"
     return result
 
-
-def extraction_envelope(url: str, extraction: Optional[Dict[str, Any]]) -> str:
-    """The LLM-stage JSON envelope (extraction.py:280-290), minus the
-    wall-clock timestamp (excluded from the byte-compared payload —
-    SURVEY.md §2.7 F16)."""
-    return dumps_envelope(
-        {
-            "document_id": url,
-            "extraction_results": extraction,
-            "metadata": {"extraction_method": "deterministic_alias_mapper"},
-        }
-    )

@@ -1,17 +1,23 @@
 """The end-to-end extraction pipeline (the engine's flagship job).
 
-Logical plan, all declarative until the Arrow-batched stages:
+Logical plan of one chunk, all declarative until the Arrow-batched
+stage:
 
-    pages (parquet/Iceberg, pruned by warc_date)
-      → filter warc_ts range                      # partition pruning
-      → bucket = pmod(xxhash64(url), B)           # stable chunk/lineage key
+    pages (parquet/Iceberg, read with the declared PAGES_SCHEMA)
+      → filter warc_date / warc_ts range        # partition pruning
+      → bucket = pmod(xxhash64(url), B)         # stable chunk/lineage key
       → keep buckets of this chunk (resume skips committed chunks)
-      → giant/normal split on length(html)        # size-skew defuse
-      → repartition(row-level url-hash)           # uniform task balance
-      → fused Arrow UDF stage                     # core semantics
-      → docs + exploded field rows → chunk=NNNN directory, atomic
-        overwrite per chunk                        # idempotent commit
-      → lineage append per chunk (per-bucket doc/failure/cpu metrics)
+      → one exchange: bulk rows by url hash,    # size-skew defuse
+        giants to partitions of their own
+      → fused Arrow UDF stage, cached           # core semantics
+      → docs, then results from the cache       # idempotent per-chunk
+        → chunk=NNNN                            # overwrite
+      → lineage counted from the committed docs, appended (commit point)
+
+A computed chunk runs 4 Spark jobs: the exchange, the cache build, the
+docs write and the results write. Nothing else in a run submits one:
+the schema is declared, and the input check, the row estimate, the
+lineage counts and resume bookkeeping read parquet with pyarrow.
 
 Commit design: the unit of recovery is a **chunk** = contiguous range
 of url-hash buckets, written as one ``chunk=NNNN`` partition directory
@@ -23,10 +29,10 @@ every row for lineage metrics and finer-grained reprocessing.
 
 Two partitioning decisions worth reading twice (measured, not guessed):
 
-* processing parallelism uses **row-level** xxhash64(url) repartition,
-  NOT the bucket id — partitioning 64 buckets into 64 hash partitions
-  is balls-in-bins (some tasks get 3-4 buckets → 4× stragglers, ~50%
-  idle cores at 32-way);
+* processing parallelism uses a **row-level** url hash, NOT the bucket
+  id — partitioning 64 buckets into 64 hash partitions is balls-in-bins
+  (some tasks get 3-4 buckets → 4× stragglers, ~50% idle cores at
+  32-way);
 * outputs are directory-partitioned by **chunk**, not bucket —
   per-bucket partitionBy writes either tasks×buckets sliver files or
   an extra full shuffle; per-chunk directories give one file per task
@@ -39,15 +45,18 @@ Scale notes (100 TB / 10^12 rows):
 * a failed chunk re-runs alone; on Iceberg the pages table would be
   bucket(url, B)-partitioned so each chunk's input scan prunes at the
   file level instead of re-filtering the full table;
-* giant documents (heavy right tail of html size) route to a
-  round-robin repartition so no task queues two of them.
+* giant documents (heavy right tail of html size) go to partitions of
+  their own, so a giant never shares a task with bulk documents
+  (``_defuse_skew``).
 """
 
 from __future__ import annotations
 
+import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import List, Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +75,12 @@ from credit_ocr_backend_spark.sources.checkpoint import (
 )
 
 GIANT_HTML_BYTES = 32 * 1024  # size-skew routing threshold
+
+# The columns the engine reads from the pages table. Declaring them
+# spares every run Spark's schema-inference job; a declared read turns
+# a missing column into NULLs, so _check_pages verifies them first.
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, warc_date string"
+_PAGES_KINDS = {"url": "string", "warc_ts": "timestamp", "html": "binary"}
 
 RESULT_COLUMNS = [
     "field_name", "value", "confidence", "page", "bounding_box",
@@ -194,61 +209,134 @@ def _effective_waves(parallelism: int, est_rows: Optional[int]) -> int:
 def _defuse_skew(
     df: DataFrame, parallelism: int, est_rows: Optional[int] = None
 ) -> DataFrame:
-    """Uniform row-level repartition on url-hash for the bulk (bucket
-    ids clump under hash-partitioning; raw rows don't). Giant documents
-    (heavy html right tail) go round-robin so one task never queues two
-    of them (SURVEY.md §7.3 giant-doc skew)."""
-    # coalesce(length, 0): a NULL html row must land in the bulk branch
-    # (both raw length predicates evaluate to NULL → the row would land
-    # in NEITHER branch and vanish without a status=failed record).
+    """One exchange that balances bulk rows and isolates giants
+    (SURVEY.md §7.3 giant-doc skew): bulk rows go to partitions
+    ``[0, n_bulk)``, ``n_bulk = parallelism × waves``, rows whose html
+    exceeds ``GIANT_HTML_BYTES`` to ``[n_bulk, n_bulk + n_giant)``,
+    ``n_giant = max(parallelism // 2, 1)``, each by url hash. A giant
+    never shares a task with bulk rows, and a retried task gets the
+    same rows. Two giants can share a task (more giants than
+    ``n_giant``, or by chance); a round-robin repartition does not
+    prevent that either, as Spark starts each input partition's
+    round-robin at ``XORShiftRandom(partitionId)``.
+
+    The url hash is Murmur3 (``hash``), not the bucket's ``xxhash64``:
+    with that, a partition would follow from the bucket whenever
+    ``n_bulk`` divides the bucket count, and a chunk of fewer buckets
+    than ``n_bulk`` would leave tasks empty."""
+    n_bulk = parallelism * _effective_waves(parallelism, est_rows)
+    n_giant = max(parallelism // 2, 1)
+    # coalesce(length, 0): a NULL html row goes to a bulk partition and
+    # reaches the stage, which records it as failed.
     size = F.coalesce(F.length("html"), F.lit(0))
-    bulk = (
-        df.where(size <= GIANT_HTML_BYTES)
-        .repartition(
-            parallelism * _effective_waves(parallelism, est_rows),
-            F.xxhash64("url"),
+    url_hash = F.hash("url")
+    target = F.when(
+        size > GIANT_HTML_BYTES, F.lit(n_bulk) + F.pmod(url_hash, F.lit(n_giant))
+    ).otherwise(F.pmod(url_hash, F.lit(n_bulk)))
+    return df.repartitionById(n_bulk + n_giant, target)
+
+
+def _check_columns(where: str, types: Dict[str, str], partitioned: bool) -> None:
+    """``types``: pyarrow or Spark type name by column."""
+    for name, kind in _PAGES_KINDS.items():
+        if name not in types:
+            raise ValueError(f"pages column '{name}' is missing in {where}")
+        # large_binary → binary, timestamp[us, tz=UTC] / timestamp_ntz → timestamp
+        if types[name].removeprefix("large_").split("[")[0].removesuffix("_ntz") != kind:
+            raise ValueError(
+                f"pages column '{name}' is {types[name]} in {where}; "
+                f"the engine reads it as {kind}"
+            )
+    if not partitioned:
+        raise ValueError(
+            f"pages column 'warc_date' is not a hive partition directory "
+            f"(warc_date=YYYY-MM-DD) above {where}"
         )
-    )
-    giants = (
-        df.where(size > GIANT_HTML_BYTES)
-        .repartition(max(parallelism // 2, 1))  # round-robin: no key
-    )
-    return bulk.unionByName(giants)
 
 
-def _estimate_rows(pages: DataFrame, pages_path: str) -> int:
-    """Input row count for task-wave sizing, WITHOUT a Spark job when
-    the input is a local parquet directory: parquet footers carry exact
-    row counts, and reading them driver-side with pyarrow costs ~0.1 ms
-    per file (measured 0.08 s for a 960-file corpus) where the
-    ``count()`` job measured 0.6-1.5 s of parallelism-independent tail
-    per run. Non-local paths (hdfs://, s3a://) and any read failure
-    fall back to the metadata-only Spark count — on a real cluster that
-    job is a negligible fraction of a chunk's work. The estimate only
-    SIZES WAVES; it can never affect results (and both paths return the
-    same exact footer total)."""
-    import os
-
+def _check_pages(spark: SparkSession, pages_path: str) -> int:
+    """Check the pages table against ``PAGES_SCHEMA`` (``ValueError``
+    naming the column) and return its row count, which sizes task
+    waves. A local parquet directory needs no Spark job: each part
+    file's footer gives its columns, types and exact row count (~0.1
+    ms per file, 0.08 s for a 960-file corpus), and its path the
+    ``warc_date=`` directory. Non-local paths (hdfs://, s3a://) fall
+    back to Spark's inferred schema and a metadata-only count — on a
+    real cluster a negligible fraction of a chunk's work."""
     p = pages_path
     if p.startswith("file:"):
-        p = p.split(":", 1)[1].lstrip("/")
-        p = "/" + p  # file:///x and file:/x both → /x
-    if "://" not in p and os.path.isdir(p):
-        try:
-            import pyarrow.parquet as pq
+        p = "/" + p.split(":", 1)[1].lstrip("/")  # file:///x and file:/x both → /x
+    if "://" in p or not os.path.isdir(p):
+        inferred = spark.read.parquet(pages_path)
+        types = {f.name: f.dataType.simpleString() for f in inferred.schema}
+        _check_columns(pages_path, types, "warc_date" in types)
+        return inferred.count()
 
-            total = 0
-            for root, _, files in os.walk(p):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-            if total > 0:
-                return total
-        except Exception:
-            pass
-    return pages.count()
+    import pyarrow.parquet as pq
+
+    total, n_files = 0, 0
+    for root, dirs, files in os.walk(p):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        partitioned = any(
+            part.startswith("warc_date=") for part in os.path.relpath(root, p).split(os.sep)
+        )
+        for name in files:
+            if name.startswith((".", "_")) or not name.endswith(".parquet"):
+                continue
+            path = os.path.join(root, name)
+            meta = pq.read_metadata(path)
+            schema = meta.schema.to_arrow_schema()
+            _check_columns(path, {f.name: str(f.type) for f in schema}, partitioned)
+            total += meta.num_rows
+            n_files += 1
+    if not n_files:
+        raise ValueError(f"pages table {pages_path} holds no parquet file")
+    return total
+
+
+def _bucket_counts(ckpt: CheckpointManager, chunk_id: int, lo: int, hi: int) -> List[dict]:
+    """Per-bucket lineage rows (``n_docs``, ``n_failed``, ``cpu_ms`` =
+    sum of ``proc_ms``) of the buckets that hold a document, counted
+    from the chunk's committed docs — so the lineage equals the
+    committed bytes even when Spark recomputed a lost cached partition
+    and re-measured its ``proc_ms``.
+
+    No Spark job: pyarrow reads three narrow columns one record batch
+    at a time, so driver memory stays O(batch). The cost is O(chunk
+    rows) at ~4 ns a row, about 10^-5 of the heavy stage's ~1 ms per
+    doc, so it holds at corpus scale. ``np.add.at`` adds row after
+    row: ``cpu_ms`` is the running sum over the part files in path
+    order."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = np.zeros(hi - lo, np.int64)
+    failed = np.zeros(hi - lo, np.int64)
+    cpu = np.zeros(hi - lo, np.float64)
+    for batch in ckpt.iter_chunk_batches("docs", chunk_id, ["bucket", "status", "proc_ms"]):
+        idx = batch.column("bucket").to_numpy() - lo
+        is_failed = pc.fill_null(pc.equal(batch.column("status"), "failed"), False)
+        np.add.at(n, idx, 1)
+        np.add.at(failed, idx, is_failed.to_numpy(zero_copy_only=False))
+        np.add.at(cpu, idx, pc.fill_null(batch.column("proc_ms"), 0.0).to_numpy())
+    return [
+        {"bucket": lo + int(i), "n_docs": int(n[i]), "n_failed": int(failed[i]),
+         "cpu_ms": float(cpu[i])}
+        for i in np.flatnonzero(n)
+    ]
+
+
+@contextmanager
+def _job_description(spark: SparkSession, description: str):
+    """Name the Spark jobs submitted inside the block, then restore the
+    caller's description (or its absence); the job group is untouched."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def run_pipeline(
@@ -272,12 +360,12 @@ def run_pipeline(
     ``resume=False`` first removes the engine-owned state an earlier
     run left under ``out_root`` (``CheckpointManager.reset``). The first
     failing chunk raises; the chunks committed before it stay committed
-    for a later resume."""
+    for a later resume. A pages table that does not match
+    ``PAGES_SCHEMA`` raises ``ValueError`` before anything is written."""
     cfg = doc_config or default_config()
     par = parallelism or spark.sparkContext.defaultParallelism
     ckpt = CheckpointManager(spark, out_root)
     run_id = new_run_id()
-    pages = spark.read.parquet(pages_path)
 
     # Validate/normalize the time bounds ONCE at submit time — before
     # the manifest is pinned and before any chunk is scheduled — so a
@@ -289,6 +377,12 @@ def run_pipeline(
         ts_min = _checked_ts(spark, ts_min, "ts_min")
     if ts_max is not None:
         ts_max = _checked_ts(spark, ts_max, "ts_max")
+
+    # The unfiltered row count bounds the per-chunk row estimate that
+    # sizes task waves. A ts window makes this an OVER-estimate, which
+    # at most keeps the slot-based wave count — it never
+    # under-provisions tasks.
+    est_total_rows = _check_pages(spark, pages_path)
 
     # Chunk identity = these parameters. The manifest pins them so a
     # resume under different values fails fast instead of silently
@@ -307,12 +401,6 @@ def run_pipeline(
         ckpt.reset(("docs", "results"))
         ckpt.write_manifest(manifest)
 
-    # One unfiltered count of the input (parquet footer statistics — no
-    # data scan) bounds the per-chunk row estimate that sizes task
-    # waves. A ts window makes this an OVER-estimate, which at most
-    # keeps the slot-based wave count — it never under-provisions tasks.
-    est_total_rows = _estimate_rows(pages, pages_path)
-
     done_chunks = ckpt.done_chunks("extracted") if resume else set()
     result = PipelineResult(out_root=out_root)
     t_start = time.perf_counter()
@@ -321,6 +409,9 @@ def run_pipeline(
         (c, c * n_buckets // n_chunks, (c + 1) * n_buckets // n_chunks)
         for c in range(n_chunks)
     ]
+    todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
+    result.chunks_skipped = len(bounds) - len(todo)
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path) if todo else None
 
     def run_chunk(chunk_id: int, lo: int, hi: int) -> List[dict]:
         """Process + commit one chunk; returns its per-bucket lineage
@@ -339,146 +430,52 @@ def run_pipeline(
             )
 
         t0 = time.perf_counter()
-        extracted = chunk_df.mapInPandas(
-            make_fused_stage(cfg), schema=EXTRACTED_SCHEMA
+        # Both tables come from one cached run of the heavy stage:
+        # results ≡ explode(from_json(committed docs)) without
+        # re-reading the committed chunk, whose few files would plan the
+        # JSON parse on 1-3 tasks. from_json runs in the heavy stage at
+        # its full width; the typed column is cache-only, the docs keep
+        # the byte-exact fields_json. MEMORY_AND_DISK spills rather than
+        # evicts; a lost cached partition is recomputed through the
+        # deterministic stages, so the results still match the docs.
+        cached = (
+            chunk_df.mapInPandas(make_fused_stage(cfg), schema=EXTRACTED_SCHEMA)
+            .withColumn("_fields", F.from_json("fields_json", FIELDS_T))
+            .persist()
         )
-
-        # Round-5 tail fix (north-rule scaling lever): the results rows
-        # derive from the SAME in-memory frame the docs commit wrote,
-        # not from a re-read of the committed table. The old shape —
-        # write docs, re-open chunk=NNNN, from_json the field payload,
-        # write results — cost a parallelism-INDEPENDENT ~1.3 s per
-        # run at bench scale: the freshly committed chunk is small
-        # enough that the re-scan planned 1-3 input tasks regardless
-        # of core count, so the JSON re-parse ran effectively serial.
-        # Deriving from the persisted frame keeps from_json at the
-        # full task width of the heavy stage and skips the file
-        # listing/footer round-trip entirely. Semantics are unchanged:
-        # the stages are deterministic and the cached rows ARE the
-        # bytes the docs commit wrote, so results ≡
-        # explode(from_json(committed docs)) — asserted by
-        # tests/test_spark_pipeline.py's fused-vs-core and resume
-        # row-level comparisons. Crash windows are also unchanged: the
-        # chunk's commit point stays the lineage append AFTER both
-        # writes, so a crash between them re-runs the whole chunk on
-        # resume. MEMORY_AND_DISK (the DataFrame default) spills
-        # rather than evicts, so a corpus-scale chunk never silently
-        # recomputes the heavy stage. Residual exposure if a cached
-        # partition IS lost (executor death between the two writes):
-        # Spark recomputes it through the deterministic stages, so the
-        # results/field values still match the committed docs exactly;
-        # only the wall-clock ``proc_ms`` metering re-measures, so the
-        # lineage cpu_ms for that partition's buckets can drift a few
-        # ms from the committed docs' proc_ms sum — metrics, never
-        # data. (The old derive-from-committed shape had the inverse
-        # cost on EVERY run; this one pays a metric wobble only on
-        # executor loss.)
-        # The typed field structs are parsed ONCE, inside the heavy
-        # parallel job (from_json rides job A at the full task width of
-        # the mapInPandas stage and is cached alongside the raw JSON),
-        # so the results job is a pure cache-scan + explode + write —
-        # measured 2.6 s → ~1.3 s at 32 cores for the 160k corpus. The
-        # committed docs schema is unchanged: the byte-exact
-        # ``fields_json`` envelope is what lands on disk; the typed
-        # column is cache-only.
-        cached = extracted.withColumn(
-            "_fields", F.from_json("fields_json", FIELDS_T)
-        ).persist()
+        # One row per field, exploded after the heavy stage (html long
+        # gone); the where() drops the placeholder row explode_outer
+        # gives a document without fields.
+        results = cached.select(
+            "url",
+            "bucket",
+            F.explode_outer("_fields").alias("f"),
+        ).select(
+            "url",
+            "bucket",
+            *[F.col(f"f.{c}").alias(c) for c in RESULT_COLUMNS],
+        ).where(F.col("field_name").isNotNull()).coalesce(par)
         try:
-            # Lineage metrics (A8: per-bucket doc counts, failures,
-            # cpu-ms) aggregate over the CACHE — a 64-row partial-agg
-            # job on narrow cached columns, ~0.1 s warm. History of
-            # this shape: round 3 scanned the committed table (0.86 s
-            # re-read); round 4 moved it into the results job as an
-            # observe() CollectMetrics node (zero extra passes) — but
-            # per-bucket breakdowns need 3 aggregate expressions per
-            # bucket, and a 192-expression observe node measured
-            # ~0.45 s of DRIVER-side plan/codegen per job (vs 0.02 s
-            # for 3 metrics; packing the sums into array metrics was
-            # worse still) plus 192 per-row when-sums inside the heavy
-            # job. The cache-side groupBy is cheaper than both and
-            # handles an empty bucket range (lo == hi, n_chunks >
-            # n_buckets) without a special case — it simply returns no
-            # rows and the empty-chunk sentinel is recorded.
-            #
-            # Round 6 ordering: this aggregation runs FIRST so it is
-            # the action that MATERIALIZES the cache — the heavy
-            # mapInPandas stage then executes at its full wave-sized
-            # task width, and the docs write below becomes a pure
-            # warm-cache scan that can be coalesced to one file per
-            # core (guide §6 output sizing: the old shape wrote one
-            # sliver file per wave-partition — waves×cores files —
-            # inside the same job that built the cache, paying file
-            # open/commit overhead and build/encode memory contention;
-            # measured ~2 s/chunk at 100k docs). Commit semantics are
-            # unchanged: the chunk's commit point stays the lineage
-            # APPEND after both writes.
-            per_bucket = [
-                {
-                    "bucket": r["bucket"],
-                    "n_docs": r["n"],
-                    "n_failed": r["f"],
-                    # sum() returns NULL for an all-NULL group (the old
-                    # observe shape filled 0.0 row-wise) — keep the
-                    # lineage schema's float contract
-                    "cpu_ms": r["c"] if r["c"] is not None else 0.0,
-                }
-                for r in cached.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.when(F.col("status") == "failed", 1).otherwise(0)
-                    ).alias("f"),
-                    F.sum("proc_ms").alias("c"),
-                )
-                .collect()
-            ]
-            per_bucket.sort(key=lambda r: r["bucket"])
-
-            # Long-format results: explode AFTER the heavy stage (html
-            # long gone); the JSON field payload is parsed JVM-side at
-            # codegen speed, one task per core (coalesce merges the
-            # heavy stage's wave-sized cache partitions without a
-            # shuffle — also keeps the results table at one file per
-            # core instead of waves× sliver files).
-            results = cached.select(
-                "url",
-                "bucket",
-                F.explode_outer("_fields").alias("f"),
-            ).select(
-                "url",
-                "bucket",
-                *[F.col(f"f.{c}").alias(c) for c in RESULT_COLUMNS],
-            ).where(F.col("field_name").isNotNull()).coalesce(par)
-
-            # The two warm-cache writes are independent (separate
-            # output directories, shared read-only cache) — submit them
-            # from two driver threads so each job's task tail backfills
-            # the other's idle slots (guide §2.6). The commit point is
-            # unchanged: the lineage append below happens only after
-            # BOTH futures complete (a failure in either raises here,
-            # before anything is recorded as done).
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as _pool:
-                f_docs = _pool.submit(
-                    ckpt.write_chunk,
-                    cached.drop("_fields").coalesce(par), "docs", chunk_id,
-                )
-                f_results = _pool.submit(
-                    ckpt.write_chunk, results, "results", chunk_id
-                )
-                f_docs.result()
-                f_results.result()
+            # The docs write runs the exchange and builds the cache, as
+            # an AQE query stage of its own at the exchange's full width:
+            # coalesce(par) narrows only the write, to one file per core
+            # (half the write time of a file per wave-partition). The
+            # writes run one after the other: submitted together, each
+            # started its own cache build and the chunk was no faster.
+            with _job_description(spark, f"chunk {chunk_id} · heavy stage + docs write"):
+                ckpt.write_chunk(cached.drop("_fields").coalesce(par), "docs", chunk_id)
+            with _job_description(spark, f"chunk {chunk_id} · results write"):
+                ckpt.write_chunk(results, "results", chunk_id)
         finally:
             cached.unpersist()
 
+        # The commit point is the lineage append, after both writes: a
+        # crash anywhere before it leaves the chunk to a resume.
+        per_bucket = _bucket_counts(ckpt, chunk_id, lo, hi)
         wall_ms = int((time.perf_counter() - t0) * 1000)
         ckpt.append_lineage("extracted", chunk_id, per_bucket, wall_ms, run_id)
         return per_bucket
 
-    todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
-    result.chunks_skipped = len(bounds) - len(todo)
     for chunk_id, lo, hi in todo:
         per_bucket = run_chunk(chunk_id, lo, hi)
         result.chunks_run += 1

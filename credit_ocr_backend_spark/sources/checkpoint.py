@@ -407,6 +407,16 @@ class CheckpointManager:
         dataset = ds.dataset(files, format="parquet", filesystem=self._filesystem)
         return dataset.to_table(columns=columns, filter=filter)
 
+    def iter_chunk_batches(self, name: str, chunk: int, columns: List[str]):
+        """The record batches of one chunk of a stage table, read on the
+        driver one part file after the other in path order, so memory
+        stays O(batch). A chunk with no part file yields nothing."""
+        import pyarrow.parquet as pq
+
+        for path in self._parquet_files(_chunk(name, chunk)):
+            with self._filesystem.open_input_file(path) as f:
+                yield from pq.ParquetFile(f).iter_batches(columns=columns)
+
     def _parquet_files(self, name: str) -> List[str]:
         """pyarrow paths of the ``*.parquet`` files directly under
         ``{root}/{name}``: no ``_SUCCESS``, ``.crc``, ``.tmp``, hidden

@@ -372,3 +372,138 @@ def test_resume_refuses_raw_ts_spelling_in_manifest(spark, tmp_path):
             ts_min="2024-01-01", resume=True,
         )
     assert mgr.read_manifest()["ts_min"] == "2024-01-01"
+
+
+@pytest.mark.parametrize("case", ["no_html", "no_warc_date_partition", "html_as_string"])
+def test_pages_table_off_the_declared_schema_fails_fast(spark, tmp_path, case):
+    """The engine reads the pages with a declared schema, which would
+    turn a missing column into NULLs: a table without html would commit
+    every document as failed, one without a warc_date partition would
+    commit nothing under a ts window. The run raises before anything is
+    written instead, naming the column."""
+    import os
+
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
+    rows = []
+    for k in range(2):
+        p = build_page(k)
+        rows.append((p["url"], p["warc_ts"], p["html"], p["html"].decode("utf-8")))
+    df = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string"
+    ).withColumn("warc_date", F.to_date("warc_ts"))
+    pages = str(tmp_path / "pages")
+    if case == "no_html":
+        df.drop("html").write.partitionBy("warc_date").parquet(pages)
+        column = "html"
+    elif case == "no_warc_date_partition":
+        df.drop("warc_date").write.parquet(pages)
+        column = "warc_date"
+    else:
+        df.drop("html").withColumnRenamed("text", "html").write.partitionBy(
+            "warc_date"
+        ).parquet(pages)
+        column = "html"
+
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match=f"pages column '{column}'"):
+        run_pipeline(
+            spark, pages, out, n_buckets=2, n_chunks=1,
+            ts_min="2020-01-01" if case == "no_warc_date_partition" else None,
+        )
+    assert not os.path.exists(out)
+    assert CheckpointManager(spark, out).done_chunks("extracted") == set()
+
+
+_RETRY_SCRIPT = r"""
+import json, sys
+
+from pyspark import TaskContext
+
+import credit_ocr_backend_spark.plans.pipeline as pipeline
+from credit_ocr_backend_spark.plans.session import get_spark
+from credit_ocr_backend_spark.sources.pages import write_pages
+
+pages, out = sys.argv[1], sys.argv[2]
+spark = get_spark("task-retry", parallelism=4, extra_conf={"spark.master": "local[4,2]"})
+write_pages(spark, pages, n_docs=60, partitions=4)
+real_stage = pipeline.make_fused_stage
+
+
+def failing_first_attempt(cfg):
+    fused = real_stage(cfg)
+
+    def stage(batches):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            raise RuntimeError("injected task failure")
+        yield from fused(batches)
+
+    return stage
+
+
+pipeline.make_fused_stage = failing_first_attempt
+res = pipeline.run_pipeline(spark, pages, out, n_buckets=8, n_chunks=1)
+sc = spark.sparkContext
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+failed, tracker, jobs = {}, sc.statusTracker(), sc._jsc.sc().statusStore().jobsList(None).iterator()
+while jobs.hasNext():
+    job = jobs.next()
+    for sid in tracker.getJobInfo(job.jobId()).stageIds:
+        if tracker.getStageInfo(sid).numFailedTasks:
+            failed[sid] = [job.description().get(), tracker.getStageInfo(sid).numFailedTasks]
+failed = list(failed.values())
+print(json.dumps({"n_docs": res.n_docs, "n_failed": res.n_failed, "failed_stages": failed}))
+spark.stop()
+"""
+
+
+def test_task_retry_commits_each_document_once(spark, tmp_path):
+    """The fused stage's first attempt of one task fails on local[4,2],
+    which allows one retry. The run, in a fresh process since
+    getOrCreate would reuse this module's session and master, must
+    still commit every document once: docs and results hold each url
+    once, the lineage counts equal the committed docs, and both lookups
+    agree."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    env = {**os.environ, "PYTHONPATH": repo}
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, pages, out],
+        capture_output=True, text=True, cwd=repo, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    got = json.loads([line for line in r.stdout.splitlines() if line.startswith("{")][-1])
+    assert (got["n_docs"], got["n_failed"]) == (60, 0)
+    assert got["failed_stages"] == [["chunk 0 · heavy stage + docs write", 1]]
+
+    docs = pq.read_table(f"{out}/docs").to_pylist()
+    urls = Counter(d["url"] for d in docs)
+    assert len(urls) == 60 and set(urls.values()) == {1}
+    want = Counter()
+    for d in docs:
+        want[d["url"]] += len(json.loads(d["fields_json"]))
+    results = Counter(row["url"] for row in pq.read_table(f"{out}/results", columns=["url"]).to_pylist())
+    assert results == +want
+
+    ckpt = CheckpointManager(spark, out)
+    lineage = ckpt.read_lineage("extracted").to_pylist()
+    per_bucket = Counter(d["bucket"] for d in docs)
+    assert {r["bucket"]: r["n_docs"] for r in lineage} == dict(per_bucket)
+
+    bulk = {r["url"]: r.asDict() for r in doc_status_bulk(spark, out, list(urls)).collect()}
+    assert set(bulk) == set(urls)
+    for url in list(urls)[::7]:
+        point = doc_status(spark, out, url)
+        assert {k: point[k] for k in bulk[url]} == bulk[url]

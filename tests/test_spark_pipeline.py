@@ -11,6 +11,7 @@
 
 from __future__ import annotations
 
+import uuid
 from collections import Counter
 from pathlib import Path
 
@@ -225,12 +226,12 @@ def test_input_slice_prunes_partitions_and_columns(spark, tmp_path):
     url/warc_ts/html — never text/lang."""
     import re
 
-    from credit_ocr_backend_spark.plans.pipeline import _input_slice
+    from credit_ocr_backend_spark.plans.pipeline import PAGES_SCHEMA, _input_slice
     from credit_ocr_backend_spark.sources.pages import write_pages
 
     pages_dir = str(tmp_path / "pages")
     write_pages(spark, pages_dir, n_docs=100, partitions=4)
-    pages = spark.read.parquet(pages_dir)
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_dir)  # run_pipeline's read
     df = _input_slice(pages, 16, 0, 16, "2024-06-01", "2024-07-01")
     plan = df._jdf.queryExecution().executedPlan().toString()
 
@@ -408,7 +409,7 @@ def _spark_jobs(spark, fn):
     are new since the call began."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = "lookup-job-count"
+    group = f"job-count-{uuid.uuid4().hex[:8]}"  # a group of its own per call
     before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
     try:
@@ -555,3 +556,119 @@ def test_crash_window_leaves_chunk_uncommitted(
     assert (res.chunks_skipped, res.chunks_run) == (3, 1)
     assert set(res.buckets_done) == {6, 7}
     assert _docs_map(spark, out) == clean_four_chunks
+
+
+@pytest.mark.parametrize("est_rows", [100, None])  # waves 1, waves 4 at par 4
+def test_defuse_skew_isolates_giants_in_one_exchange(spark, est_rows):
+    """After AQE, the exchange has n_bulk + n_giant partitions; no
+    partition holds both a giant and a bulk row; a NULL html lands in a
+    bulk partition; and bulk rows that all share one bucket still reach
+    every bulk partition (the url hash is not the bucket's)."""
+    from pyspark import TaskContext
+
+    from credit_ocr_backend_spark.plans.pipeline import (
+        GIANT_HTML_BYTES,
+        _defuse_skew,
+        _effective_waves,
+    )
+    from credit_ocr_backend_spark.sources.checkpoint import url_bucket
+
+    par = 4
+    n_bulk, n_giant = par * _effective_waves(par, est_rows), par // 2
+    assert (n_bulk > par) == (est_rows is None)
+    bulk = [u for u in (f"https://skew.example/{i}" for i in range(20000))
+            if url_bucket(u, 64) == 5][:200]
+    rows = [(u, bytearray(b"<p>x</p>"), 5) for u in bulk]
+    rows += [(f"https://giant.example/{i}", bytearray(b"g" * (GIANT_HTML_BYTES + 1)), 1)
+             for i in range(5)]
+    rows.append(("https://null.example/doc", None, 2))
+    df = spark.createDataFrame(rows, "url string, html binary, bucket int").repartition(3)
+
+    def probe(batches):
+        import pandas as pd
+
+        giants = n = nulls = 0
+        for pdf in batches:
+            for html in pdf["html"]:
+                n += 1
+                nulls += html is None
+                giants += html is not None and len(html) > GIANT_HTML_BYTES
+        yield pd.DataFrame({"pid": [TaskContext.get().partitionId()], "giants": [giants],
+                            "bulk": [n - giants - nulls], "nulls": [nulls]})
+
+    got = {
+        r["pid"]: r
+        for r in _defuse_skew(df, par, est_rows)
+        .mapInPandas(probe, "pid int, giants int, bulk int, nulls int")
+        .collect()
+    }
+    assert sorted(got) == list(range(n_bulk + n_giant))
+    assert sum(r["giants"] for r in got.values()) == 5
+    assert sum(r["bulk"] for r in got.values()) == len(bulk)
+    for pid, r in got.items():
+        assert not (r["giants"] and (r["bulk"] or r["nulls"])), r
+        assert (r["giants"] > 0) <= (pid >= n_bulk), r
+        assert (r["bulk"] > 0) == (pid < n_bulk), r
+    assert [pid for pid, r in got.items() if r["nulls"]][0] < n_bulk
+
+
+def test_lineage_counts_equal_committed_docs(spark, pages_path, tmp_path):
+    """Every chunk's per-bucket lineage n_docs, n_failed and cpu_ms
+    equal an aggregate of its committed docs, exactly: the sums are
+    taken over the part files in path order, row after row."""
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
+    out = tmp_path / "out"
+    res = run_pipeline(spark, pages_path, str(out), n_buckets=8, n_chunks=4)
+    assert res.chunks_run == 4 and res.n_docs == N_DOCS
+    ckpt = CheckpointManager(spark, str(out))
+    for chunk in range(4):
+        want = {}
+        for part in sorted((out / "docs" / f"chunk={chunk:04d}").glob("*.parquet")):
+            for d in pq.read_table(part, columns=["bucket", "status", "proc_ms"]).to_pylist():
+                n, f, c = want.get(d["bucket"], (0, 0, 0.0))
+                want[d["bucket"]] = (n + 1, f + (d["status"] == "failed"), c + d["proc_ms"])
+        lineage = ckpt.read_lineage("extracted", chunk).to_pylist()
+        got = {r["bucket"]: (r["n_docs"], r["n_failed"], r["cpu_ms"]) for r in lineage}
+        assert got == want and want, chunk
+
+
+def _job_descriptions(sc) -> dict:
+    """Job id → job description of every job Spark's status store holds."""
+    jobs = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    out = {}
+    while jobs.hasNext():
+        job = jobs.next()
+        description = job.description()
+        out[job.jobId()] = description.get() if description.isDefined() else None
+    return out
+
+
+def test_chunk_runs_four_named_jobs(spark, pages_path, tmp_path):
+    """A computed chunk submits 4 Spark jobs (exchange, cache build,
+    docs write, results write), each named after its chunk and phase;
+    a resume with nothing left submits none. The caller's job
+    description is restored afterwards."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "out")
+    before = set(_job_descriptions(sc))
+    sc.setLocalProperty("spark.job.description", "caller's description")
+    try:
+        run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller's description"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    names = {d for job, d in _job_descriptions(sc).items() if job not in before}
+    assert sorted(names) == [
+        "chunk 0 · heavy stage + docs write", "chunk 0 · results write",
+        "chunk 1 · heavy stage + docs write", "chunk 1 · results write",
+    ]
+
+    _, jobs = _spark_jobs(
+        spark, lambda: run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2)
+    )
+    assert jobs == 8
+    _, jobs = _spark_jobs(
+        spark, lambda: run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2, resume=True)
+    )
+    assert jobs == 0
