@@ -19,8 +19,8 @@ Two strictly separated layers:
   ``operators.stages`` (the fused Arrow-batched stage), ``plans``
   (session and the chunked, resumable pipeline) and ``sources`` (the
   page corpus, checkpoint + lineage + resume). Outside it sit the
-  corpus-level operator families (``operators.dedup``, ``similarity``,
-  ``sampling``, ``spread``), ``functions`` (JVM-side scalar and
+  corpus-level dedup operators (``operators.dedup`` with its
+  ``operators.spread`` guard), ``functions`` (JVM-side scalar and
   visualization analogues of the reference) and ``sinks`` (xlsx sheet,
   annotated PNG).
 """

@@ -1,32 +1,21 @@
 """Spark-native scalar analogues of the reference's cleaning functions.
 
-These are the *corpus-level, JVM-side* versions of SURVEY.md §2.7
-(F1-F15) — whole-stage-codegen'd column expressions for bulk queries.
+These are *corpus-level, JVM-side* versions of some of SURVEY.md §2.7's
+cleaners (F3, F5, F6, F10) — whole-stage-codegen'd column expressions
+for bulk queries.
 They intentionally live NEXT TO (not instead of) the pure-Python
 ``core.fields.clean_value``: per-document byte-parity extraction uses
 the core inside Arrow UDFs; relational analytics over billions of rows
 uses these built-ins so nothing drops out of codegen.
 
-Reference: /root/reference/src/llm/field_extractor.py:42-76 (clean_value),
-tests/test_mock_ocr_results.py:12-14 (normalize_label),
-src/dms_mock/service.py:26-32 (sha256).
+Reference: src/llm/field_extractor.py:42-76 (clean_value),
+tests/test_mock_ocr_results.py:12-14 (normalize_label).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def clean_string(col: Column | str) -> Column:
-    """F1: strip."""
-    return F.trim(F.col(col) if isinstance(col, str) else col)
-
-
-def valid_german_date(col: Column | str) -> Column:
-    """F2: value iff DD.MM.YYYY prefix-matches, else NULL."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.rlike(r"^\d{2}\.\d{2}\.\d{4}$"), c)
 
 
 def clean_currency(col: Column | str) -> Column:
@@ -46,12 +35,6 @@ def clean_currency(col: Column | str) -> Column:
     return digits.try_cast("double")
 
 
-def clean_area(col: Column | str) -> Column:
-    """F4: strip 'm²' and spaces → double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"m²| ", "").cast("double")
-
-
 def clean_number(col: Column | str) -> Column:
     """F5: digits only → long."""
     c = F.col(col) if isinstance(col, str) else col
@@ -64,31 +47,11 @@ def clean_boolean(col: Column | str) -> Column:
     return F.lower(c).contains("[x]")
 
 
-def german_number(col: Column | str) -> Column:
-    """F7: '1.234,56' → 1234.56 (thousands dots dropped, comma point)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(
-        F.regexp_replace(c, r"\.", ""), ",", "."
-    ).cast("double")
-
-
 def normalize_label_col(col: Column | str) -> Column:
     """F10: the n-stripping label normalizer (quirk preserved):
     lower → drop '?' and every 'n' → trim."""
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.translate(F.lower(c), "?n", ""))
-
-
-def content_sha256(col: Column | str) -> Column:
-    """F15/S7: sha256 hex digest of the content bytes."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c.cast("binary"), 256)
-
-
-# (hex_prefix_to_long lived here through round 4; it lost its last
-# caller when simhash() inlined the per-word conv expression and was
-# removed — the cross-engine md5-prefix hash pattern lives inline in
-# operators/dedup.py and operators/sampling.py.)
 
 
 # Tracking parameters stripped by canonical_url — the standard crawl

@@ -1,5 +1,5 @@
 """Visualization scalars and the annotation draw-plan (SURVEY §2 rows
-F17-F19 + W4 + the deterministic half of S11).
+F17-F19 + the deterministic half of S11).
 
 The reference renders annotated PNGs / xlsx straight from Python
 (/root/reference/src/visualization/pdf_visualizer.py). On Spark the
@@ -23,12 +23,10 @@ Reference parity, cited per function:
 * field_name_for_label  — pdf_visualizer.py:139-146 (n-stripper label
   normalization + first-containment-match over field_mappings in
   declaration order)
-* items_with_boxes_by_page — pdf_visualizer.py:114-118 (W4 grouping)
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Iterable, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -127,17 +125,6 @@ def field_name_for_label(
     if chain is None:
         return F.lit(None).cast("string")
     return chain.otherwise(F.lit(None).cast("string"))
-
-
-def items_with_boxes_by_page(items: DataFrame) -> DataFrame:
-    """W4: group drawable items (bounding_box present) by (url, page) —
-    the visualizer's items_by_page dict (pdf_visualizer.py:114-118) as a
-    relational op. Expects exploded item rows."""
-    return (
-        items.where(F.col("bounding_box").isNotNull())
-        .groupBy("url", "page")
-        .agg(F.count("*").alias("n_drawable"))
-    )
 
 
 def draw_plan(

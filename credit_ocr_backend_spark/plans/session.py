@@ -1,7 +1,9 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Single place where execution knobs live so tests, bench and the
-spark-submit entrypoint agree:
+``SQL_CONF`` is the single place where the engine's parallelism-
+independent SQL knobs live; ``get_spark`` (tests, bench) and the
+spark-submit entrypoint (``jobs/extract_job.py``) both apply it, so a
+submitted run plans and writes exactly as a local one:
 
 * AQE on (runtime coalescing + skew-join splitting),
 * Arrow max batch 4096 rows — re-measured in round 6 after the
@@ -11,8 +13,12 @@ spark-submit entrypoint agree:
   docs ≤32 KB → ≤128 MB/batch worst-case (realistic ~12 MB at ~3 KB
   avg html), and giant partitions hold ~a dozen rows each, far below
   any batch cap (SURVEY.md §7.3),
-* shuffle partitions sized to the local core count (on a real cluster
-  this comes from the submit conf; AQE coalesces down as needed).
+* zstd parquet for the pages, docs and results.
+
+``get_spark`` adds what a local session needs on top: the master,
+shuffle partitions and scan floor sized to the local core count (on a
+real cluster these come from the submit conf; AQE coalesces down as
+needed), the file committer, driver memory and scratch dir.
 """
 
 from __future__ import annotations
@@ -22,6 +28,21 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 4096
+
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Allow shuffled-hash join where a side's per-partition build
+    # fits (guide §3.1): sort-merge pays two full sorts that a hash
+    # build avoids; plans that NEED sort-merge (the LSH self-joins)
+    # pin it explicitly with hint("merge").
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    "spark.sql.parquet.compression.codec": "zstd",
+    "spark.sql.session.timeZone": "UTC",
+}
 
 
 def get_spark(
@@ -45,13 +66,6 @@ def get_spark(
         .master(f"local[{parallelism}]")
         .config("spark.sql.shuffle.partitions", str(parallelism))
         .config("spark.default.parallelism", str(parallelism))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Allow shuffled-hash join where a side's per-partition build
-        # fits (guide §3.1): sort-merge pays two full sorts that a hash
-        # build avoids; plans that NEED sort-merge (the LSH self-joins)
-        # pin it explicitly with hint("merge").
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Floor on scan parallelism (guide §6): few-row-group local
         # parquet otherwise plans 1-2 scan tasks regardless of core
         # count. Parameterised by the session's parallelism; at corpus
@@ -59,9 +73,6 @@ def get_spark(
         # no-op there (it can only SHRINK split size, never inflate
         # task counts past the natural file/row-group layout).
         .config("spark.sql.files.minPartitionNum", str(parallelism))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # v2 file committer: tasks move their output into place at task
         # commit instead of the driver serially renaming every file at
         # job commit — the standard choice for many-file batch writes.
@@ -69,14 +80,12 @@ def get_spark(
         # atomicity: chunk completion is decided by the lineage append,
         # never by directory existence alone.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**SQL_CONF, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()

@@ -334,9 +334,6 @@ class CheckpointManager:
     def done_chunks(self, stage: str) -> Set[int]:
         return set(self.read_lineage(stage, columns=["chunk"]).column("chunk").to_pylist())
 
-    def done_buckets(self, stage: str) -> Set[int]:
-        return set(self.read_lineage(stage, columns=["bucket"]).column("bucket").to_pylist())
-
     def append_lineage(
         self,
         stage: str,

@@ -177,17 +177,14 @@ def _layout_payload(k: int) -> str:
     return json.dumps(words, ensure_ascii=False)
 
 
-def build_page(
-    k: int, giant_mod: int = GIANT_MOD, giant_repeat: int = GIANT_REPEAT
-) -> Dict[str, Any]:
-    """Pure page builder: index → one input-table row. ``giant_mod`` /
-    ``giant_repeat`` tune the skew tail (density / size) for skew
-    experiments; values are captured in the Spark closure so they reach
-    the Python workers."""
+def build_page(k: int) -> Dict[str, Any]:
+    """Pure page builder: index → one input-table row. Every
+    ``GIANT_MOD``-th page (``k % GIANT_MOD == 17``) is a giant, its
+    paragraphs repeated ``GIANT_REPEAT`` times (the skew tail)."""
     head, foot = _chrome(k)
-    is_giant = k % giant_mod == 17
+    is_giant = k % GIANT_MOD == 17
     is_layout = k % LAYOUT_FRACTION_MOD == 3 and not is_giant
-    n_paras = (2 + k % 3) * (giant_repeat if is_giant else 1)
+    n_paras = (2 + k % 3) * (GIANT_REPEAT if is_giant else 1)
 
     if is_layout:
         body = (
@@ -224,13 +221,7 @@ def build_page(
 # stays Spark-free).
 # ---------------------------------------------------------------------------
 
-def generate_pages_df(
-    spark,
-    n_docs: int,
-    partitions: int = 32,
-    giant_mod: int = GIANT_MOD,
-    giant_repeat: int = GIANT_REPEAT,
-):
+def generate_pages_df(spark, n_docs: int, partitions: int = 32):
     """Distributed corpus: spark.range → Arrow-batched page builder.
 
     Generation happens on executors (no driver-side loop), one batch at
@@ -253,9 +244,7 @@ def generate_pages_df(
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame(
-                [build_page(int(k), giant_mod, giant_repeat) for k in pdf["id"]]
-            )
+            yield pd.DataFrame([build_page(int(k)) for k in pdf["id"]])
 
     return (
         spark.range(0, n_docs, numPartitions=partitions)
@@ -264,16 +253,8 @@ def generate_pages_df(
     )
 
 
-def write_pages(
-    spark,
-    path: str,
-    n_docs: int,
-    partitions: int = 32,
-    giant_mod: int = GIANT_MOD,
-    giant_repeat: int = GIANT_REPEAT,
-) -> None:
+def write_pages(spark, path: str, n_docs: int, partitions: int = 32) -> None:
     """Materialize the corpus partitioned by warc_date (day-granular
     pruning, the Iceberg days(warc_ts) analogue)."""
-    generate_pages_df(
-        spark, n_docs, partitions, giant_mod, giant_repeat
-    ).write.mode("overwrite").partitionBy("warc_date").parquet(path)
+    df = generate_pages_df(spark, n_docs, partitions)
+    df.write.mode("overwrite").partitionBy("warc_date").parquet(path)

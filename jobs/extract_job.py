@@ -53,18 +53,17 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from credit_ocr_backend_spark.plans.pipeline import run_pipeline
+    from credit_ocr_backend_spark.plans.session import SQL_CONF
     from credit_ocr_backend_spark.sources.pages import write_pages
 
     # Under spark-submit master/executors come from the submit conf; the
-    # engine's runtime-settable knobs are applied on top.
+    # engine's SQL knobs, the same ones get_spark sets, go on top.
     spark = (
         SparkSession.getActiveSession()
         or SparkSession.builder.appName("extract-job").getOrCreate()
     )
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for key, value in SQL_CONF.items():
+        spark.conf.set(key, value)
 
     pages_path = args.pages
     if args.generate:

@@ -173,7 +173,7 @@ def test_checkpoint_file_scheme_roundtrip(spark, tmp_path):
     mgr.append_lineage("extracted", 0, [{"bucket": 0, "n_docs": 3, "n_failed": 0, "cpu_ms": 1.0}], 10, "runA")
     mgr.append_lineage("extracted", 1, [], 5, "runA")  # empty-chunk sentinel
     assert mgr.done_chunks("extracted") == {0, 1}
-    assert -1 in mgr.done_buckets("extracted")
+    assert -1 in mgr.read_lineage("extracted", columns=["bucket"]).column("bucket").to_pylist()
 
     def key(row):
         return (row["chunk"], row["bucket"], row["n_docs"], row["run_id"])

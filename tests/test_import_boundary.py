@@ -19,8 +19,6 @@ OUTSIDE = (
     "functions",
     "sinks",
     "operators.dedup",
-    "operators.similarity",
-    "operators.sampling",
     "operators.spread",
 )
 

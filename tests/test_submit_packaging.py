@@ -4,6 +4,7 @@ and the bundled document config both resolve through the zip."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -13,6 +14,8 @@ import zipfile
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
+
+import pyarrow.parquet as pq  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,3 +58,9 @@ def test_spark_submit_py_files_no_checkout(tmp_path):
     line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
     res = json.loads(line)
     assert res["n_docs"] == 120 and res["n_failed"] == 0
+    # the job applies the engine's SQL conf: its docs are zstd, as a
+    # get_spark run writes them
+    parts = glob.glob(os.path.join(tmp, "out", "docs", "chunk=*", "*.parquet"))
+    assert parts
+    for part in parts:
+        assert pq.read_metadata(part).row_group(0).column(0).compression == "ZSTD"
