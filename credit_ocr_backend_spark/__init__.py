@@ -19,7 +19,7 @@ Two strictly separated layers:
   ``operators.stages`` (the fused Arrow-batched stage), ``plans``
   (session and the chunked, resumable pipeline) and ``sources`` (the
   page corpus, checkpoint + lineage + resume). Outside it sit the
-  corpus-level dedup operators (``operators.dedup`` with its
+  SimHash near-duplicate operators (``operators.dedup`` with its
   ``operators.spread`` guard), ``functions`` (JVM-side scalar and
   visualization analogues of the reference) and ``sinks`` (xlsx sheet,
   annotated PNG).

@@ -837,16 +837,6 @@ from operator import itemgetter as _itemgetter
 
 _LAYOUT_SORT_KEY = _itemgetter("p", "y", "x")  # ≡ lambda w: (w["p"], w["y"], w["x"])
 
-# Layout-word token cache: (t, p, x, y, w, h, c) fully determines the
-# word token dict AND its centroid (corners/centroid are arithmetic in
-# x/y/w/h; confidence is round(c, 2)). Form payloads repeat the same
-# words at the same geometry across millions of documents (only the
-# per-document confidence draw varies, over 10 values). Tokens are
-# read-only downstream — the same sharing contract as _WORD_TOKEN_CACHE.
-_LAYOUT_WORD_CACHE: Dict[tuple, tuple] = {}
-_LAYOUT_WORD_CACHE_MAX = 65536
-
-
 def tokens_from_layout_words(payload: List[Dict[str, Any]], y_tol: float = 0.005) -> List[Token]:
     """PDF-path layout analysis: bbox word grouping into reading-order
     lines (the engine's stand-in for the reference OCR's line detection).
@@ -861,54 +851,23 @@ def tokens_from_layout_words(payload: List[Dict[str, Any]], y_tol: float = 0.005
 
     words: List[Token] = []
     cents: List[Tuple[float, float]] = []
-    cache = _LAYOUT_WORD_CACHE
     for w in ordered:
-        # Cache key guards (mirrors _num_frag's exact-class rule):
-        # Python hashes 1 == 1.0 == True and -0.0 == 0.0 to the same
-        # slot while json renders each differently, so only the
-        # unambiguous shape is cached — str text, int page, nonzero
-        # floats for the geometry and confidence (or missing/None c).
-        # Anything else builds uncached (identical output either way).
-        # key access order matches the pre-cache build path (x, y, w,
-        # h, t, p, c) so a malformed word raises the same KeyError
-        x, y, ww, h = w["x"], w["y"], w["w"], w["h"]
-        t, p = w["t"], w["p"]
+        x0, y0 = w["x"], w["y"]
+        x1, y1 = x0 + w["w"], y0 + w["h"]
         c = w.get("c")
-        if (
-            t.__class__ is str
-            and p.__class__ is int
-            and x.__class__ is float and x != 0
-            and y.__class__ is float and y != 0
-            and ww.__class__ is float and ww != 0
-            and h.__class__ is float and h != 0
-            and (c is None or (c.__class__ is float and c != 0))
-        ):
-            key = (t, p, x, y, ww, h, c)
-            ent = cache.get(key)
-        else:
-            key = None
-            ent = None
-        if ent is None:
-            x0, y0, x1, y1 = x, y, x + ww, y + h
-            ent = (
-                {
-                    "type": "word",
-                    "text": t,
-                    "page": p,
-                    "bounding_box": [
-                        {"x": x0, "y": y0}, {"x": x1, "y": y0},
-                        {"x": x1, "y": y1}, {"x": x0, "y": y1},
-                    ],
-                    "confidence": round(c, 2) if c is not None else None,
-                },
-                # same left-to-right corner order as _assemble_tokens'
-                # recomputation — bit-identical centroids
-                ((y0 + y0 + y1 + y1) / 4, (x0 + x1 + x1 + x0) / 4),
-            )
-            if key is not None and len(cache) < _LAYOUT_WORD_CACHE_MAX:
-                cache[key] = ent
-        words.append(ent[0])
-        cents.append(ent[1])
+        words.append({
+            "type": "word",
+            "text": w["t"],
+            "page": w["p"],
+            "bounding_box": [
+                {"x": x0, "y": y0}, {"x": x1, "y": y0},
+                {"x": x1, "y": y1}, {"x": x0, "y": y1},
+            ],
+            "confidence": round(c, 2) if c is not None else None,
+        })
+        # same left-to-right corner order as _assemble_tokens'
+        # recomputation — bit-identical centroids
+        cents.append(((y0 + y0 + y1 + y1) / 4, (x0 + x1 + x1 + x0) / 4))
 
     lines: List[Tuple[str, int, List[Dict[str, float]]]] = []
     group: List[Dict[str, Any]] = []

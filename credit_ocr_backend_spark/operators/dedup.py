@@ -1,20 +1,15 @@
-"""Corpus deduplication operators — first-class components of the
-training-data pipeline (exact, MinHash+LSH, SimHash, n-gram Jaccard).
+"""SimHash near-duplicate operators over a document table.
 
-All pure DataFrame compositions of built-ins (whole-stage codegen, no
-Python on the hot path). Hashing is md5-hex based so a DuckDB oracle
-can reproduce every value exactly (``conv(substr(md5(x),1,15),16,10)``
-≡ ``CAST('0x'||substr(md5(x),1,15) AS BIGINT)``).
+Pure DataFrame compositions of built-ins (whole-stage codegen, no
+Python on the hot path). Token hashes are md5-hex based, so the same
+values follow in any engine that has md5 (DuckDB:
+``CAST('0x'||substr(md5(tok),1,4) AS BIGINT)`` ≡
+``conv(substr(md5(tok),1,4),16,10)``).
 
-Scale notes:
-* exact dedup is one hash-shuffle on the digest — the canonical
-  pattern at any scale;
-* MinHash signatures are computed with h min-aggregations in a single
-  groupBy pass over exploded shingles (no h-way row amplification);
-  LSH banding turns the O(n²) similarity join into an equi-join on
-  (band_id, band_hash) — the only join is on a high-cardinality key,
-  AQE handles residual bucket skew;
-* SimHash is one explode + one groupBy with 16 conditional sums.
+``simhash`` is one explode + one groupBy with one conditional sum per
+fingerprint bit; ``simhash_near_dupes`` bands the fingerprint and
+turns the O(n²) Hamming comparison into an equi-join on
+(band_id, band_val), with a star guard against oversized buckets.
 """
 
 from __future__ import annotations
@@ -26,592 +21,18 @@ from pyspark.sql import functions as F
 
 from credit_ocr_backend_spark.operators.spread import spread_scan
 
-N_MINHASHES = 8
-LSH_BAND_ROWS = 2  # 8 hashes → 4 bands of 2
 SIMHASH_BITS = 16
 # Band buckets larger than this emit star pairs (representative ↔ member)
 # instead of all-pairs: a Common-Crawl-scale mega-duplicate cluster of c
-# docs sharing a band hash would otherwise fan out O(c²) rows (c=10⁶ →
+# docs sharing a band value would otherwise fan out O(c²) rows (c=10⁶ →
 # 5·10¹¹ pairs from ONE bucket). The star keeps the cluster connected
-# for downstream connected-components/canonicalization at O(c) cost.
+# at O(c) cost.
 LSH_MAX_BUCKET = 64
 
 
 def words_col(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(F.lower(c)), r"\s+")
-
-
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Word n-gram shingles from a *materialized* token-array column.
-
-    IMPORTANT: pass a bound column (project ``words_col`` in a separate
-    select first), not the split expression itself — Catalyst inlines
-    expressions into generator lambdas, so an inline split would re-parse
-    the text once per element_at (≈3× per shingle, ~100× per document)."""
-    count = F.size(toks) - (n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def shingles_col(text: Column | str, n: int = 3) -> Column:
-    """Shingles straight from text — only for single-evaluation contexts
-    (e.g. array_distinct + explode in one select). Hot paths should use
-    shingles_from_tokens over a projected token column."""
-    return shingles_from_tokens(words_col(text), n)
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on the md5 digest; keeps the smallest
-    id as canonical. Returns (content_hash, n_dups, canonical_id)."""
-    return (
-        df.select(F.col(id_col).alias("_id"), F.md5(text_col).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.min("_id").alias("canonical_id"),
-        )
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n_hashes: int = N_MINHASHES
-) -> DataFrame:
-    """(id, mh0..mh{n-1}): per-document MinHash signature.
-
-    One explode + one groupBy with n_hashes min-aggregations; the seed
-    is mixed in as a string prefix so each hash family member is an
-    independent permutation proxy.
-
-    Plan shape (r6): the input is spread across the cluster's slots
-    when its file layout under-parallelizes the scan (guide §2.5 —
-    single-row-group parquet ran the whole explode + hash-family +
-    min(string) SortAggregate pipeline on one core). The spread key is
-    DELIBERATELY xxhash64(id), not the raw id: a raw-id repartition
-    would satisfy the groupBy's distribution and fold away the
-    aggregation exchange — which costs ~50n-row sort + n_hashes·50n
-    md5s of partial-aggregation work sitting ABOVE the only reusable
-    exchange, so every consumer that banding forks into (the LSH
-    self-join's sig and non-sig subtrees) would recompute it. With the
-    derived key the heavy explode + partial min-aggregation sits BELOW
-    the doc-keyed exchange, runs exactly once however many times the
-    signature subtree is consumed, and the exchange itself carries only
-    one partially-aggregated row per doc per task."""
-    tokens = spread_scan(df, F.xxhash64(F.col(id_col))).select(
-        F.col(id_col).alias("doc"), words_col(text_col).alias("_toks")
-    )
-    exploded = tokens.select(
-        "doc", F.explode(shingles_from_tokens(F.col("_toks"))).alias("sh")
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("sh")))).alias(f"mh{s}")
-        for s in range(n_hashes)
-    ]
-    return exploded.groupBy("doc").agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    n_hashes: int = N_MINHASHES,
-    band_rows: int = LSH_BAND_ROWS,
-    max_bucket: int = LSH_MAX_BUCKET,
-) -> DataFrame:
-    """Band the signature and self-join on (band_id, band_hash): two
-    documents are candidates iff some band agrees fully. Returns
-    distinct (doc_a, doc_b) with doc_a < doc_b.
-
-    One explode builds all bands in a single pass (a per-band
-    union would re-evaluate the signature subtree once per band per
-    join side); the self-join's two sides share the same subplan so the
-    shuffle exchange is reused.
-
-    Mega-cluster guard: buckets with more than ``max_bucket`` members
-    contribute star pairs (O(c)) instead of all-pairs (O(c²)) — no pair
-    blow-up. The star is VALUE-GROUPED: members are first grouped by
-    their full signature (identical signatures are as-identical as
-    MinHash can attest, so these pairs near-certainly survive
-    downstream Jaccard verification — near-certainly, not always:
-    signature equality over ``n_hashes`` draws is probabilistic
-    evidence of high Jaccard, not proof, so a member whose true
-    Jaccard to its value-rep sits below the verify threshold can
-    occasionally collide on every hash and then lose that connectivity
-    at the verify step; the SimHash analog of this guard IS exact,
-    since equal fingerprints mean Hamming distance 0), each member
-    stars to its value-group representative, and the value
-    representatives star to the bucket representative. Connectivity
-    through the bucket representative remains subject to the
-    downstream verify (documents > the verify radius from the
-    representative lose that bucket's connectivity — the accepted
-    approximation); connectivity WITHIN a signature-value group
-    survives verification whenever its members' pairwise Jaccard
-    really clears the threshold, which closes the adversarial case of
-    many identical documents sharing a bucket whose min-id
-    representative is dissimilar to all of them. Use
-    :func:`oversized_band_buckets` to report what was star-reduced
-    (no silent caps)."""
-    n_bands = n_hashes // band_rows
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    sig_hash = F.md5(
-        F.concat_ws("|", *[F.col(f"mh{i}") for i in range(n_hashes)])
-    )
-    banded = signatures.select(
-        "doc", sig_hash.alias("sig"), F.explode(band_structs).alias("band")
-    ).select(
-        "doc",
-        "sig",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_hash").alias("band_hash"),
-    )
-
-    # Bucket size + representatives in one shuffle on (band_id, band_hash):
-    # the value-group window's partitioning is a superset of the bucket
-    # window's keys, so HashPartitioning(band_id, band_hash) satisfies
-    # both — Catalyst adds a sort, not a second exchange.
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("band_id", "band_hash")
-    wv = Window.partitionBy("band_id", "band_hash", "sig")
-    counted = (
-        banded.withColumn("_c", F.count("*").over(w))
-        .withColumn("_rep", F.min("doc").over(w))
-        .withColumn("_vrep", F.min("doc").over(wv))
-    )
-
-    # hint("merge"): pin the self-join to sort-merge. At test scale AQE
-    # flips this join to broadcast-hash, which splits the two sides onto
-    # DIFFERENT exchanges (broadcast vs shuffle) and recomputes the whole
-    # signature subtree per side (+19% wall, measured in BENCH/PLANS.md
-    # round 3). SMJ keeps both sides on the same (band_id, band_hash)
-    # shuffle+sort the window guard already paid for — and is the only
-    # viable plan at corpus scale anyway (neither side of a 10^12-doc
-    # banding is broadcastable), so the tested plan IS the at-scale plan.
-    small = counted.where(F.col("_c") <= max_bucket).hint("merge")
-    left = small.alias("l")
-    right = small.alias("r")
-    all_pairs = left.join(
-        right,
-        (F.col("l.band_id") == F.col("r.band_id"))
-        & (F.col("l.band_hash") == F.col("r.band_hash"))
-        & (F.col("l.doc") < F.col("r.doc")),
-    ).select(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
-
-    big = counted.where(F.col("_c") > max_bucket)
-    # member ↔ its signature-value representative (identical signatures;
-    # verify-proof connectivity)
-    value_star = big.where(F.col("doc") != F.col("_vrep")).select(
-        F.col("_vrep").alias("doc_a"), F.col("doc").alias("doc_b")
-    )
-    # value representative ↔ bucket representative (one row per distinct
-    # signature value in the bucket)
-    rep_star = big.where(
-        (F.col("doc") == F.col("_vrep")) & (F.col("doc") != F.col("_rep"))
-    ).select(F.col("_rep").alias("doc_a"), F.col("doc").alias("doc_b"))
-
-    return all_pairs.unionByName(value_star).unionByName(rep_star).distinct()
-
-
-def oversized_band_buckets(
-    signatures: DataFrame,
-    n_hashes: int = N_MINHASHES,
-    band_rows: int = LSH_BAND_ROWS,
-    max_bucket: int = LSH_MAX_BUCKET,
-) -> DataFrame:
-    """Accounting companion to the mega-cluster guard: one row per band
-    bucket that was star-reduced — (band_id, band_hash, n_docs). Callers
-    log/persist this so the cap is never silent."""
-    n_bands = n_hashes // band_rows
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        signatures.select("doc", F.explode(band_structs).alias("band"))
-        .groupBy(F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
-        .agg(F.count("*").alias("n_docs"))
-        .where(F.col("n_docs") > max_bucket)
-    )
-
-
-def _materialize(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate lineage so iterative plans stay constant-size.
-
-    ``localCheckpoint`` (default) is fast but non-fault-tolerant: the
-    truncated lineage is unrecoverable after executor loss, so a
-    long-running corpus-scale job should pass ``reliable=True`` to use
-    a real ``checkpoint()`` to the directory configured via
-    ``spark.sparkContext.setCheckpointDir`` (ADVICE round 3)."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _release(df: DataFrame) -> None:
-    """Free a materialized frame's checkpoint storage blocks NOW.
-
-    ``DataFrame.unpersist()`` only touches the cache manager and leaves
-    a localCheckpoint's RDD blocks in executor storage until the async
-    ContextCleaner gets to them (measured on this Spark: blocks survive
-    both ``unpersist()`` and an explicit JVM GC) — across a 25-round
-    CC loop that accumulates every round's label frames (ADVICE round
-    3). The checkpointed RDD is reachable as the ``LogicalRDD`` leaf of
-    the analyzed plan; unpersisting THAT RDD frees the blocks at once
-    (verified: ``getRDDStorageInfo`` drops to empty). Best-effort: any
-    failure (different plan shape, Spark Connect) falls back to the
-    ContextCleaner path, which is only slower, never wrong."""
-    try:
-        node = df._jdf.queryExecution().analyzed()
-        for _ in range(8):
-            if node.getClass().getSimpleName() == "LogicalRDD":
-                node.rdd().unpersist(False)
-                return
-            node = node.children().head()
-    except Exception:
-        pass
-
-
-def duplicate_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 25,
-    reliable_checkpoint: bool = False,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components over duplicate pairs — the canonicalization
-    step after pair verification: (doc, cluster_rep) with cluster_rep =
-    min doc id in the component (deterministic survivor choice, the
-    same one-row-per-document invariant the reference's schema enforces,
-    /root/reference/schema.sql:15-24).
-
-    Iterative min-label propagation with pointer jumping: every round
-    each node adopts the smallest label among itself and its
-    neighbours, then additionally jumps to its label's OWN label
-    (label ← label[label]).  The jump halves path lengths, so even an
-    adversarial chain component converges in O(log diameter) rounds —
-    min-propagation alone needs O(diameter), which silently under-merges
-    long gradual-drift near-dup chains when the budget runs out.  The
-    LSH mega-cluster star-reduction (:func:`lsh_candidate_pairs`)
-    additionally keeps giant clusters at diameter ≤ 2.  Each round is
-    two shuffle joins + one partial-aggregated groupBy;
-    ``localCheckpoint`` truncates lineage so the plan stays
-    constant-size across rounds (without it round k replays rounds
-    1..k-1).  The same shape Kiveris et al. ("Connected Components in
-    MapReduce and Beyond", SoCC'14) prove out for MapReduce CC.
-
-    Raises ``RuntimeError`` if the iteration budget is exhausted before
-    the labels reach a fixpoint — a wrong (split) clustering must never
-    be returned as if it were final.  The convergence check is one
-    ``count()`` of changed labels per round — a scalar, not a collect.
-    """
-    if max_iterations < 1:
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    edges = _materialize(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        ),
-        reliable_checkpoint,
-    )
-    labels = _materialize(
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("label", F.col("doc")),
-        reliable_checkpoint,
-    )
-    prev_round: list[DataFrame] = [labels]
-    rounds = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["doc"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = _materialize(
-            labels.join(nbr, labels["doc"] == nbr["src"], "left")
-            .select(
-                "doc",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            ),
-            # materialize: the jump join consumes stepped TWICE (as rows
-            # and as the label→label lookup); without this the
-            # propagation join+agg would be recomputed for both sides.
-            reliable_checkpoint,
-        )
-        # pointer jump: label ← label[label]. Labels are always node
-        # ids (mins over node ids), so the self-join matches; left +
-        # coalesce only guards the degenerate empty frame.
-        refs = stepped.select(
-            F.col("doc").alias("ref"), F.col("label").alias("ref_label")
-        )
-        jumped = _materialize(
-            stepped.join(refs, stepped["label"] == refs["ref"], "left")
-            .select(
-                "doc",
-                "old_label",
-                F.least(
-                    F.col("label"), F.coalesce("ref_label", F.col("label"))
-                ).alias("label"),
-            ),
-            reliable_checkpoint,
-        )
-        changed = jumped.where(F.col("label") != F.col("old_label")).count()
-        labels = jumped.select("doc", "label")
-        # release the PREVIOUS round's materialized blocks now that this
-        # round is computed from them — without this, up to 25 rounds of
-        # checkpoint blocks accumulate in executor storage (ADVICE r3)
-        for old in prev_round:
-            _release(old)
-        prev_round = [stepped, jumped]
-        if changed == 0:
-            # the returned frame is backed by this round's `jumped`
-            # blocks — release only the intermediate `stepped` and the
-            # edge frame, keep `jumped`
-            _release(stepped)
-            _release(edges)
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within {max_iterations} "
-            f"rounds (last round still relabelled {changed} node(s)); "
-            f"returning would silently split clusters. Raise "
-            f"max_iterations — with pointer jumping the budget covers "
-            f"component diameters up to ~2^{max_iterations}."
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select("doc", F.col("label").alias("cluster_rep"))
-
-
-def duplicate_clusters_star(
-    pairs: DataFrame,
-    max_iterations: int = 25,
-    reliable_checkpoint: bool = False,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the edge-rewriting alternative to
-    :func:`duplicate_clusters`' min-label propagation.  Same output
-    contract: (doc, cluster_rep) with cluster_rep = min doc id in the
-    component; raises ``RuntimeError`` on budget exhaustion.
-
-    Each round rewrites the edge set toward min-rooted stars:
-
-    * large-star: every node links its strictly-LARGER neighbours to
-      the minimum of its closed neighbourhood;
-    * small-star: every node links its smaller neighbours (and itself)
-      to that minimum.
-
-    Stars are a fixpoint of both operations, so convergence is checked
-    as literal edge-set stability — exactly, but cheaply: one
-    (count, commutative-checksum) aggregate per round short-circuits
-    the "still changing" rounds, and only a full digest tie runs the
-    ``exceptAll`` that actually PROVES set equality (with equal counts
-    over two distinct sets, one-way ``exceptAll().count() == 0`` is a
-    proof) — a probabilistic hash never decides convergence, it only
-    skips work when inequality is already certain.  Per round this is
-    two window-over-shuffle passes + one distinct + one aggregate,
-    against the label
-    path's two joins + groupBy + jump join; both converge in
-    O(log n) rounds on pathological chain graphs (measured in
-    tests/test_operators.py: 10⁵-node path, equal round counts), so
-    the star variant's edge is per-round cost, not round count — and
-    its state is the (shrinking) edge set rather than edges + labels.
-    """
-    from pyspark.sql.window import Window
-
-    if max_iterations < 1:
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        w = Window.partitionBy("u")
-        m = F.least(F.min("v").over(w), F.col("u"))
-        return (
-            sym.withColumn("m", m)
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        dir_ = e.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        w = Window.partitionBy("u")
-        m = F.least(F.min("v").over(w), F.col("u"))
-        linked = dir_.withColumn("m", m)
-        return (
-            linked.select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                linked.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-            .where(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-            .distinct()
-        )
-
-    edges = _materialize(
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("a"),
-            F.least("doc_a", "doc_b").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct(),
-        reliable_checkpoint,
-    )
-    # nodes snapshot up front: star rounds contract the edge set, and
-    # the final stars alone still name every non-isolated node
-    nodes = _materialize(
-        edges.select(F.col("a").alias("doc"))
-        .unionByName(edges.select(F.col("b").alias("doc")))
-        .distinct(),
-        reliable_checkpoint,
-    )
-    def _edge_digest(e: DataFrame) -> tuple:
-        """(count, commutative checksum) of a distinct edge set in ONE
-        aggregate job. The checksum is an order-independent sum of
-        per-edge xxhash64 values, accumulated in decimal(38,0) so it
-        can never overflow (10^12 edges × |hash| ≤ 2^63 stays < 10^32)
-        and never wraps differently under ANSI mode."""
-        r = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("chk"),
-        ).first()
-        return (r["n"], r["chk"])
-
-    rounds = 0
-    prev_digest = _edge_digest(edges)
-    for _ in range(max_iterations):
-        rounds += 1
-        new_edges = _materialize(small_star(large_star(edges)), reliable_checkpoint)
-        # Convergence = literal edge-set stability, checked exactly but
-        # CHEAPLY (round-4 judge finding: the old two-way exceptAll
-        # cost two extra edge-set shuffles per round). One aggregate
-        # per round compares (count, checksum) against the previous
-        # round; only a full tie falls through to exceptAll — and with
-        # equal counts over two DISTINCT sets, a one-way
-        # exceptAll().count() == 0 already proves set equality. The
-        # checksum is a short-circuit for the almost-every-round
-        # "still changing" case, never the equality proof itself, so
-        # the exactness contract ("never a probabilistic hash decides
-        # convergence") is preserved.
-        digest = _edge_digest(new_edges)
-        if digest == prev_digest:
-            changed = new_edges.exceptAll(edges).count()
-        else:
-            changed = 1
-        prev_digest = digest
-        _release(edges)
-        edges = new_edges
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters_star did not converge within "
-            f"{max_iterations} rounds; returning would silently split "
-            f"clusters. Raise max_iterations."
-        )
-    # converged: every component is a star rooted at its min node —
-    # each node's rep is its min neighbour (leaves) or itself (roots)
-    labels = (
-        nodes.join(edges, nodes["doc"] == edges["a"], "left")
-        .groupBy("doc")
-        .agg(F.least(F.min("b"), F.min("doc")).alias("cluster_rep"))
-        .select("doc", F.coalesce("cluster_rep", F.col("doc")).alias("cluster_rep"))
-    )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
-
-
-def canonical_keep_list(
-    df: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep-one-per-cluster: drop every cluster member except its
-    representative; documents in no cluster survive untouched.  The
-    anti-join's right side is only the NON-canonical members (the
-    duplicates being removed) — at realistic dup rates a small fraction
-    of the corpus, so AQE broadcasts it and the big side never shuffles.
-    """
-    losers = clusters.where(F.col("doc") != F.col("cluster_rep")).select(
-        F.col("doc").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
-def ngram_jaccard(
-    df: DataFrame, pairs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs (verification step after
-    LSH): |A∩B| via an equi-join of distinct shingles, |A∪B| by
-    inclusion-exclusion. Returns (doc_a, doc_b, jaccard)."""
-    sh = spread_scan(df, id_col).select(
-        F.col(id_col).alias("doc"), words_col(text_col).alias("_toks")
-    ).select(
-        "doc",
-        F.explode(F.array_distinct(shingles_from_tokens(F.col("_toks")))).alias("sh"),
-    )
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-
-    inter = (
-        pairs.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc")) & (F.col("sa.sh") == F.col("sb.sh")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.coalesce(F.col("n_inter"), F.lit(0))
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.coalesce(F.col("n_inter"), F.lit(0))),
-                6,
-            ).alias("jaccard"),
-        )
-    )
 
 
 def simhash_bit_term(b: int) -> int:
@@ -643,8 +64,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
     n_words = (bits + 15) // 16
-    # spread_scan: see minhash_signatures — the token explode + vote
-    # sums otherwise run on the scan's (possibly single) task; the
+    # spread_scan: a single-row-group input would otherwise run the
+    # token explode + vote sums on the scan's (possibly single) task; the
     # id-hash repartition also pre-clusters the groupBy so the vote
     # aggregation needs no further exchange.
     toks = spread_scan(df, id_col).select(
@@ -695,10 +116,9 @@ def simhash_near_dupes(
     (band_id, band_value), verify exact Hamming distance ≤
     ``max_hamming``. By pigeonhole, any pair within Hamming ``bands-1``
     shares at least one identical band, so the banding is LOSSLESS for
-    ``max_hamming <= bands - 1`` (the default 3 with 4 bands) — same
-    guarantee structure as the MinHash/LSH path, and the SAME
-    mega-bucket star guard: a band value shared by more than
-    ``max_bucket`` docs contributes star pairs (O(c)) instead of
+    ``max_hamming <= bands - 1`` (the default 3 with 4 bands). A
+    mega-bucket star guard bounds the fan-out: a band value shared by
+    more than ``max_bucket`` docs contributes star pairs (O(c)) instead of
     all-pairs (O(c²)) — essential here because a 4-bit band has only 16
     values, so EVERY bucket clumps at corpus scale (use 64-bit
     fingerprints with 16-bit bands there — ``bits=64, bands=4`` — plus

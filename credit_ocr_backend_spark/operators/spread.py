@@ -3,8 +3,8 @@
 A parquet table written as one (or a few) row groups cannot be split
 below row-group granularity: the scan plans 1-2 tasks no matter how
 many cores the cluster has, and every per-row computation ABOVE the
-scan and BELOW the first exchange (shingle explodes + hash families,
-vector quantization + dot products) runs effectively serial. This is
+scan and BELOW the first exchange (SimHash's token explode and vote
+sums) runs effectively serial. This is
 the guide's "input skew: one huge unsplittable file" case — fix is to
 repartition immediately after the read.
 

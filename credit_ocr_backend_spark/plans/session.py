@@ -1,9 +1,10 @@
 """SparkSession factory with scale-appropriate defaults.
 
-``SQL_CONF`` is the single place where the engine's parallelism-
-independent SQL knobs live; ``get_spark`` (tests, bench) and the
-spark-submit entrypoint (``jobs/extract_job.py``) both apply it, so a
-submitted run plans and writes exactly as a local one:
+``ENGINE_CONF`` is the single place where the engine's parallelism-
+independent knobs live; ``get_spark`` (tests, bench) and the
+spark-submit entrypoint (``jobs/extract_job.py``) both apply it on the
+session builder, before the session starts, so a submitted run plans,
+writes and commits exactly as a local one:
 
 * AQE on (runtime coalescing + skew-join splitting),
 * Arrow max batch 4096 rows — re-measured in round 6 after the
@@ -13,12 +14,15 @@ submitted run plans and writes exactly as a local one:
   docs ≤32 KB → ≤128 MB/batch worst-case (realistic ~12 MB at ~3 KB
   avg html), and giant partitions hold ~a dozen rows each, far below
   any batch cap (SURVEY.md §7.3),
-* zstd parquet for the pages, docs and results.
+* zstd parquet for the pages, docs and results,
+* Hadoop's v2 file committer. A ``spark.hadoop.*`` key reaches the
+  Hadoop conf that writes use only when it is set before the
+  SparkContext starts; a runtime ``spark.conf.set`` of it is ignored.
 
 ``get_spark`` adds what a local session needs on top: the master,
 shuffle partitions and scan floor sized to the local core count (on a
 real cluster these come from the submit conf; AQE coalesces down as
-needed), the file committer, driver memory and scratch dir.
+needed), driver memory and scratch dir.
 """
 
 from __future__ import annotations
@@ -29,19 +33,27 @@ from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 4096
 
-SQL_CONF = {
+ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Allow shuffled-hash join where a side's per-partition build
     # fits (guide §3.1): sort-merge pays two full sorts that a hash
-    # build avoids; plans that NEED sort-merge (the LSH self-joins)
-    # pin it explicitly with hint("merge").
+    # build avoids. The extraction path runs no join; the only join
+    # left in the package, simhash_near_dupes' self-join, pins
+    # sort-merge with hint("merge").
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.session.timeZone": "UTC",
+    # v2 file committer: tasks move their output into place at task
+    # commit instead of the driver serially renaming every file at
+    # job commit — the standard choice for many-file batch writes.
+    # The pipeline's correctness never leans on v1's job-level
+    # atomicity: chunk completion is decided by the lineage append,
+    # never by directory existence alone.
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 
 
@@ -73,20 +85,12 @@ def get_spark(
         # no-op there (it can only SHRINK split size, never inflate
         # task counts past the natural file/row-group layout).
         .config("spark.sql.files.minPartitionNum", str(parallelism))
-        # v2 file committer: tasks move their output into place at task
-        # commit instead of the driver serially renaming every file at
-        # job commit — the standard choice for many-file batch writes.
-        # The pipeline's correctness never leans on v1's job-level
-        # atomicity: chunk completion is decided by the lineage append,
-        # never by directory existence alone.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for key, value in {**SQL_CONF, **(extra_conf or {})}.items():
-        builder = builder.config(key, value)
+    builder = builder.config(map={**ENGINE_CONF, **(extra_conf or {})})
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

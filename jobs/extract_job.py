@@ -37,6 +37,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def build_session():
+    """The job's SparkSession. Under spark-submit master/executors come
+    from the submit conf; the engine's conf, the same dict get_spark
+    applies, goes on the builder so its ``spark.hadoop.*`` keys reach
+    the Hadoop conf that the chunk writes use."""
+    from pyspark.sql import SparkSession
+
+    from credit_ocr_backend_spark.plans.session import ENGINE_CONF
+
+    return (
+        SparkSession.builder.appName("extract-job").config(map=ENGINE_CONF).getOrCreate()
+    )
+
+
 def main() -> int:
     parser = argparse.ArgumentParser()
     parser.add_argument("--pages", help="input pages table (parquet/Iceberg path)")
@@ -50,20 +64,10 @@ def main() -> int:
     parser.add_argument("--ts-max", dest="ts_max")
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from credit_ocr_backend_spark.plans.pipeline import run_pipeline
-    from credit_ocr_backend_spark.plans.session import SQL_CONF
     from credit_ocr_backend_spark.sources.pages import write_pages
 
-    # Under spark-submit master/executors come from the submit conf; the
-    # engine's SQL knobs, the same ones get_spark sets, go on top.
-    spark = (
-        SparkSession.getActiveSession()
-        or SparkSession.builder.appName("extract-job").getOrCreate()
-    )
-    for key, value in SQL_CONF.items():
-        spark.conf.set(key, value)
+    spark = build_session()
 
     pages_path = args.pages
     if args.generate:

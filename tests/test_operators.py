@@ -1,4 +1,4 @@
-"""Unit tests for the dedup operators and the scalar and visualization
+"""Unit tests for the SimHash operators and the scalar and visualization
 functions on tiny known inputs — value-level assertions."""
 
 from __future__ import annotations
@@ -8,8 +8,6 @@ import hashlib
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from credit_ocr_backend_spark.operators import dedup as D  # noqa: E402
 from credit_ocr_backend_spark.plans.session import get_spark  # noqa: E402
@@ -32,70 +30,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_duplicates(docs):
-    dups = {r["content_hash"]: r for r in D.exact_duplicates(docs, "doc_id", "text").collect()}
-    h = hashlib.md5(b"the quick brown fox jumps over the lazy dog").hexdigest()
-    assert dups[h]["n_dups"] == 2
-    assert dups[h]["canonical_id"] == 0
-    assert len(dups) == 4  # 5 docs, one pair collapsed
-
-
-def test_shingles_semantics(spark):
-    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
-    out = df.select(
-        D.shingles_from_tokens(D.words_col("text")).alias("sh")
-    ).collect()[0]["sh"]
-    assert list(out) == ["a b c", "b c d"]
-    # shorter than n → empty
-    tiny = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    assert list(tiny.select(D.shingles_col("text").alias("s")).collect()[0]["s"]) == []
-
-
-def test_minhash_identical_docs_share_signature(docs):
-    sigs = {r["doc"]: r for r in D.minhash_signatures(docs, "doc_id", "text").collect()}
-    for s in range(D.N_MINHASHES):
-        assert sigs[0][f"mh{s}"] == sigs[1][f"mh{s}"]
-    # near-dup shares SOME minhashes with the original, not all
-    shared = sum(sigs[0][f"mh{s}"] == sigs[2][f"mh{s}"] for s in range(D.N_MINHASHES))
-    assert 0 < shared < D.N_MINHASHES
-
-
-def test_lsh_finds_exact_pair(docs):
-    sigs = D.minhash_signatures(docs, "doc_id", "text")
-    pairs = {(r["doc_a"], r["doc_b"]) for r in D.lsh_candidate_pairs(sigs).collect()}
-    assert (0, 1) in pairs
-
-
-def test_lsh_mega_cluster_guard(spark):
-    """A 1k-duplicate cluster must NOT fan out O(c²)≈500k pairs: the
-    guard emits a star (min-doc representative ↔ member, c-1 pairs) that
-    keeps the cluster a single connected component. Small buckets keep
-    exact all-pairs semantics."""
-    big = [(i, "the same mega duplicated boilerplate page body text") for i in range(1000)]
-    small = [(2000, "unique alpha beta gamma delta content one"),
-             (2001, "unique alpha beta gamma delta content one")]
-    docs = spark.createDataFrame(big + small, "doc_id long, text string")
-    sigs = D.minhash_signatures(docs, "doc_id", "text")
-    pairs = D.lsh_candidate_pairs(sigs).collect()
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    # star over the mega-cluster: exactly c-1 pairs, all anchored at doc 0
-    mega = {p for p in got if p[0] < 2000 and p[1] < 2000}
-    assert mega == {(0, i) for i in range(1, 1000)}
-    # the small bucket is untouched all-pairs
-    assert (2000, 2001) in got
-    # the accounting surface reports what was star-reduced
-    oversized = D.oversized_band_buckets(sigs).collect()
-    assert oversized and all(r["n_docs"] == 1000 for r in oversized)
-
-
-def test_ngram_jaccard_values(spark, docs):
-    pairs = spark.createDataFrame([(0, 1), (0, 3)], "doc_a long, doc_b long")
-    j = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-         for r in D.ngram_jaccard(docs, pairs, "doc_id", "text").collect()}
-    assert j[(0, 1)] == 1.0      # identical docs
-    assert j[(0, 3)] == 0.0      # disjoint shingles
-
-
 def test_simhash_deterministic_and_discriminative(docs):
     fp = {r["doc"]: r["simhash"] for r in D.simhash(docs, "doc_id", "text").collect()}
     assert fp[0] == fp[1]
@@ -104,75 +38,6 @@ def test_simhash_deterministic_and_discriminative(docs):
     def ham(a, b):
         return bin(a ^ b).count("1")
     assert ham(fp[0], fp[2]) <= ham(fp[0], fp[3])
-
-
-# ---------------------------------------------------------------------------
-# duplicate_clusters / canonical_keep_list (round-3 canonicalization step)
-# ---------------------------------------------------------------------------
-
-
-def test_duplicate_clusters_star_and_chain(spark):
-    # Star cluster {0..4} around rep 0 + a chain 10-11-12-13 (worst case
-    # for min-label propagation: labels travel one hop per round) + an
-    # isolated pair (20, 21).
-    pairs = spark.createDataFrame(
-        [(0, 1), (0, 2), (0, 3), (0, 4),
-         (12, 13), (11, 12), (10, 11),
-         (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    got = {r["doc"]: r["cluster_rep"] for r in D.duplicate_clusters(pairs).collect()}
-    assert got == {
-        0: 0, 1: 0, 2: 0, 3: 0, 4: 0,
-        10: 10, 11: 10, 12: 10, 13: 10,
-        20: 20, 21: 20,
-    }
-
-
-def test_duplicate_clusters_1k_member_cluster_one_survivor(spark):
-    # The judge's scale scenario: a 1000-member duplicate cluster (as the
-    # LSH star-reduction emits it: rep ↔ each member) resolves to ONE
-    # survivor in O(1) propagation rounds.
-    star = [(5, m) for m in range(6, 1005)]
-    pairs = spark.createDataFrame(star, "doc_a long, doc_b long")
-    clusters = D.duplicate_clusters(pairs)
-    reps = clusters.select("cluster_rep").distinct().collect()
-    assert [r["cluster_rep"] for r in reps] == [5]
-    assert clusters.count() == 1000
-
-    docs = spark.range(0, 1200).withColumnRenamed("id", "doc_id")
-    kept = D.canonical_keep_list(docs, clusters)
-    # 1200 docs − 999 non-canonical members; rep 5 and all unclustered ids survive
-    assert kept.count() == 1200 - 999
-    kept_ids = {r["doc_id"] for r in kept.where(F.col("doc_id") < 10).collect()}
-    assert kept_ids == {0, 1, 2, 3, 4, 5}
-
-
-def test_canonical_keep_list_no_clusters(spark):
-    docs = spark.range(0, 8).withColumnRenamed("id", "doc_id")
-    empty = spark.createDataFrame([], "doc long, cluster_rep long")
-    assert D.canonical_keep_list(docs, empty).count() == 8
-
-
-def test_duplicate_clusters_long_chain_pointer_jumping(spark):
-    # A 60-hop chain (gradual-drift near-dup worst case): plain
-    # min-propagation needs 59 rounds; pointer jumping reaches distance
-    # ~2^k after k rounds, so 10 iterations must suffice.
-    chain = [(i, i + 1) for i in range(100, 159)]
-    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    got = D.duplicate_clusters(pairs, max_iterations=10)
-    reps = {r["cluster_rep"] for r in got.select("cluster_rep").distinct().collect()}
-    assert reps == {100}
-    assert got.count() == 60
-
-
-def test_duplicate_clusters_raises_on_budget_exhaustion(spark):
-    # An exhausted iteration budget must raise, never return a silently
-    # split clustering.
-    chain = [(i, i + 1) for i in range(0, 30)]
-    pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters(pairs, max_iterations=1)
 
 
 def _assert_near_dupes_match_brute_force(spark, bits):
@@ -319,171 +184,11 @@ def test_simhash_star_guard_adversarial_far_representative(spark):
     assert all(r["hamming"] == 0 for r in pairs)
 
 
-def _py_minhash_bands(text: str) -> tuple[list[str], list[str]]:
-    toks = text.strip().lower().split()
-    shingles = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
-    mh = [
-        min(hashlib.md5(f"{s}:{sh}".encode()).hexdigest() for sh in shingles)
-        for s in range(D.N_MINHASHES)
-    ]
-    bands = [
-        hashlib.md5(f"{mh[2 * b]}|{mh[2 * b + 1]}".encode()).hexdigest()
-        for b in range(D.N_MINHASHES // D.LSH_BAND_ROWS)
-    ]
-    return mh, bands
-
-
-def test_lsh_star_guard_adversarial_far_representative(spark):
-    """Same adversarial case on the MinHash path: an oversized band
-    bucket whose min-id representative fails Jaccard verification
-    against the identical members must not disconnect them — the
-    value-grouped star keeps identical-signature docs connected, and
-    the full pipeline (pairs -> jaccard >= 0.5 -> clusters) puts all
-    identical docs in one cluster without the decoy."""
-    group = "alpha beta gamma delta epsilon zeta eta theta"
-    _, group_bands = _py_minhash_bands(group)
-    decoy = None
-    for j in range(500):
-        # 10 appended tokens -> 10 new shingles vs 6 shared: Jaccard
-        # 6/16 = 0.375 < 0.5 (fails verify) while a band min often
-        # survives the dilution (measured ~20% of candidates)
-        cand = group + " " + " ".join(f"x{j}y{k}" for k in range(10))
-        _, cand_bands = _py_minhash_bands(cand)
-        if any(a == b for a, b in zip(group_bands, cand_bands)):
-            decoy = cand
-            break
-    assert decoy is not None, "no band-sharing decoy found"
-    docs = spark.createDataFrame(
-        [(0, decoy)] + [(i, group) for i in range(1, 11)],
-        "doc_id long, text string",
-    )
-    sigs = D.minhash_signatures(docs, "doc_id", "text")
-    pairs = D.lsh_candidate_pairs(sigs, max_bucket=4)
-    verified = D.ngram_jaccard(docs, pairs, "doc_id", "text").where(
-        F.col("jaccard") >= 0.5
-    )
-    clusters = {
-        r["doc"]: r["cluster_rep"]
-        for r in D.duplicate_clusters(
-            verified.select("doc_a", "doc_b")
-        ).collect()
-    }
-    assert {clusters[i] for i in range(1, 11)} == {1}
-    assert 0 not in clusters
-
-
-def _cc_ground_truth(pairs):
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
-def test_duplicate_clusters_star_matches_truth_and_label_propagation(spark):
-    """Large-star/small-star CC must produce the identical
-    (doc, cluster_rep=min of component) labelling as both a union-find
-    ground truth and the label-propagation implementation, across
-    sparse / dense / chain-heavy random graphs."""
-    import random
-
-    rng = random.Random(7)
-    for n, e in [(200, 150), (300, 600), (1000, 300)]:
-        pairs = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(e)
-        ]
-        pairs = [(a, b) for a, b in pairs if a != b]
-        truth = _cc_ground_truth(pairs)
-        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-        prop = {
-            r["doc"]: r["cluster_rep"]
-            for r in D.duplicate_clusters(df).collect()
-        }
-        star = {
-            r["doc"]: r["cluster_rep"]
-            for r in D.duplicate_clusters_star(df).collect()
-        }
-        assert prop == truth
-        assert star == truth
-
-
-def test_duplicate_clusters_star_path_graph_round_bound(spark):
-    """Adversarial chain component: a 2^11-node path must converge
-    within the logarithmic round bound for BOTH variants (the star
-    variant's win is per-round cost — one materialization per round vs
-    three — and sparse-graph round counts, measured 6 vs 20 on the
-    n=200/e=150 random graph; on pure paths the round counts tie)."""
-    n = 2048
-    pairs = spark.range(n - 1).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    )
-    s_star, s_prop = {}, {}
-    star = D.duplicate_clusters_star(pairs, max_iterations=30, stats=s_star)
-    assert star.where(F.col("cluster_rep") == 0).count() == n
-    assert s_star["rounds"] <= 14, s_star
-    prop = D.duplicate_clusters(pairs, max_iterations=30, stats=s_prop)
-    assert prop.where(F.col("cluster_rep") == 0).count() == n
-    assert s_prop["rounds"] <= 14, s_prop
-
-
-def test_duplicate_clusters_frees_checkpoint_storage(spark):
-    """ADVICE round 3: iterative CC must not accumulate one
-    localCheckpoint block set per round — after the call at most the
-    frame backing the returned labels may remain in executor storage."""
-    import random
-
-    sc = spark.sparkContext
-    for info in sc._jsc.sc().getRDDStorageInfo():
-        pass  # snapshot baseline count below
-    baseline = len(sc._jsc.sc().getRDDStorageInfo())
-    rng = random.Random(11)
-    pairs = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    stats = {}
-    out = D.duplicate_clusters(df, stats=stats)
-    out.count()
-    stored = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    assert stats["rounds"] >= 3  # multi-round run, would have leaked
-    assert stored - baseline <= 1, (
-        f"{stored - baseline} checkpoint block sets left after "
-        f"{stats['rounds']} rounds"
-    )
-
-
-def test_duplicate_clusters_reliable_checkpoint_option(spark, tmp_path):
-    """reliable_checkpoint=True routes materialization through a real
-    checkpoint() (fault-tolerant at corpus scale) with identical
-    results."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    pairs = [(0, 1), (1, 2), (5, 6), (8, 6)]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    expected = _cc_ground_truth(pairs)
-    got = {
-        r["doc"]: r["cluster_rep"]
-        for r in D.duplicate_clusters(df, reliable_checkpoint=True).collect()
-    }
-    star = {
-        r["doc"]: r["cluster_rep"]
-        for r in D.duplicate_clusters_star(df, reliable_checkpoint=True).collect()
-    }
-    assert got == expected
-    assert star == expected
-
-
 def test_value_grouped_guard_adds_no_exchange(spark):
     """The value-group representative window partitions by a SUPERSET of
     the bucket window's keys, so HashPartitioning(band keys) satisfies
-    it — the plan must contain no exchange keyed on the signature/
-    fingerprint column (only a sort). Guards the round-4 claim that the
+    it — the plan must contain no exchange keyed on the fingerprint
+    column (only a sort). Guards the round-4 claim that the
     recall fix costs zero extra shuffles."""
     docs = spark.createDataFrame(
         [(i, f"text body number {i % 7} alpha beta gamma") for i in range(40)],
@@ -497,20 +202,15 @@ def test_value_grouped_guard_adds_no_exchange(spark):
             for m in _re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan)
         ]
 
-    sigs = D.minhash_signatures(docs, "doc_id", "text")
-    plan = D.lsh_candidate_pairs(sigs)._jdf.queryExecution().executedPlan().toString()
-    keys = exchange_keys(plan)
-    assert any(k.startswith("band_id") for k in keys), keys
-    assert not any("sig#" in k for k in keys), keys
-    plan2 = (
+    plan = (
         D.simhash_near_dupes(docs, "doc_id", "text")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    keys2 = exchange_keys(plan2)
-    assert any(k.startswith("band_id") for k in keys2), keys2
-    assert not any("simhash#" in k for k in keys2), keys2
+    keys = exchange_keys(plan)
+    assert any(k.startswith("band_id") for k in keys), keys
+    assert not any("simhash#" in k for k in keys), keys
 
 
 def test_scalar_cleaning_functions(spark):

@@ -37,30 +37,61 @@ def _build_engine_zip(dest: str) -> str:
     return zpath
 
 
-def test_spark_submit_py_files_no_checkout(tmp_path):
+def _submit(tmp: str, script: str, *args: str) -> dict:
+    """spark-submit ``script`` from a neutral cwd holding ONLY the
+    entrypoint (and the script): the package cannot be cwd-imported, so
+    every import must come through --py-files. Returns the last JSON
+    line the script prints."""
     if shutil.which("spark-submit") is None:
         pytest.skip("spark-submit not on PATH")
-    tmp = str(tmp_path)
     zpath = _build_engine_zip(tmp)
-    # neutral cwd with ONLY the entrypoint: the package cannot be
-    # cwd-imported, so every import must come through --py-files
-    job = os.path.join(tmp, "extract_job.py")
-    shutil.copy(os.path.join(REPO, "jobs", "extract_job.py"), job)
+    shutil.copy(os.path.join(REPO, "jobs", "extract_job.py"), tmp)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
-        [
-            "spark-submit", "--master", "local[4]", "--py-files", zpath,
-            job, "--generate", "120", "--out", os.path.join(tmp, "out"),
-        ],
+        ["spark-submit", "--master", "local[4]", "--py-files", zpath, script, *args],
         capture_output=True, text=True, cwd=tmp, env=env, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-4000:]
     line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
-    res = json.loads(line)
+    return json.loads(line)
+
+
+def test_spark_submit_py_files_no_checkout(tmp_path):
+    tmp = str(tmp_path)
+    res = _submit(
+        tmp, os.path.join(tmp, "extract_job.py"),
+        "--generate", "120", "--out", os.path.join(tmp, "out"),
+    )
     assert res["n_docs"] == 120 and res["n_failed"] == 0
-    # the job applies the engine's SQL conf: its docs are zstd, as a
+    # the job applies the engine's conf: its docs are zstd, as a
     # get_spark run writes them
     parts = glob.glob(os.path.join(tmp, "out", "docs", "chunk=*", "*.parquet"))
     assert parts
     for part in parts:
         assert pq.read_metadata(part).row_group(0).column(0).compression == "ZSTD"
+
+
+_COMMITTER_PROBE = """
+import json
+from extract_job import build_session
+spark = build_session()
+key = "mapreduce.fileoutputcommitter.algorithm.version"
+print(json.dumps({
+    "context": spark._jsc.hadoopConfiguration().get(key),
+    "session": spark._jsparkSession.sessionState().newHadoopConf().get(key),
+}))
+spark.stop()
+"""
+
+
+def test_spark_submit_session_uses_v2_file_committer(tmp_path):
+    """The job's session carries the engine's ``spark.hadoop.*`` conf
+    into the Hadoop conf its writes use: Hadoop's v2 file committer, as
+    a get_spark session has. A key set with ``spark.conf.set`` after the
+    session started would read Hadoop's default, 1."""
+    tmp = str(tmp_path)
+    probe = os.path.join(tmp, "committer_probe.py")
+    with open(probe, "w") as f:
+        f.write(_COMMITTER_PROBE)
+    res = _submit(tmp, probe)
+    assert res == {"context": "2", "session": "2"}
