@@ -15,14 +15,10 @@ Two strictly separated layers:
 * ``credit_ocr_backend_spark.core`` — pure Python, zero Spark imports.
   Byte-exact reimplementation of the reference's deterministic
   per-document semantics. This is what the pytest parity suite runs.
-* the Spark packages — the distribution shell. The extraction path is
-  ``operators.stages`` (the fused Arrow-batched stage), ``plans``
-  (session and the chunked, resumable pipeline) and ``sources`` (the
-  page corpus, checkpoint + lineage + resume). Outside it sit the
-  SimHash near-duplicate operators (``operators.dedup`` with its
-  ``operators.spread`` guard), ``functions`` (JVM-side scalar and
-  visualization analogues of the reference) and ``sinks`` (xlsx sheet,
-  annotated PNG).
+* the Spark packages — the distribution shell, which is the
+  extraction path alone: ``operators.stages`` (the fused Arrow-batched
+  stage), ``plans`` (session and the chunked, resumable pipeline) and
+  ``sources`` (the page corpus, checkpoint + lineage + resume).
 """
 
 __version__ = "0.1.0"

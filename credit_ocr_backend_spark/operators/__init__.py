@@ -1,1 +1,1 @@
-"""Arrow-batched pipeline stages and corpus-level operators."""
+"""The Arrow-batched pipeline stage."""

@@ -41,10 +41,6 @@ from credit_ocr_backend_spark.core.document import (
 # ---------------------------------------------------------------------------
 
 BBOX_T = "array<struct<x:double,y:double>>"
-ITEMS_T = (
-    f"array<struct<type:string,label:string,value:string,text:string,"
-    f"page:int,confidence:double,bounding_box:{BBOX_T}>>"
-)
 FIELDS_T = (
     f"array<struct<field_name:string,value:string,confidence:double,"
     f"page:int,bounding_box:{BBOX_T},is_valid:boolean,errors:array<string>>>"
@@ -58,7 +54,7 @@ FIELDS_T = (
 #  * json round-trips the core's plain dicts EXACTLY (missing keys stay
 #    missing, None stays None — no NaN/numpy-scalar sanitization layer);
 #  * a relational view is recovered JVM-side at codegen speed with
-#    from_json(FIELDS_T) (or ITEMS_T for a normalized-items payload).
+#    from_json(FIELDS_T).
 EXTRACTED_SCHEMA = (
     f"url string, bucket int, status string, error string, "
     f"extracted_text string, missing_fields array<string>, "

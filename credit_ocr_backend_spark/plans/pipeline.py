@@ -15,9 +15,13 @@ stage:
       → lineage counted from the committed docs, appended (commit point)
 
 A computed chunk runs 4 Spark jobs: the exchange, the cache build, the
-docs write and the results write. Nothing else in a run submits one:
-the schema is declared, and the input check, the row estimate, the
-lineage counts and resume bookkeeping read parquet with pyarrow.
+docs write and the results write. The schema is declared, and on a
+local pages directory the input check, the row estimate, the lineage
+counts and resume bookkeeping read parquet with pyarrow. Two paths
+still submit a job outside the chunks: ``_checked_ts`` runs one
+``SELECT try_to_timestamp(?)`` per time bound given, and
+``_check_pages`` on a non-local pages path (hdfs://, s3a://) reads it
+with an inferred schema and counts it.
 
 Commit design: the unit of recovery is a **chunk** = contiguous range
 of url-hash buckets, written as one ``chunk=NNNN`` partition directory

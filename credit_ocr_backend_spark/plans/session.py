@@ -6,7 +6,7 @@ spark-submit entrypoint (``jobs/extract_job.py``) both apply it on the
 session builder, before the session starts, so a submitted run plans,
 writes and commits exactly as a local one:
 
-* AQE on (runtime coalescing + skew-join splitting),
+* AQE on (runtime partition coalescing),
 * Arrow max batch 4096 rows — re-measured in round 6 after the
   per-document core cost halved (the per-batch worker flush overhead
   became relatively bigger): 200k-doc pipeline 23.8 s at 1024 → 20.3 s
@@ -35,13 +35,6 @@ ARROW_BATCH_ROWS = 4096
 
 ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Allow shuffled-hash join where a side's per-partition build
-    # fits (guide §3.1): sort-merge pays two full sorts that a hash
-    # build avoids. The extraction path runs no join; the only join
-    # left in the package, simhash_near_dupes' self-join, pins
-    # sort-merge with hint("merge").
-    "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
     "spark.sql.sources.partitionOverwriteMode": "dynamic",

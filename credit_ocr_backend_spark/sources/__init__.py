@@ -1,1 +1,1 @@
-"""Sources & sinks: synthetic page corpus, stage checkpoint tables, lineage."""
+"""Synthetic page corpus, stage checkpoint tables, lineage."""

@@ -4,8 +4,6 @@ Each optimization that changed an operator's internals gets a direct
 equivalence/behavior test here, independent of the broader golden and
 oracle suites:
 
-* spread_scan — scale-adaptive scan repartition (no-op above the
-  threshold, result-invariant below it);
 * parse_page(include_words=False) — the fused path's word-dict elision
   is value-identical for everything downstream consumes;
 * validate_extracted_fields memo — the cache distinguishes 1 / 1.0 /
@@ -28,39 +26,6 @@ from credit_ocr_backend_spark.core.fields import (
 )
 from credit_ocr_backend_spark.core.postprocess import normalize_items
 from credit_ocr_backend_spark.sources.pages import build_page
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from credit_ocr_backend_spark.plans.session import get_spark
-
-    s = get_spark("test-r06-optimizations", parallelism=8)
-    yield s
-
-
-# ---------------------------------------------------------------------------
-# spread_scan
-# ---------------------------------------------------------------------------
-
-
-def test_spread_scan_noop_when_well_partitioned(spark):
-    from credit_ocr_backend_spark.operators.spread import spread_scan
-
-    df = spark.range(0, 1000, numPartitions=64)  # >= slots: must no-op
-    out = spread_scan(df, "id")
-    assert out.rdd.getNumPartitions() == 64
-    assert out is df
-
-
-def test_spread_scan_spreads_and_preserves_rows(spark):
-    from credit_ocr_backend_spark.operators.spread import spread_scan
-
-    df = spark.range(0, 1000, numPartitions=1)
-    out = spread_scan(df, "id")
-    target = spark.sparkContext.defaultParallelism
-    if target > 2:  # guard triggers only when 1 partition underfills slots
-        assert out.rdd.getNumPartitions() == target
-    assert sorted(r["id"] for r in out.collect()) == list(range(1000))
 
 
 # ---------------------------------------------------------------------------

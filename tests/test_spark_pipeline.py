@@ -1,9 +1,8 @@
 """Spark-shell tests: distribution must not change a single byte.
 
 * Spark fused output ≡ pure-core output per url (SURVEY.md §5.2.3)
-* the committed docs and results for the 64 golden pages, and the draw
-  plan over their normalized items, equal the reference-generated
-  goldens (tools/gen_expected_extraction.py)
+* the committed docs and results for the 64 golden pages equal the
+  reference-generated goldens (tools/gen_expected_extraction.py)
 * resume: a failed chunk re-runs without recomputing committed
   buckets, and the final output equals a clean run (north rule)
 * giant-document skew routing leaves results identical
@@ -24,10 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from credit_ocr_backend_spark.core import default_config, process_document  # noqa: E402
 from credit_ocr_backend_spark.core.document import dumps_compact  # noqa: E402
-from credit_ocr_backend_spark.core.htmlparse import parse_page  # noqa: E402
-from credit_ocr_backend_spark.core.postprocess import normalize_items  # noqa: E402
-from credit_ocr_backend_spark.functions.viz import draw_plan, rgb_csv  # noqa: E402
-from credit_ocr_backend_spark.operators.stages import ITEMS_T, _field_rows  # noqa: E402
+from credit_ocr_backend_spark.operators.stages import _field_rows  # noqa: E402
 from credit_ocr_backend_spark.plans.pipeline import run_pipeline  # noqa: E402
 from credit_ocr_backend_spark.plans.session import get_spark  # noqa: E402
 from credit_ocr_backend_spark.sources.pages import build_page, page_url, write_pages  # noqa: E402
@@ -106,27 +102,6 @@ def test_fused_matches_reference_goldens(spark, fused_out):
     _assert_matches_golden(docs, "expected_extraction_docs")
     results = spark.read.parquet(f"{fused_out}/results")
     _assert_matches_golden(results, "expected_extraction_results")
-
-
-def test_draw_plan_matches_reference_golden(spark):
-    """The annotation draw plan over the normalized items of the golden
-    pages. The items are built in-process with the full token stream
-    (``parse_page``'s default, word tokens included), carried as
-    compact JSON and read back with ``from_json(ITEMS_T)``."""
-    rows = []
-    for k in range(N_GOLDEN):
-        page = build_page(k)
-        tokens, _ = parse_page(page["html"])
-        rows.append((page["url"], dumps_compact(normalize_items(tokens))))
-    items = (
-        spark.createDataFrame(rows, "url string, items_json string")
-        .select("url", F.explode(F.from_json("items_json", ITEMS_T)).alias("it"))
-        .select("url", "it.*")
-    )
-    plan = draw_plan(items, list(default_config().field_mappings.items()))
-    _assert_matches_golden(
-        plan.withColumn("color_rgb", rgb_csv("color_rgb")), "expected_draw_plan"
-    )
 
 
 def test_resume_skips_committed_chunks(spark, pages_path, tmp_path):
