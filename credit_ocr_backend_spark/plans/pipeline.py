@@ -9,16 +9,21 @@ stage:
       → keep buckets of this chunk (resume skips committed chunks)
       → one exchange: bulk rows by url hash,    # size-skew defuse
         giants to partitions of their own
-      → fused Arrow UDF stage, cached           # core semantics
-      → docs, then results from the cache       # idempotent per-chunk
-        → chunk=NNNN                            # overwrite
+      → fused Arrow UDF stage                   # core semantics
+      → docs → chunk=NNNN, at the exchange's    # idempotent per-chunk
+        width                                   # overwrite
       → lineage counted from the committed docs, appended (commit point)
 
-A computed chunk runs 4 Spark jobs: the exchange, the cache build, the
-docs write and the results write. The schema is declared, and on a
-local pages directory the input check, the row estimate, the lineage
-counts and resume bookkeeping read parquet with pyarrow. Two paths
-still submit a job outside the chunks: ``_checked_ts`` runs one
+The docs are the only table written. The long-format results rows
+(``ExtrahierteDaten``) are ``explode_outer(from_json(fields_json))`` of
+the committed docs, so ``CheckpointManager.read("results")`` derives
+them on read instead of a second write storing them.
+
+A computed chunk runs 2 Spark jobs: the exchange and the fused stage
+feeding the docs write. The schema is declared, and on a local pages
+directory the input check, the row estimate, the lineage counts and
+resume bookkeeping read parquet with pyarrow. Two paths still submit a
+job outside the chunks: ``_checked_ts`` runs one
 ``SELECT try_to_timestamp(?)`` per time bound given, and
 ``_check_pages`` on a non-local pages path (hdfs://, s3a://) reads it
 with an inferred schema and counts it.
@@ -41,6 +46,13 @@ Two partitioning decisions worth reading twice (measured, not guessed):
   per-bucket partitionBy writes either tasks×buckets sliver files or
   an extra full shuffle; per-chunk directories give one file per task
   and per-chunk atomic overwrite.
+
+The docs write is not coalesced, so a chunk holds at most one part
+file per exchange partition, ``par·waves + max(par//2, 1)`` at
+parallelism ``par``, and a giant's file holds no bulk document.
+``_effective_waves`` keeps ``waves ≤ 16``, and above 1 only while each
+bulk task keeps at least ``_MIN_DOCS_PER_TASK`` docs: at corpus scale
+(``par`` 256, 16 waves) a chunk holds at most 4 224 docs files.
 
 Scale notes (100 TB / 10^12 rows):
 * the html column is only read by the fused stage, whose output
@@ -66,11 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from credit_ocr_backend_spark.core.config import DocumentTypeConfig, default_config
-from credit_ocr_backend_spark.operators.stages import (
-    EXTRACTED_SCHEMA,
-    FIELDS_T,
-    make_fused_stage,
-)
+from credit_ocr_backend_spark.operators.stages import EXTRACTED_SCHEMA, make_fused_stage
 from credit_ocr_backend_spark.sources.checkpoint import (
     CheckpointManager,
     new_run_id,
@@ -85,11 +93,6 @@ GIANT_HTML_BYTES = 32 * 1024  # size-skew routing threshold
 # a missing column into NULLs, so _check_pages verifies them first.
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, warc_date string"
 _PAGES_KINDS = {"url": "string", "warc_ts": "timestamp", "html": "binary"}
-
-RESULT_COLUMNS = [
-    "field_name", "value", "confidence", "page", "bounding_box",
-    "is_valid", "errors",
-]
 
 
 @dataclass
@@ -302,8 +305,8 @@ def _bucket_counts(ckpt: CheckpointManager, chunk_id: int, lo: int, hi: int) -> 
     """Per-bucket lineage rows (``n_docs``, ``n_failed``, ``cpu_ms`` =
     sum of ``proc_ms``) of the buckets that hold a document, counted
     from the chunk's committed docs — so the lineage equals the
-    committed bytes even when Spark recomputed a lost cached partition
-    and re-measured its ``proc_ms``.
+    committed bytes even when Spark re-ran a task and re-measured its
+    ``proc_ms``.
 
     No Spark job: pyarrow reads three narrow columns one record batch
     at a time, so driver memory stays O(batch). The cost is O(chunk
@@ -358,7 +361,8 @@ def run_pipeline(
     fail_buckets: Optional[set] = None,  # test hook: inject a chunk failure
 ) -> PipelineResult:
     """Run the extraction pipeline, one chunk after the other, each
-    through the fused stage, committing results + lineage per chunk.
+    through the fused stage, committing docs + lineage per chunk (the
+    results rows are derived from the docs on read).
     ``resume=True`` skips chunks whose lineage says done and recomputes
     only the rest; output is unchanged vs a clean run (tested).
     ``resume=False`` first removes the engine-owned state an earlier
@@ -402,6 +406,8 @@ def run_pipeline(
     else:
         # A fresh run starts from nothing: an earlier run's lineage
         # would otherwise mark its chunks done for a later resume.
+        # "results" is the table engines before the derived read wrote;
+        # nothing reads it now, and a fresh run removes it.
         ckpt.reset(("docs", "results"))
         ckpt.write_manifest(manifest)
 
@@ -419,7 +425,7 @@ def run_pipeline(
 
     def run_chunk(chunk_id: int, lo: int, hi: int) -> List[dict]:
         """Process + commit one chunk; returns its per-bucket lineage
-        rows. Every write is chunk-private and the lineage fragment is
+        rows. The write is chunk-private and the lineage fragment is
         uuid-named, so a re-run of the chunk overwrites only its own
         output."""
         chunk_df = _defuse_skew(
@@ -434,46 +440,19 @@ def run_pipeline(
             )
 
         t0 = time.perf_counter()
-        # Both tables come from one cached run of the heavy stage:
-        # results ≡ explode(from_json(committed docs)) without
-        # re-reading the committed chunk, whose few files would plan the
-        # JSON parse on 1-3 tasks. from_json runs in the heavy stage at
-        # its full width; the typed column is cache-only, the docs keep
-        # the byte-exact fields_json. MEMORY_AND_DISK spills rather than
-        # evicts; a lost cached partition is recomputed through the
-        # deterministic stages, so the results still match the docs.
-        cached = (
-            chunk_df.mapInPandas(make_fused_stage(cfg), schema=EXTRACTED_SCHEMA)
-            .withColumn("_fields", F.from_json("fields_json", FIELDS_T))
-            .persist()
-        )
-        # One row per field, exploded after the heavy stage (html long
-        # gone); the where() drops the placeholder row explode_outer
-        # gives a document without fields.
-        results = cached.select(
-            "url",
-            "bucket",
-            F.explode_outer("_fields").alias("f"),
-        ).select(
-            "url",
-            "bucket",
-            *[F.col(f"f.{c}").alias(c) for c in RESULT_COLUMNS],
-        ).where(F.col("field_name").isNotNull()).coalesce(par)
-        try:
-            # The docs write runs the exchange and builds the cache, as
-            # an AQE query stage of its own at the exchange's full width:
-            # coalesce(par) narrows only the write, to one file per core
-            # (half the write time of a file per wave-partition). The
-            # writes run one after the other: submitted together, each
-            # started its own cache build and the chunk was no faster.
-            with _job_description(spark, f"chunk {chunk_id} · heavy stage + docs write"):
-                ckpt.write_chunk(cached.drop("_fields").coalesce(par), "docs", chunk_id)
-            with _job_description(spark, f"chunk {chunk_id} · results write"):
-                ckpt.write_chunk(results, "results", chunk_id)
-        finally:
-            cached.unpersist()
+        # The docs are the only write: the results rows are derived from
+        # them on read (CheckpointManager.read). No coalesce: it is a
+        # narrow dependency, so it would merge the heavy stage's own
+        # tasks and put giants into bulk tasks. The write runs at the
+        # exchange's width, one file per non-empty partition.
+        with _job_description(spark, f"chunk {chunk_id} · heavy stage + docs write"):
+            ckpt.write_chunk(
+                chunk_df.mapInPandas(make_fused_stage(cfg), schema=EXTRACTED_SCHEMA),
+                "docs",
+                chunk_id,
+            )
 
-        # The commit point is the lineage append, after both writes: a
+        # The commit point is the lineage append, after the write: a
         # crash anywhere before it leaves the chunk to a resume.
         per_bucket = _bucket_counts(ckpt, chunk_id, lo, hi)
         wall_ms = int((time.perf_counter() - t0) * 1000)
@@ -529,7 +508,7 @@ def doc_status(spark: SparkSession, out_root: str, url: str) -> Optional[dict]:
     crawled, or its chunk not yet committed). A chunk is committed only
     when its lineage says done: the lineage append is the commit point,
     so a chunk directory without lineage rows (a crash between the
-    writes and the append) is not read."""
+    write and the append) is not read."""
     import pyarrow.dataset as ds
 
     ckpt, n_buckets, n_chunks = _lookup_manager(spark, out_root)

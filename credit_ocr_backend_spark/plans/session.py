@@ -14,7 +14,7 @@ writes and commits exactly as a local one:
   docs ≤32 KB → ≤128 MB/batch worst-case (realistic ~12 MB at ~3 KB
   avg html), and giant partitions hold ~a dozen rows each, far below
   any batch cap (SURVEY.md §7.3),
-* zstd parquet for the pages, docs and results,
+* zstd parquet for the pages and the docs,
 * Hadoop's v2 file committer. A ``spark.hadoop.*`` key reaches the
   Hadoop conf that writes use only when it is set before the
   SparkContext starts; a runtime ``spark.conf.set`` of it is ignored.

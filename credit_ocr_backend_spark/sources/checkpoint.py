@@ -15,6 +15,11 @@ unit of recovery:
   blob semantics of storage.py:152); a crashed chunk leaves committed
   chunks untouched.
 
+The pipeline stores one stage table, ``docs``. The long-format results
+rows (``ExtrahierteDaten`` in the reference's schema.sql) are a pure
+function of a document's ``fields_json``, so they are derived on read
+(:func:`results_of`, through ``read("results")``), not written.
+
 After each chunk commits, one lineage parquet fragment is appended
 (pyarrow, driver-side — one row per bucket; no Spark job for metadata).
 Resume = skip chunks whose lineage rows exist with status done. Resume
@@ -58,6 +63,8 @@ from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from credit_ocr_backend_spark.operators.stages import FIELDS_T
+
 _MANIFEST = "run_manifest.json"
 _MANIFEST_TMP = _MANIFEST + ".tmp"
 
@@ -66,6 +73,11 @@ LINEAGE_SCHEMA = (
     "n_failed long, cpu_ms double, wall_ms long, run_id string, "
     "finished_at string"
 )
+
+RESULT_COLUMNS = [
+    "field_name", "value", "confidence", "page", "bounding_box",
+    "is_valid", "errors",
+]
 
 
 def _lineage_arrow_schema():
@@ -431,7 +443,13 @@ class CheckpointManager:
         directories of the chunks the lineage says done, with ``chunk``
         kept as a partition column usable for pruning. A chunk directory
         without a done lineage row (a crashed chunk's partial write) is
-        never read. No committed chunk raises ``FileNotFoundError``."""
+        never read. No committed chunk raises ``FileNotFoundError``.
+
+        ``results`` is not stored: it is :func:`results_of` the
+        committed docs, so it holds the same chunks as ``read("docs")``
+        and never reads a ``results/`` directory an older engine left."""
+        if name == "results":
+            return results_of(self.read("docs"))
         chunks = sorted(set(self.read_lineage(columns=["chunk"]).column("chunk").to_pylist()))
         if not chunks:
             raise FileNotFoundError(f"{self.path(name)} has no committed chunk")
@@ -441,6 +459,22 @@ class CheckpointManager:
 
     def path(self, name: str) -> str:
         return f"{self.root}/{name}"
+
+
+def results_of(docs: DataFrame) -> DataFrame:
+    """The long-format results rows of docs, one per extracted field
+    (``ExtrahierteDaten``): url, bucket, the ``RESULT_COLUMNS`` of
+    ``from_json(fields_json)``, chunk. The where() drops the
+    placeholder row explode_outer gives a document without fields."""
+    return (
+        docs.select(
+            "url", "bucket",
+            F.explode_outer(F.from_json("fields_json", FIELDS_T)).alias("f"),
+            "chunk",
+        )
+        .select("url", "bucket", *[F.col(f"f.{c}").alias(c) for c in RESULT_COLUMNS], "chunk")
+        .where(F.col("field_name").isNotNull())
+    )
 
 
 def _chunk(name: str, chunk: int) -> str:

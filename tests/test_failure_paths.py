@@ -43,6 +43,8 @@ def _write_mixed_corpus(spark, path: str) -> None:
 
 
 def test_poison_document_fails_in_isolation(spark, tmp_path):
+    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
+
     pages = str(tmp_path / "pages")
     _write_mixed_corpus(spark, pages)
     out = str(tmp_path / "out")
@@ -60,7 +62,7 @@ def test_poison_document_fails_in_isolation(spark, tmp_path):
     lineage = spark.read.parquet(f"{out}/lineage")
     assert lineage.agg(F.sum("n_failed")).collect()[0][0] == 1
     # failed docs contribute no field rows
-    results = spark.read.parquet(f"{out}/results")
+    results = CheckpointManager(spark, out).read("results")
     assert results.where(F.col("url") == "https://poison.example/doc/x").count() == 0
 
 
@@ -462,9 +464,9 @@ def test_task_retry_commits_each_document_once(spark, tmp_path):
     """The fused stage's first attempt of one task fails on local[4,2],
     which allows one retry. The run, in a fresh process since
     getOrCreate would reuse this module's session and master, must
-    still commit every document once: docs and results hold each url
-    once, the lineage counts equal the committed docs, and both lookups
-    agree."""
+    still commit every document once: the docs and the results rows
+    derived from them hold each url once, the lineage counts equal the
+    committed docs, and both lookups agree."""
     import json
     import os
     import subprocess
@@ -494,10 +496,10 @@ def test_task_retry_commits_each_document_once(spark, tmp_path):
     want = Counter()
     for d in docs:
         want[d["url"]] += len(json.loads(d["fields_json"]))
-    results = Counter(row["url"] for row in pq.read_table(f"{out}/results", columns=["url"]).to_pylist())
+    ckpt = CheckpointManager(spark, out)
+    results = Counter(row["url"] for row in ckpt.read("results").select("url").collect())
     assert results == +want
 
-    ckpt = CheckpointManager(spark, out)
     lineage = ckpt.read_lineage("extracted").to_pylist()
     per_bucket = Counter(d["bucket"] for d in docs)
     assert {r["bucket"]: r["n_docs"] for r in lineage} == dict(per_bucket)

@@ -1,8 +1,9 @@
 """Spark-shell tests: distribution must not change a single byte.
 
 * Spark fused output ≡ pure-core output per url (SURVEY.md §5.2.3)
-* the committed docs and results for the 64 golden pages equal the
-  reference-generated goldens (tools/gen_expected_extraction.py)
+* the committed docs, and the results rows derived from them, of the
+  64 golden pages equal the reference-generated goldens
+  (tools/gen_expected_extraction.py)
 * resume: a failed chunk re-runs without recomputing committed
   buckets, and the final output equals a clean run (north rule)
 * giant-document skew routing leaves results identical
@@ -26,6 +27,7 @@ from credit_ocr_backend_spark.core.document import dumps_compact  # noqa: E402
 from credit_ocr_backend_spark.operators.stages import _field_rows  # noqa: E402
 from credit_ocr_backend_spark.plans.pipeline import run_pipeline  # noqa: E402
 from credit_ocr_backend_spark.plans.session import get_spark  # noqa: E402
+from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager  # noqa: E402
 from credit_ocr_backend_spark.sources.pages import build_page, page_url, write_pages  # noqa: E402
 
 N_DOCS = 120
@@ -100,7 +102,7 @@ def test_fused_matches_reference_goldens(spark, fused_out):
         F.length("extracted_text").alias("text_len"),
     )
     _assert_matches_golden(docs, "expected_extraction_docs")
-    results = spark.read.parquet(f"{fused_out}/results")
+    results = CheckpointManager(spark, fused_out).read("results")
     _assert_matches_golden(results, "expected_extraction_results")
 
 
@@ -165,7 +167,7 @@ def test_fresh_run_does_not_inherit_earlier_lineage(spark, pages_path, tmp_path)
 def test_results_long_format(spark, pages_path, tmp_path):
     out = str(tmp_path / "long")
     run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=1)
-    results = spark.read.parquet(f"{out}/results")
+    results = CheckpointManager(spark, out).read("results")
     assert results.where(F.col("field_name").isNull()).count() == 0
     assert results.select("url").distinct().count() > 0
     # every confidence within [0,1]
@@ -430,7 +432,6 @@ def test_url_bucket_equals_spark_pmod_xxhash64(spark):
 
 def test_lookups_and_resume_bookkeeping_run_no_spark_job(spark, pages_path, tmp_path):
     from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
-    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
 
     out = str(tmp_path / "out")
     run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)
@@ -481,25 +482,23 @@ def clean_four_chunks(spark, pages_path, tmp_path_factory):
     return _docs_map(spark, out)
 
 
-@pytest.mark.parametrize("window", ["after_docs", "after_results", "before_lineage"])
+@pytest.mark.parametrize("window", ["after_docs", "before_lineage"])
 def test_crash_window_leaves_chunk_uncommitted(
     spark, pages_path, clean_four_chunks, tmp_path, monkeypatch, window
 ):
-    """A crash in run_chunk between the first write and the lineage
-    append commits nothing: resume bookkeeping and both lookups ignore
-    the chunk, and a resume recomputes exactly that chunk."""
+    """A crash in run_chunk between the docs write and the lineage
+    append commits nothing: resume bookkeeping, both lookups and the
+    results rows ignore the chunk, and a resume recomputes exactly that
+    chunk."""
     from credit_ocr_backend_spark.plans.pipeline import doc_status, doc_status_bulk
-    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager, url_bucket
+    from credit_ocr_backend_spark.sources.checkpoint import url_bucket
 
     real_write, real_append = CheckpointManager.write_chunk, CheckpointManager.append_lineage
 
     def write_chunk(self, df, name, chunk):
-        crash = chunk == CRASH_CHUNK and name == "results"
-        if crash and window == "after_docs":
-            raise RuntimeError("crash after the docs write")
         real_write(self, df, name, chunk)
-        if crash and window == "after_results":
-            raise RuntimeError("crash after the results write")
+        if chunk == CRASH_CHUNK and window == "after_docs":
+            raise RuntimeError("crash after the docs write")
 
     def append_lineage(self, stage, chunk, *args):
         if chunk == CRASH_CHUNK and window == "before_lineage":
@@ -513,9 +512,8 @@ def test_crash_window_leaves_chunk_uncommitted(
         run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4)
     monkeypatch.undo()
 
-    name = f"chunk={CRASH_CHUNK:04d}"
-    assert list((tmp_path / "out" / "docs" / name).glob("*.parquet"))
-    assert (tmp_path / "out" / "results" / name).is_dir() == (window != "after_docs")
+    assert list((tmp_path / "out" / "docs" / f"chunk={CRASH_CHUNK:04d}").glob("*.parquet"))
+    assert not (tmp_path / "out" / "results").exists()
     urls = [build_page(k)["url"] for k in range(N_DOCS)]
     crashed = [u for u in urls if url_bucket(u, 8) >= 6]
     assert crashed
@@ -526,11 +524,46 @@ def test_crash_window_leaves_chunk_uncommitted(
     assert all(doc_status(spark, out, u) is None for u in crashed)
     got = {r["url"] for r in doc_status_bulk(spark, out, urls).collect()}
     assert got == set(urls) - set(crashed)
+    with_fields = {r["url"] for r in ckpt.read("results").select("url").collect()}
+    assert with_fields and not with_fields & set(crashed)
 
     res = run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=4, resume=True)
     assert (res.chunks_skipped, res.chunks_run) == (3, 1)
     assert set(res.buckets_done) == {6, 7}
     assert _docs_map(spark, out) == clean_four_chunks
+    resumed = {r["url"] for r in ckpt.read("results").select("url").collect()}
+    assert resumed & set(crashed)
+    assert with_fields == resumed - set(crashed)
+
+
+def _result_rows(spark, out_root):
+    """The results rows of a run, chunk left out, as sorted reprs."""
+    results = CheckpointManager(spark, out_root).read("results").drop("chunk")
+    return sorted(repr(r) for r in results.collect())
+
+
+def test_results_left_by_older_engine_are_never_read(spark, pages_path, fused_out, tmp_path):
+    """Engines before the derived results read wrote a results/chunk=NNNN
+    table. A fresh run's reset removes one; a resume never reads a file
+    of one, even an unreadable one, and returns the results rows of a
+    clean run."""
+    out = tmp_path / "out"
+
+    def plant_stale_results():
+        for chunk in (0, 3):  # a chunk the resume skips, one it computes
+            stale = out / "results" / f"chunk={chunk:04d}"
+            stale.mkdir(parents=True)
+            (stale / "part-00000-stale.parquet").write_bytes(b"not a parquet file")
+
+    plant_stale_results()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, pages_path, str(out), n_buckets=8, n_chunks=4, fail_buckets={4})
+    assert not (out / "results").exists()
+
+    plant_stale_results()
+    res = run_pipeline(spark, pages_path, str(out), n_buckets=8, n_chunks=4, resume=True)
+    assert (res.chunks_skipped, res.chunks_run) == (2, 2)
+    assert _result_rows(spark, str(out)) == _result_rows(spark, fused_out)
 
 
 @pytest.mark.parametrize("est_rows", [100, None])  # waves 1, waves 4 at par 4
@@ -591,8 +624,6 @@ def test_lineage_counts_equal_committed_docs(spark, pages_path, tmp_path):
     """Every chunk's per-bucket lineage n_docs, n_failed and cpu_ms
     equal an aggregate of its committed docs, exactly: the sums are
     taken over the part files in path order, row after row."""
-    from credit_ocr_backend_spark.sources.checkpoint import CheckpointManager
-
     out = tmp_path / "out"
     res = run_pipeline(spark, pages_path, str(out), n_buckets=8, n_chunks=4)
     assert res.chunks_run == 4 and res.n_docs == N_DOCS
@@ -619,11 +650,11 @@ def _job_descriptions(sc) -> dict:
     return out
 
 
-def test_chunk_runs_four_named_jobs(spark, pages_path, tmp_path):
-    """A computed chunk submits 4 Spark jobs (exchange, cache build,
-    docs write, results write), each named after its chunk and phase;
-    a resume with nothing left submits none. The caller's job
-    description is restored afterwards."""
+def test_chunk_runs_two_named_jobs(spark, pages_path, tmp_path):
+    """A computed chunk submits 2 Spark jobs, the exchange and the heavy
+    stage feeding the docs write, both under the one name of the
+    chunk's write; a resume with nothing left submits none. The
+    caller's job description is restored afterwards."""
     sc = spark.sparkContext
     out = str(tmp_path / "out")
     before = set(_job_descriptions(sc))
@@ -635,15 +666,47 @@ def test_chunk_runs_four_named_jobs(spark, pages_path, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     names = {d for job, d in _job_descriptions(sc).items() if job not in before}
     assert sorted(names) == [
-        "chunk 0 · heavy stage + docs write", "chunk 0 · results write",
-        "chunk 1 · heavy stage + docs write", "chunk 1 · results write",
+        "chunk 0 · heavy stage + docs write", "chunk 1 · heavy stage + docs write",
     ]
 
     _, jobs = _spark_jobs(
         spark, lambda: run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2)
     )
-    assert jobs == 8
+    assert jobs == 4
     _, jobs = _spark_jobs(
         spark, lambda: run_pipeline(spark, pages_path, out, n_buckets=8, n_chunks=2, resume=True)
     )
     assert jobs == 0
+
+
+def test_docs_files_keep_giants_apart(spark, tmp_path):
+    """The docs write runs at the exchange's width: at parallelism 4 no
+    docs part file holds both a giant and a bulk document, and a chunk
+    holds at most n_bulk + n_giant part files."""
+    from credit_ocr_backend_spark.plans.pipeline import GIANT_HTML_BYTES, _effective_waves
+    from credit_ocr_backend_spark.sources.pages import GIANT_MOD
+
+    keys = list(range(80)) + [17 + GIANT_MOD * i for i in range(1, 6)]
+    pages = [build_page(k) for k in keys]
+    giants = {p["url"] for p in pages if len(p["html"]) > GIANT_HTML_BYTES}
+    assert len(giants) == 6
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"]) for p in pages],
+        "url string, warc_ts timestamp, html binary",
+    ).withColumn("warc_date", F.to_date("warc_ts")).write.partitionBy("warc_date").parquet(path)
+
+    par, n_buckets, n_chunks = 4, 8, 2
+    out = tmp_path / "out"
+    run_pipeline(spark, path, str(out), n_buckets=n_buckets, n_chunks=n_chunks, parallelism=par)
+    est_rows = len(keys) * (n_buckets // n_chunks) // n_buckets  # run_pipeline's estimate
+    max_files = par * _effective_waves(par, est_rows) + max(par // 2, 1)
+    committed = []
+    for chunk in range(n_chunks):
+        files = sorted((out / "docs" / f"chunk={chunk:04d}").glob("*.parquet"))
+        assert 0 < len(files) <= max_files, chunk
+        for part in files:
+            urls = set(pq.read_table(part, columns=["url"]).column("url").to_pylist())
+            assert not (urls & giants and urls - giants), (part.name, urls & giants)
+            committed.extend(urls)
+    assert sorted(committed) == sorted(p["url"] for p in pages)

@@ -3,8 +3,8 @@ engine's output is checked against.
 
 tests/test_spark_pipeline.py runs `run_pipeline` over a generated
 corpus whose pages 0..63 are the 64 pages below, and asserts that the
-committed docs and results of those pages equal these tables row for
-row. They are produced by the REFERENCE implementation's own pure
+committed docs of those pages, and the results rows derived from them,
+equal these tables row for row. They are produced by the REFERENCE implementation's own pure
 functions (via the same import-shim harness as
 tools/gen_reference_goldens.py), so a match is reference parity, not
 self-agreement:
