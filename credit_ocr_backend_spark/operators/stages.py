@@ -344,8 +344,8 @@ def make_fused_stage(doc_config: DocumentTypeConfig):
             for url, bucket, html in zip(pdf["url"], pdf["bucket"], pdf["html"]):
                 t0 = time.perf_counter()
                 if html is None:
-                    # NULL html reaches the stage (routed to bulk by
-                    # _defuse_skew) and is RECORDED as failed — never
+                    # NULL html reaches the stage (_defuse_skew hashes
+                    # every row on url) and is RECORDED as failed — never
                     # silently dropped from the per-bucket accounting.
                     rows.append(
                         _extracted_row(

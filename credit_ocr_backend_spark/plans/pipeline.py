@@ -1,15 +1,15 @@
 """The end-to-end extraction pipeline (the engine's flagship job).
 
-Logical plan of one chunk, all declarative until the Arrow-batched
-stage:
+Logical plan, all declarative until the Arrow-batched stage. The
+first three steps are planned once per run, the rest once per chunk:
 
     pages (parquet/Iceberg, read with the declared PAGES_SCHEMA)
       → filter warc_date / warc_ts range        # partition pruning
       → bucket = pmod(xxhash64(url), B)         # stable chunk/lineage key
       → keep buckets of this chunk (resume skips committed chunks)
-      → one exchange: bulk rows by url hash,    # size-skew defuse
-        giants to partitions of their own
-      → fused Arrow UDF stage                   # core semantics
+      → one exchange: pmod(hash(url), par·waves) # skew defuse
+      → fused Arrow UDF stage, batches ≤ 4096   # core semantics
+        rows and ≤ 128 MiB
       → docs → chunk=NNNN, at the exchange's    # idempotent per-chunk
         width                                   # overwrite
       → lineage counted from the committed docs, appended (commit point)
@@ -48,11 +48,10 @@ Two partitioning decisions worth reading twice (measured, not guessed):
   and per-chunk atomic overwrite.
 
 The docs write is not coalesced, so a chunk holds at most one part
-file per exchange partition, ``par·waves + max(par//2, 1)`` at
-parallelism ``par``, and a giant's file holds no bulk document.
+file per exchange partition, ``par·waves`` at parallelism ``par``.
 ``_effective_waves`` keeps ``waves ≤ 16``, and above 1 only while each
-bulk task keeps at least ``_MIN_DOCS_PER_TASK`` docs: at corpus scale
-(``par`` 256, 16 waves) a chunk holds at most 4 224 docs files.
+task keeps at least ``_MIN_DOCS_PER_TASK`` docs: at corpus scale
+(``par`` 256, 16 waves) a chunk holds at most 4 096 docs files.
 
 Scale notes (100 TB / 10^12 rows):
 * the html column is only read by the fused stage, whose output
@@ -61,9 +60,11 @@ Scale notes (100 TB / 10^12 rows):
 * a failed chunk re-runs alone; on Iceberg the pages table would be
   bucket(url, B)-partitioned so each chunk's input scan prunes at the
   file level instead of re-filtering the full table;
-* giant documents (heavy right tail of html size) go to partitions of
-  their own, so a giant never shares a task with bulk documents
-  (``_defuse_skew``).
+* giant documents (heavy right tail of html size) are hashed on url
+  like every page, so a skewed corpus's giants spread over all
+  ``par·waves`` tasks of the one wave instead of queueing behind it
+  (``_defuse_skew``); the Arrow byte cap in ``ENGINE_CONF`` bounds the
+  memory of a batch that holds several of them.
 """
 
 from __future__ import annotations
@@ -79,14 +80,13 @@ from pyspark.sql import functions as F
 
 from credit_ocr_backend_spark.core.config import DocumentTypeConfig, default_config
 from credit_ocr_backend_spark.operators.stages import EXTRACTED_SCHEMA, make_fused_stage
+from credit_ocr_backend_spark.plans.session import GIANT_HTML_BYTES  # noqa: F401 (extractbench)
 from credit_ocr_backend_spark.sources.checkpoint import (
     CheckpointManager,
     new_run_id,
     url_bucket,
     with_bucket,
 )
-
-GIANT_HTML_BYTES = 32 * 1024  # size-skew routing threshold
 
 # The columns the engine reads from the pages table. Declaring them
 # spares every run Spark's schema-inference job; a declared read turns
@@ -149,13 +149,12 @@ def _checked_ts(spark: SparkSession, bound: str, name: str) -> str:
 def _input_slice(
     pages: DataFrame,
     n_buckets: int,
-    bucket_lo: int,
-    bucket_hi: int,
     ts_min: Optional[str],
     ts_max: Optional[str],
 ) -> DataFrame:
-    """Projection + pruning + bucketing for one chunk. Only url/html
-    survive — everything else is pruned before the heavy stage."""
+    """Projection + pruning + bucketing, planned once per run; each
+    chunk keeps its buckets of it. Only url/html/bucket survive —
+    everything else is pruned before the heavy stage."""
     df = pages
     # Two-level time filter: a day-granular predicate on the physical
     # partition column warc_date (prunes whole day-directories at plan
@@ -172,14 +171,11 @@ def _input_slice(
     if ts_max is not None:
         df = df.where(F.col("warc_date") <= F.lit(ts_max[:10]))
         df = df.where(F.col("warc_ts") < F.to_timestamp(F.lit(ts_max)))
-    df = with_bucket(df.select("url", "html"), n_buckets)
-    return df.where(
-        (F.col("bucket") >= bucket_lo) & (F.col("bucket") < bucket_hi)
-    ).select("url", "html", "bucket")
+    return with_bucket(df.select("url", "html"), n_buckets)
 
 
 def _bulk_waves(parallelism: int) -> int:
-    """Task waves for the bulk branch, scaled with slot count: the
+    """Task waves of the chunk exchange, scaled with slot count: the
     straggler tail is the MAX of N concurrent task durations, which
     grows with N — more slots need finer waves to smooth it, while at
     low parallelism extra waves are pure scheduling overhead. Measured
@@ -216,31 +212,20 @@ def _effective_waves(parallelism: int, est_rows: Optional[int]) -> int:
 def _defuse_skew(
     df: DataFrame, parallelism: int, est_rows: Optional[int] = None
 ) -> DataFrame:
-    """One exchange that balances bulk rows and isolates giants
-    (SURVEY.md §7.3 giant-doc skew): bulk rows go to partitions
-    ``[0, n_bulk)``, ``n_bulk = parallelism × waves``, rows whose html
-    exceeds ``GIANT_HTML_BYTES`` to ``[n_bulk, n_bulk + n_giant)``,
-    ``n_giant = max(parallelism // 2, 1)``, each by url hash. A giant
-    never shares a task with bulk rows, and a retried task gets the
-    same rows. Two giants can share a task (more giants than
-    ``n_giant``, or by chance); a round-robin repartition does not
-    prevent that either, as Spark starts each input partition's
-    round-robin at ``XORShiftRandom(partitionId)``.
+    """One exchange that balances the chunk's rows over
+    ``parallelism × waves`` partitions, each row to
+    ``pmod(hash(url), n)`` (SURVEY.md §7.3 giant-doc skew): one wave of
+    tasks, a retried task gets the same rows, and a NULL html row
+    reaches the stage, which records it as failed. Giants are hashed
+    like every page, so a skewed corpus's giants spread over all ``n``
+    tasks; the Arrow byte cap (``plans/session.py``) bounds a batch
+    that holds several of them.
 
     The url hash is Murmur3 (``hash``), not the bucket's ``xxhash64``:
-    with that, a partition would follow from the bucket whenever
-    ``n_bulk`` divides the bucket count, and a chunk of fewer buckets
-    than ``n_bulk`` would leave tasks empty."""
-    n_bulk = parallelism * _effective_waves(parallelism, est_rows)
-    n_giant = max(parallelism // 2, 1)
-    # coalesce(length, 0): a NULL html row goes to a bulk partition and
-    # reaches the stage, which records it as failed.
-    size = F.coalesce(F.length("html"), F.lit(0))
-    url_hash = F.hash("url")
-    target = F.when(
-        size > GIANT_HTML_BYTES, F.lit(n_bulk) + F.pmod(url_hash, F.lit(n_giant))
-    ).otherwise(F.pmod(url_hash, F.lit(n_bulk)))
-    return df.repartitionById(n_bulk + n_giant, target)
+    with that, a partition would follow from the bucket whenever ``n``
+    divides the bucket count, and a chunk of fewer buckets than ``n``
+    would leave tasks empty."""
+    return df.repartition(parallelism * _effective_waves(parallelism, est_rows), "url")
 
 
 def _check_columns(where: str, types: Dict[str, str], partitioned: bool) -> None:
@@ -421,29 +406,31 @@ def run_pipeline(
     ]
     todo = [(c, lo, hi) for c, lo, hi in bounds if c not in done_chunks]
     result.chunks_skipped = len(bounds) - len(todo)
+    # The chunks share one plan of the projected, filtered and bucketed
+    # pages; each adds its bucket range, the exchange and the stage.
     pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path) if todo else None
+    sliced = _input_slice(pages, n_buckets, ts_min, ts_max) if todo else None
 
     def run_chunk(chunk_id: int, lo: int, hi: int) -> List[dict]:
         """Process + commit one chunk; returns its per-bucket lineage
         rows. The write is chunk-private and the lineage fragment is
         uuid-named, so a re-run of the chunk overwrites only its own
         output."""
-        chunk_df = _defuse_skew(
-            _input_slice(pages, n_buckets, lo, hi, ts_min, ts_max),
-            par,
-            est_rows=est_total_rows * (hi - lo) // n_buckets,
-        )
-
         if fail_buckets and (set(range(lo, hi)) & set(fail_buckets)):
             raise RuntimeError(
                 f"injected failure for chunk {chunk_id} (buckets {lo}..{hi - 1})"
             )
+        chunk_df = _defuse_skew(
+            sliced.where((F.col("bucket") >= lo) & (F.col("bucket") < hi)),
+            par,
+            est_rows=est_total_rows * (hi - lo) // n_buckets,
+        )
 
         t0 = time.perf_counter()
         # The docs are the only write: the results rows are derived from
         # them on read (CheckpointManager.read). No coalesce: it is a
         # narrow dependency, so it would merge the heavy stage's own
-        # tasks and put giants into bulk tasks. The write runs at the
+        # tasks into fewer, longer ones. The write runs at the
         # exchange's width, one file per non-empty partition.
         with _job_description(spark, f"chunk {chunk_id} · heavy stage + docs write"):
             ckpt.write_chunk(

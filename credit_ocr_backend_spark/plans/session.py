@@ -10,10 +10,12 @@ writes and commits exactly as a local one:
 * Arrow max batch 4096 rows — re-measured in round 6 after the
   per-document core cost halved (the per-batch worker flush overhead
   became relatively bigger): 200k-doc pipeline 23.8 s at 1024 → 20.3 s
-  at 4096. The giant-document skew split keeps the memory bound: bulk
-  docs ≤32 KB → ≤128 MB/batch worst-case (realistic ~12 MB at ~3 KB
-  avg html), and giant partitions hold ~a dozen rows each, far below
-  any batch cap (SURVEY.md §7.3),
+  at 4096 — and at most ``ARROW_BATCH_ROWS × GIANT_HTML_BYTES`` = 128
+  MiB, the worst case of 4096 pages of at most 32 KB. A batch of
+  ~3 KB-average pages (~12 MB) is bounded by rows; Spark closes a batch
+  of giant pages once its bytes pass the cap, so no batch the fused
+  stage receives exceeds the cap by more than one page, however many
+  giants a url-hash partition holds (SURVEY.md §7.3),
 * zstd parquet for the pages and the docs,
 * Hadoop's v2 file committer. A ``spark.hadoop.*`` key reaches the
   Hadoop conf that writes use only when it is set before the
@@ -32,11 +34,13 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 4096
+GIANT_HTML_BYTES = 32 * 1024  # pages above this are the skew tail's giants
 
 ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_BATCH_ROWS * GIANT_HTML_BYTES),
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.session.timeZone": "UTC",

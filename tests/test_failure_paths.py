@@ -209,7 +209,7 @@ def test_unopenable_arrow_root_fails_at_construction(spark, tmp_path, monkeypatc
 def test_null_html_recorded_as_failed(spark, tmp_path):
     """A NULL html row must reach the stage and land as status=failed in
     docs + lineage — not vanish from the accounting (ADVICE round 1:
-    both length(html) skew predicates are NULL for it)."""
+    any length(html) predicate is NULL for it)."""
     pages = str(tmp_path / "pages4")
     rows = []
     for k in range(4):

@@ -6,7 +6,8 @@
   (tools/gen_expected_extraction.py)
 * resume: a failed chunk re-runs without recomputing committed
   buckets, and the final output equals a clean run (north rule)
-* giant-document skew routing leaves results identical
+* the chunk exchange hashes every page, giants too, on url, and the
+  Arrow byte cap bounds the batches the stage receives
 """
 
 from __future__ import annotations
@@ -209,7 +210,7 @@ def test_input_slice_prunes_partitions_and_columns(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     write_pages(spark, pages_dir, n_docs=100, partitions=4)
     pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_dir)  # run_pipeline's read
-    df = _input_slice(pages, 16, 0, 16, "2024-06-01", "2024-07-01")
+    df = _input_slice(pages, 16, "2024-06-01", "2024-07-01")
     plan = df._jdf.queryExecution().executedPlan().toString()
 
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -566,58 +567,106 @@ def test_results_left_by_older_engine_are_never_read(spark, pages_path, fused_ou
     assert _result_rows(spark, str(out)) == _result_rows(spark, fused_out)
 
 
-@pytest.mark.parametrize("est_rows", [100, None])  # waves 1, waves 4 at par 4
-def test_defuse_skew_isolates_giants_in_one_exchange(spark, est_rows):
-    """After AQE, the exchange has n_bulk + n_giant partitions; no
-    partition holds both a giant and a bulk row; a NULL html lands in a
-    bulk partition; and bulk rows that all share one bucket still reach
-    every bulk partition (the url hash is not the bucket's)."""
-    from pyspark import TaskContext
-
-    from credit_ocr_backend_spark.plans.pipeline import (
-        GIANT_HTML_BYTES,
-        _defuse_skew,
-        _effective_waves,
-    )
+def _skew_rows(n_bulk_urls=200, n_giants=5, giant_bytes=None):
+    """Rows (url, html, bucket) for the exchange tests: bulk urls that
+    all share bucket 5 of 64, ``n_giants`` giant pages, and one NULL
+    html row."""
+    from credit_ocr_backend_spark.plans.pipeline import GIANT_HTML_BYTES
     from credit_ocr_backend_spark.sources.checkpoint import url_bucket
 
-    par = 4
-    n_bulk, n_giant = par * _effective_waves(par, est_rows), par // 2
-    assert (n_bulk > par) == (est_rows is None)
+    giant = b"g" * (giant_bytes or GIANT_HTML_BYTES + 1)
     bulk = [u for u in (f"https://skew.example/{i}" for i in range(20000))
-            if url_bucket(u, 64) == 5][:200]
+            if url_bucket(u, 64) == 5][:n_bulk_urls]
     rows = [(u, bytearray(b"<p>x</p>"), 5) for u in bulk]
-    rows += [(f"https://giant.example/{i}", bytearray(b"g" * (GIANT_HTML_BYTES + 1)), 1)
-             for i in range(5)]
+    rows += [(f"https://giant.example/{i}", bytearray(giant), 1) for i in range(n_giants)]
     rows.append(("https://null.example/doc", None, 2))
+    return bulk, rows
+
+
+@pytest.mark.parametrize("est_rows", [100, None])  # waves 1, waves 4 at par 4
+def test_defuse_skew_hashes_every_row_on_url(spark, est_rows):
+    """After AQE, the exchange has exactly par·waves partitions and each
+    row, giant or not, lands in partition pmod(hash(url), par·waves);
+    urls that all share one bucket still reach every partition (the url
+    hash is not the bucket's); and a NULL html row reaches the stage,
+    which records it as failed."""
+    from pyspark import TaskContext
+
+    from credit_ocr_backend_spark.operators.stages import EXTRACTED_SCHEMA, make_fused_stage
+    from credit_ocr_backend_spark.plans.pipeline import _defuse_skew, _effective_waves
+
+    par = 4
+    n = par * _effective_waves(par, est_rows)
+    assert (n > par) == (est_rows is None)
+    bulk, rows = _skew_rows()
     df = spark.createDataFrame(rows, "url string, html binary, bucket int").repartition(3)
 
     def probe(batches):
         import pandas as pd
 
-        giants = n = nulls = 0
-        for pdf in batches:
-            for html in pdf["html"]:
-                n += 1
-                nulls += html is None
-                giants += html is not None and len(html) > GIANT_HTML_BYTES
-        yield pd.DataFrame({"pid": [TaskContext.get().partitionId()], "giants": [giants],
-                            "bulk": [n - giants - nulls], "nulls": [nulls]})
+        pid = TaskContext.get().partitionId()
+        urls = [u for pdf in batches for u in pdf["url"]]
+        yield pd.DataFrame({"pid": [pid] * (len(urls) + 1), "url": [None] + urls})
 
-    got = {
-        r["pid"]: r
-        for r in _defuse_skew(df, par, est_rows)
-        .mapInPandas(probe, "pid int, giants int, bulk int, nulls int")
-        .collect()
+    got = _defuse_skew(df, par, est_rows).mapInPandas(probe, "pid int, url string").collect()
+    assert sorted({r["pid"] for r in got}) == list(range(n))
+    placed = {r["url"]: r["pid"] for r in got if r["url"] is not None}
+    want = {
+        r["url"]: r["pid"]
+        for r in df.select("url", F.pmod(F.hash("url"), F.lit(n)).alias("pid")).collect()
     }
-    assert sorted(got) == list(range(n_bulk + n_giant))
-    assert sum(r["giants"] for r in got.values()) == 5
-    assert sum(r["bulk"] for r in got.values()) == len(bulk)
-    for pid, r in got.items():
-        assert not (r["giants"] and (r["bulk"] or r["nulls"])), r
-        assert (r["giants"] > 0) <= (pid >= n_bulk), r
-        assert (r["bulk"] > 0) == (pid < n_bulk), r
-    assert [pid for pid, r in got.items() if r["nulls"]][0] < n_bulk
+    assert placed == want and len(placed) == len(rows)
+    assert {placed[u] for u in bulk} == set(range(n))
+
+    stage = make_fused_stage(default_config())
+    out = _defuse_skew(df, par, est_rows).mapInPandas(stage, schema=EXTRACTED_SCHEMA)
+    null_row = out.where(F.col("url") == "https://null.example/doc").collect()
+    assert len(null_row) == 1 and null_row[0]["status"] == "failed", null_row
+
+
+def test_sessions_cap_arrow_batch_bytes(spark):
+    """A get_spark session caps Arrow batches at ARROW_BATCH_ROWS pages
+    of GIANT_HTML_BYTES (jobs/extract_job.py's session: see
+    tests/test_submit_packaging.py)."""
+    from credit_ocr_backend_spark.plans.session import ARROW_BATCH_ROWS, GIANT_HTML_BYTES
+
+    cap = spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
+    assert cap == str(ARROW_BATCH_ROWS * GIANT_HTML_BYTES) == str(128 << 20)
+
+
+def test_arrow_byte_cap_bounds_batches_of_giants(spark):
+    """Giants hashed through the real exchange into mapInPandas arrive in
+    batches of at most the byte cap plus one document of html, although
+    a partition holds several times the cap. Fails if Spark ignores the
+    cap key."""
+    from pyspark import TaskContext
+
+    from credit_ocr_backend_spark.plans.pipeline import _defuse_skew
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    doc, cap = 40_000, 100_000
+    _, rows = _skew_rows(n_bulk_urls=40, n_giants=48, giant_bytes=doc)
+    df = spark.createDataFrame(rows, "url string, html binary, bucket int").repartition(3)
+
+    def probe(batches):
+        import pandas as pd
+
+        pid = TaskContext.get().partitionId()
+        sizes = [sum(len(h) for h in pdf["html"] if h is not None) for pdf in batches]
+        yield pd.DataFrame({"pid": [pid] * len(sizes), "html_bytes": sizes})
+
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(cap))
+    try:
+        got = _defuse_skew(df, 4, 100).mapInPandas(probe, "pid int, html_bytes long").collect()
+    finally:
+        spark.conf.set(key, saved)
+    per_partition = Counter()
+    for r in got:
+        per_partition[r["pid"]] += r["html_bytes"]
+        assert r["html_bytes"] <= cap + doc, r
+    assert sum(per_partition.values()) == 48 * doc + 40 * len(b"<p>x</p>")
+    assert max(per_partition.values()) > 3 * (cap + doc), per_partition
 
 
 def test_lineage_counts_equal_committed_docs(spark, pages_path, tmp_path):
@@ -679,17 +728,16 @@ def test_chunk_runs_two_named_jobs(spark, pages_path, tmp_path):
     assert jobs == 0
 
 
-def test_docs_files_keep_giants_apart(spark, tmp_path):
-    """The docs write runs at the exchange's width: at parallelism 4 no
-    docs part file holds both a giant and a bulk document, and a chunk
-    holds at most n_bulk + n_giant part files."""
+def test_docs_files_one_per_exchange_partition(spark, tmp_path):
+    """The docs write runs at the exchange's width: with 6 giant pages
+    among 80 bulk ones at parallelism 4 a chunk holds at most par·waves
+    part files, and every page is committed exactly once."""
     from credit_ocr_backend_spark.plans.pipeline import GIANT_HTML_BYTES, _effective_waves
     from credit_ocr_backend_spark.sources.pages import GIANT_MOD
 
     keys = list(range(80)) + [17 + GIANT_MOD * i for i in range(1, 6)]
     pages = [build_page(k) for k in keys]
-    giants = {p["url"] for p in pages if len(p["html"]) > GIANT_HTML_BYTES}
-    assert len(giants) == 6
+    assert sum(len(p["html"]) > GIANT_HTML_BYTES for p in pages) == 6
     path = str(tmp_path / "pages")
     spark.createDataFrame(
         [(p["url"], p["warc_ts"], p["html"]) for p in pages],
@@ -700,13 +748,11 @@ def test_docs_files_keep_giants_apart(spark, tmp_path):
     out = tmp_path / "out"
     run_pipeline(spark, path, str(out), n_buckets=n_buckets, n_chunks=n_chunks, parallelism=par)
     est_rows = len(keys) * (n_buckets // n_chunks) // n_buckets  # run_pipeline's estimate
-    max_files = par * _effective_waves(par, est_rows) + max(par // 2, 1)
-    committed = []
+    max_files = par * _effective_waves(par, est_rows)
+    committed = Counter()
     for chunk in range(n_chunks):
         files = sorted((out / "docs" / f"chunk={chunk:04d}").glob("*.parquet"))
         assert 0 < len(files) <= max_files, chunk
         for part in files:
-            urls = set(pq.read_table(part, columns=["url"]).column("url").to_pylist())
-            assert not (urls & giants and urls - giants), (part.name, urls & giants)
-            committed.extend(urls)
-    assert sorted(committed) == sorted(p["url"] for p in pages)
+            committed.update(pq.read_table(part, columns=["url"]).column("url").to_pylist())
+    assert committed == Counter(p["url"] for p in pages)

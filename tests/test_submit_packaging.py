@@ -71,7 +71,7 @@ def test_spark_submit_py_files_no_checkout(tmp_path):
         assert pq.read_metadata(part).row_group(0).column(0).compression == "ZSTD"
 
 
-_COMMITTER_PROBE = """
+_SESSION_PROBE = """
 import json
 from extract_job import build_session
 spark = build_session()
@@ -79,19 +79,33 @@ key = "mapreduce.fileoutputcommitter.algorithm.version"
 print(json.dumps({
     "context": spark._jsc.hadoopConfiguration().get(key),
     "session": spark._jsparkSession.sessionState().newHadoopConf().get(key),
+    "arrow_max_bytes": spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch"),
 }))
 spark.stop()
 """
 
 
-def test_spark_submit_session_uses_v2_file_committer(tmp_path):
+@pytest.fixture(scope="module")
+def job_session(tmp_path_factory):
+    """The conf a spark-submitted ``build_session`` session reads."""
+    tmp = str(tmp_path_factory.mktemp("session_probe"))
+    probe = os.path.join(tmp, "session_probe.py")
+    with open(probe, "w") as f:
+        f.write(_SESSION_PROBE)
+    return _submit(tmp, probe)
+
+
+def test_spark_submit_session_uses_v2_file_committer(job_session):
     """The job's session carries the engine's ``spark.hadoop.*`` conf
     into the Hadoop conf its writes use: Hadoop's v2 file committer, as
     a get_spark session has. A key set with ``spark.conf.set`` after the
     session started would read Hadoop's default, 1."""
-    tmp = str(tmp_path)
-    probe = os.path.join(tmp, "committer_probe.py")
-    with open(probe, "w") as f:
-        f.write(_COMMITTER_PROBE)
-    res = _submit(tmp, probe)
-    assert res == {"context": "2", "session": "2"}
+    assert (job_session["context"], job_session["session"]) == ("2", "2")
+
+
+def test_spark_submit_session_caps_arrow_batch_bytes(job_session):
+    """The job's session caps Arrow batches at ARROW_BATCH_ROWS pages of
+    GIANT_HTML_BYTES, as a get_spark session does."""
+    from credit_ocr_backend_spark.plans.session import ARROW_BATCH_ROWS, GIANT_HTML_BYTES
+
+    assert job_session["arrow_max_bytes"] == str(ARROW_BATCH_ROWS * GIANT_HTML_BYTES)
